@@ -34,7 +34,7 @@ def log(msg: str) -> None:
     print(f"[perfbench] {msg}", file=sys.stderr, flush=True)
 
 
-def hygiene_env(run_dir: str, nproc: int) -> None:
+def hygiene_env(run_dir: str) -> None:
     """Environment for the JVM and the Python workers it forks: the
     package on their path, every scratch file inside the checkout."""
     tmp = os.path.join(run_dir, "tmp")
@@ -45,7 +45,6 @@ def hygiene_env(run_dir: str, nproc: int) -> None:
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEMORY
-    os.environ["SPARK_GRAFT_CPUS"] = str(nproc)
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--conf spark.ui.showConsoleProgress=false "
@@ -104,7 +103,7 @@ def main() -> int:
         ap.error(f"unknown workload {args.workload!r}; one of {sorted(workloads.WORKLOADS)}")
     nproc = len(os.sched_getaffinity(0))
     run_dir = os.path.join(WORK, f"{args.workload}-s{args.seed}-p{os.getpid()}")
-    hygiene_env(run_dir, nproc)
+    hygiene_env(run_dir)
     sampler = RssSampler()
     sampler.start()
 

@@ -98,6 +98,32 @@ def point_inputs(seed: int, n_points: int, n_queries: int, hot: bool) -> dict:
     return {"points": pts, "queries": qs}
 
 
+def region_requests(seed: int, n: int) -> list[dict]:
+    """n seeded lookup requests, alternating caps and regular loops: centres
+    uniform on the sphere, radius 0.5-3 degrees, loops of 8-24 vertices."""
+    rng = np.random.default_rng([seed, 3])
+    centers = uniform_points(rng, n)
+    lat = np.degrees(np.arcsin(centers[:, 2]))
+    lng = np.degrees(np.arctan2(centers[:, 1], centers[:, 0]))
+    radius = rng.uniform(0.5, 3.0, n)
+    vertices = rng.integers(8, 25, n)
+    return [
+        {"kind": ("cap", "loop")[i % 2], "lat": float(lat[i]), "lng": float(lng[i]),
+         "radius_deg": float(radius[i]), "vertices": int(vertices[i])}
+        for i in range(n)
+    ]
+
+
+def request_region(req: dict):
+    """The Cap or Loop a lookup request asks for."""
+    from s2geometry_spark.kernels.regions import Cap, Loop
+
+    radius = np.radians(req["radius_deg"])
+    if req["kind"] == "cap":
+        return Cap.from_latlng_degrees(req["lat"], req["lng"], radius)
+    return Loop.make_regular(req["lat"], req["lng"], radius, req["vertices"])
+
+
 def image_window(seed: int, n: int) -> tuple[int, int]:
     """Seeded window [start, start + n) of image row indices."""
     rng = np.random.default_rng([seed, 2])
@@ -126,6 +152,18 @@ def write_points(path: str, xyz: np.ndarray, id_col: str, prefix: str, n_files: 
             f"{prefix}y": xyz[:, 1],
             f"{prefix}z": xyz[:, 2],
         },
+        n_files,
+    )
+
+
+def write_cell_sorted(path: str, xyz: np.ndarray, cells: np.ndarray, n_files: int):
+    """Points (pid = row of xyz) with their leaf cell column, sorted by
+    cell, so each file holds one contiguous cell range."""
+    order = np.argsort(cells, kind="stable")
+    write_table(
+        path,
+        {"pid": order.astype(np.int64), "x": xyz[order, 0], "y": xyz[order, 1],
+         "z": xyz[order, 2], "cell": cells[order]},
         n_files,
     )
 

@@ -55,6 +55,27 @@ def pip_pairs(xyz: np.ndarray, regions: dict) -> set[tuple[int, str]]:
     return pairs
 
 
+def region_ids(xyz: np.ndarray, region) -> np.ndarray:
+    """Sorted ids of the points a Cap (chord² test in the engine's pinned
+    association order) or a Loop (parity kernel) contains, over all
+    points."""
+    center = getattr(region, "center", None)
+    if center is None:
+        inside = predicates.polygon_contains_points(
+            [region.vertices], [region.origin_inside], xyz
+        )
+    else:
+        d = xyz - center[None, :]
+        inside = (d[:, 0] * d[:, 0] + d[:, 1] * d[:, 1]) + d[:, 2] * d[:, 2] <= region.radius2
+    return np.nonzero(inside)[0]
+
+
+def check_ids(got: list[int], want: np.ndarray) -> int:
+    """Missing, extra and duplicate ids."""
+    got_set = set(got)
+    return len(got_set ^ set(want.tolist())) + (len(got) - len(got_set))
+
+
 def check_pairs(got: pd.DataFrame, want: set[tuple[int, str]]) -> int:
     got_set = set(zip(got["pid"].tolist(), got["poly_id"].tolist()))
     # duplicates in the output are wrong rows too

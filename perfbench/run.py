@@ -7,7 +7,7 @@ writes the seeded inputs under .perfbench_work/, warms up with one pass,
 then runs passes back to back (one client, closed loop) until --seconds
 have elapsed, checking every pass's output against a NumPy reference.
 The last stdout line is the JSON result; progress goes to stderr.  With
---trace 1 every other pass is traced and the per-layer metrics are
+--trace 1 half the passes are traced and the per-layer metrics are
 reported instead of the end-to-end ones; the spans are written to
 .perfbench_work/traces/.
 """
@@ -140,20 +140,24 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
     wl.prepare()
     prepare_s = time.perf_counter() - t
     wl.reference()
+    wrong = 0
     t = time.perf_counter()
-    out = wl.run_pass()  # warm-up: an exception here ends the run
+    for _ in range(getattr(wl, "warmup_passes", 1)):
+        out = wl.run_pass()  # warm-up: an exception here ends the run
+        wrong += wl.check(out)
     warm_s = time.perf_counter() - t
-    wrong = wl.check(out)
     setup_s = start_s + statistics.median(input_s) + prepare_s + warm_s
     log(f"setup {setup_s:.2f}s (inputs {statistics.median(input_s):.2f}s, "
-        f"prepare {prepare_s:.2f}s, warm-up pass {warm_s:.2f}s)")
+        f"prepare {prepare_s:.2f}s, warm-up {warm_s:.2f}s)")
     log(f"settings {wl.settings}")
 
     walls = {True: [], False: []}  # traced? -> pass walls
     attempted = failed = 0
     t_start = time.perf_counter()
     while True:
-        traced = bool(args.trace) and attempted % 2 == 0
+        # traced and untraced passes in ABBA order: passes that alternate
+        # two kinds (region_lookups) trace each kind equally often
+        traced = bool(args.trace) and (attempted + attempted // 2) % 2 == 0
         tracer.enabled, tracer.pass_id = traced, attempted
         attempted += 1
         t = time.perf_counter()
@@ -197,6 +201,7 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
         # a layer the workload never calls reads 0
         metrics = {m["name"]: {"value": float(layer.get(m["name"], 0.0)), "unit": m["unit"]}
                    for m in spec["per_layer"]}
+        values = layer
     else:
         job_p50_s = statistics.median(walls[False]) if walls[False] else float("nan")
         values = {
@@ -205,8 +210,14 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
             "job_p50_s": job_p50_s,
             "peak_rss_mb": sampler.peak_bytes / 2**20,
         }
+        if hasattr(wl, "end_to_end"):
+            values.update(wl.end_to_end(walls[False]))
         metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]}
                    for m in spec["end_to_end"]}
+    # metrics of a workload outside BENCHMARK.json's rotation follow its list
+    for name, unit in getattr(wl, "extra_units", {}).items():
+        if name in values:
+            metrics[name] = {"value": float(values[name]), "unit": unit}
     for name, m in metrics.items():
         log(f"{name} = {m['value']:.6g} {m['unit']}")
     correct = wrong == 0

@@ -44,3 +44,24 @@ def test_written_tables_repeat_for_a_seed(tmp_path):
     a = pq.read_table(str(tmp_path / "a"))
     b = pq.read_table(str(tmp_path / "b"))
     assert a.num_rows == 1_000 and a.equals(b)
+
+
+def test_region_requests_repeat_for_a_seed_and_change_with_it():
+    a = inputs.region_requests(7, 40)
+    assert a == inputs.region_requests(7, 40)
+    assert a != inputs.region_requests(8, 40)
+    assert [r["kind"] for r in a[:4]] == ["cap", "loop", "cap", "loop"]
+    assert all(0.5 <= r["radius_deg"] <= 3.0 and 8 <= r["vertices"] <= 24 for r in a)
+
+
+def test_cell_sorted_table_keeps_point_ids(tmp_path):
+    import pyarrow.parquet as pq
+
+    from perfbench import reference
+
+    xyz = inputs.point_inputs(7, 1_000, 0, False)["points"]
+    cells = reference.leaf_cells(xyz)
+    inputs.write_cell_sorted(str(tmp_path / "t"), xyz, cells, 3)
+    t = pq.read_table(str(tmp_path / "t")).to_pandas()
+    assert (t["cell"].diff().dropna() >= 0).all()
+    assert np.array_equal(xyz[t["pid"].to_numpy()], t[["x", "y", "z"]].to_numpy())

@@ -13,6 +13,11 @@ A workload object owns its inputs under a work directory and exposes:
 * ``probes()`` - per-layer measurements taken after the timed passes of
   a traced run.
 
+Optional: ``warmup_passes`` (default 1), ``end_to_end(walls)`` for
+metrics computed from the untraced pass walls, and ``extra_units`` for
+metrics a workload outside BENCHMARK.json's rotation prints after the
+listed ones.
+
 Spark actions happen inside ``tracer.span(...)`` blocks named after the
 layer they call into, so the traced run can attribute time to layers.
 """
@@ -34,7 +39,7 @@ from s2geometry_spark.kernels.coverer import CovererOptions, RegionCoverer
 from s2geometry_spark.kernels.geotag import geotag_from_index
 from s2geometry_spark.operators import density, image_pipeline, knn, tiling
 from s2geometry_spark.operators.checkpoint import CheckpointedRun
-from s2geometry_spark.operators.contains_join import RegionIndex, contains_join
+from s2geometry_spark.operators.contains_join import RegionIndex, cap_join, contains_join
 
 from . import inputs, reference
 
@@ -230,7 +235,9 @@ class ImageWorkload:
     """image_tiling_job: the checkpointed tiling job of
     jobs/image_tiling_job.py over a seeded window of generated images."""
 
-    N_BUCKETS = 4
+    # two buckets keep the per-bucket manifest and resume path; each bucket
+    # adds fixed Spark job costs (4 buckets took twice as long per pass)
+    N_BUCKETS = 2
 
     def __init__(self, spark, tracer, work: str, seed: int, nproc: int, n_images: int,
                  px_scale: int):
@@ -340,6 +347,80 @@ class ImageWorkload:
         }
 
 
+class LookupWorkload:
+    """region_lookups: a closed loop of small requests against the uniform
+    point table, written once with its cell column and sorted by cell.  A
+    pass is one request: a fresh seeded cap (cap_join) or regular loop
+    (RegionIndex + contains_join) whose point ids are collected."""
+
+    # one request of each kind warms both paths
+    warmup_passes = 2
+    extra_units = {"lookups_per_s": "1/s", "lookup_p50_ms": "ms", "lookup_tail_ms": "ms",
+                   "kernels.coverer.request_share": "ratio"}
+
+    def __init__(self, spark, tracer, work: str, seed: int, nproc: int, n_points: int):
+        self.spark, self.tr = spark, tracer
+        self.seed, self.nproc, self.n_points = seed, nproc, n_points
+        self.rows_per_pass = n_points
+        self.table_path = os.path.join(work, "table")
+        self.n_pass = 0
+
+    def build_inputs(self) -> None:
+        shutil.rmtree(self.table_path, ignore_errors=True)
+        # the uniform_points table of the same seed
+        self.xyz = inputs.point_inputs(self.seed, self.n_points, 0, hot=False)["points"]
+        inputs.write_cell_sorted(self.table_path, self.xyz, reference.leaf_cells(self.xyz),
+                                 self.nproc)
+        self.requests = inputs.region_requests(self.seed, 10_000)
+
+    def prepare(self) -> None:
+        self.table = self.spark.read.parquet(self.table_path)
+        self.settings = {"rows": self.n_points, "radius_deg": (0.5, 3.0)}
+
+    def reference(self) -> None:
+        pass  # per request, in check()
+
+    def run_pass(self) -> dict:
+        spark, tr = self.spark, self.tr
+        region = inputs.request_region(self.requests[self.n_pass % len(self.requests)])
+        self.n_pass += 1
+        if hasattr(region, "center"):
+            with tr.span("operators.cap_join"):
+                rows = cap_join(spark, self.table, {"r": region}).select("pid").collect()
+        else:
+            with tr.span("operators.contains_join.index"):
+                index = RegionIndex({"r": region})
+            with tr.span("operators.contains_join"):
+                rows = contains_join(spark, self.table, index).select("pid").collect()
+        return {"region": region, "ids": [r.pid for r in rows]}
+
+    def check(self, out: dict) -> int:
+        return reference.check_ids(out["ids"], reference.region_ids(self.xyz, out["region"]))
+
+    @staticmethod
+    def end_to_end(walls: list[float]) -> dict[str, float]:
+        """Request rate and latency of the closed loop.  One client, so the
+        rate is requests over the time spent in them.  The tail is the
+        highest percentile with 10 requests beyond it (the 11th-slowest),
+        or the slowest of fewer than 11."""
+        if not walls:  # every request failed: the result line says so
+            return {}
+        ms = sorted(w * 1e3 for w in walls)
+        return {
+            "lookups_per_s": len(ms) / sum(walls),
+            "lookup_p50_ms": statistics.median(ms),
+            "lookup_tail_ms": ms[-11] if len(ms) > 10 else ms[-1],
+        }
+
+    def probes(self) -> dict[str, float]:
+        regions = {i: inputs.request_region(r)
+                   for i, r in enumerate(self.requests[: self.n_pass])}
+        _, ms = cover_all(regions)
+        cover_ms = statistics.median(ms)
+        return {"kernels.coverer.cover_ms": cover_ms,
+                "kernels.coverer.request_share": cover_ms / (1e3 * self.tr.per_pass("bench.pass"))}
+
+
 def _tree_bytes(path: str) -> int:
     return sum(
         os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(path) for f in files
@@ -354,4 +435,5 @@ WORKLOADS = {
     "uniform_points": lambda **kw: PointWorkload(hot=False, **kw, **POINT_SIZES),
     "hot_points": lambda **kw: PointWorkload(hot=True, **kw, **POINT_SIZES),
     "image_tiling_job": lambda **kw: ImageWorkload(**kw, **IMAGE_SIZES),
+    "region_lookups": lambda **kw: LookupWorkload(**kw, n_points=POINT_SIZES["n_points"]),
 }

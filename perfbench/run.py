@@ -28,7 +28,7 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench_work")
 DRIVER_MEMORY = "2g"
-INPUT_REPS = 3
+
 
 def log(msg: str) -> None:
     print(f"[perfbench] {msg}", file=sys.stderr, flush=True)
@@ -131,11 +131,9 @@ def main() -> int:
 
 def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
     """Set-up, warm-up, the timed closed loop and the result line."""
-    input_s = []
-    for _ in range(INPUT_REPS):
-        t = time.perf_counter()
-        wl.build_inputs()
-        input_s.append(time.perf_counter() - t)
+    t = time.perf_counter()
+    wl.build_inputs()
+    input_s = time.perf_counter() - t
     t = time.perf_counter()
     wl.prepare()
     prepare_s = time.perf_counter() - t
@@ -146,11 +144,12 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
         out = wl.run_pass()  # warm-up: an exception here ends the run
         wrong += wl.check(out)
     warm_s = time.perf_counter() - t
-    setup_s = start_s + statistics.median(input_s) + prepare_s + warm_s
-    log(f"setup {setup_s:.2f}s (inputs {statistics.median(input_s):.2f}s, "
+    setup_s = start_s + input_s + prepare_s + warm_s
+    log(f"setup {setup_s:.2f}s (inputs {input_s:.2f}s, "
         f"prepare {prepare_s:.2f}s, warm-up {warm_s:.2f}s)")
     log(f"settings {wl.settings}")
 
+    min_passes = getattr(wl, "min_passes", 1)
     walls = {True: [], False: []}  # traced? -> pass walls
     attempted = failed = 0
     t_start = time.perf_counter()
@@ -172,7 +171,7 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
             wrong += wl.check(out)
             log(f"pass {attempted} {'traced ' if traced else ''}{walls[traced][-1]:.2f}s")
         elapsed = time.perf_counter() - t_start
-        if elapsed >= args.seconds and attempted >= (2 if args.trace else 1):
+        if elapsed >= args.seconds and attempted >= max(min_passes, 2 if args.trace else 1):
             break
     tracer.enabled = False
 
@@ -181,6 +180,7 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
         layer = wl.probes()
         untraced = statistics.median(walls[False]) if walls[False] else float("nan")
         traced = statistics.median(walls[True]) if walls[True] else float("nan")
+        layer.update(tracer.pass_shares())
         layer.update(
             {
                 "sources.session.start_s": start_s,
@@ -203,11 +203,13 @@ def run(args, spec: dict, wl, tracer, sampler, start_s: float) -> int:
                    for m in spec["per_layer"]}
         values = layer
     else:
-        job_p50_s = statistics.median(walls[False]) if walls[False] else float("nan")
+        timed = walls[False] or [float("nan")]
         values = {
             "setup_s": setup_s,
-            "rows_per_s": wl.rows_per_pass / job_p50_s,
-            "job_p50_s": job_p50_s,
+            # rows over the whole timed phase: with one or two passes it is
+            # rows_per_pass ÷ the mean pass, not a second sample
+            "rows_per_s": wl.rows_per_pass * len(timed) / sum(timed),
+            "job_p50_s": statistics.median(timed),
             "peak_rss_mb": sampler.peak_bytes / 2**20,
         }
         if hasattr(wl, "end_to_end"):

@@ -87,6 +87,20 @@ class Tracer:
                 totals[s["pass"]] = totals.get(s["pass"], 0) + s[key]
         return statistics.median(totals.values()) if totals else 0.0
 
+    def pass_shares(self) -> dict[str, float]:
+        """`<span>.pass_share` for every span name: the median over traced
+        passes of the time spent in spans of that name ÷ the pass wall."""
+        walls = {s["pass"]: s["dur_s"] for s in self.spans if s["name"] == "bench.pass"}
+        per: dict[str, dict[int, float]] = {}
+        for s in self.spans:
+            if s["name"] != "bench.pass":
+                totals = per.setdefault(s["name"], {})
+                totals[s["pass"]] = totals.get(s["pass"], 0) + s["dur_s"]
+        return {
+            f"{name}.pass_share": statistics.median(t / walls[p] for p, t in totals.items())
+            for name, totals in per.items()
+        }
+
     def dump(self, path: str, meta: dict) -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         keep = ("id", "name", "parent", "pass", "start", "end", "dur_s", "self_s",

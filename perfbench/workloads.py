@@ -13,7 +13,8 @@ A workload object owns its inputs under a work directory and exposes:
 * ``probes()`` - per-layer measurements taken after the timed passes of
   a traced run.
 
-Optional: ``warmup_passes`` (default 1), ``end_to_end(walls)`` for
+Optional: ``warmup_passes`` (default 1), ``min_passes`` (timed passes
+a run makes at least; default 1), ``end_to_end(walls)`` for
 metrics computed from the untraced pass walls, and ``extra_units`` for
 metrics a workload outside BENCHMARK.json's rotation prints after the
 listed ones.
@@ -66,9 +67,9 @@ def _median_time(fn, reps: int = 3) -> float:
 
 def knn_start_level(point_cells: np.ndarray, query_cells: np.ndarray, k: int) -> int:
     """Finest level at which the 5th-percentile query's own cell holds at
-    least 32k points: the start level matched to the density the queries
-    see, so the first stage certifies nearly every query and the cascade
-    rarely drops to its 64x coarser second stage."""
+    least 32 * k points (96 at k = 3): the start level matched to the
+    density the queries see, so the first stage certifies nearly every
+    query and the cascade rarely drops to its 64x coarser second stage."""
     pts = cellid.from_biased(point_cells)
     qs = cellid.from_biased(query_cells)
     for level in range(14, 1, -1):
@@ -200,25 +201,33 @@ class PointWorkload:
         pts = self._points().cache()
         try:
             pts.count()
-            t0 = time.perf_counter()
-            candidates = contains_join(self.spark, pts, self.index, exact=False).count()
-            candidate_s = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            contains_join(self.spark, pts, self.index).count()
-            join_s = time.perf_counter() - t0
+            candidate_s, join_s = [], []
+            for _ in range(2):  # alternated, so drift slows both alike
+                t0 = time.perf_counter()
+                candidates = contains_join(self.spark, pts, self.index, exact=False).count()
+                candidate_s.append(time.perf_counter() - t0)
+                t0 = time.perf_counter()
+                contains_join(self.spark, pts, self.index).count()
+                join_s.append(time.perf_counter() - t0)
         finally:
             pts.unpersist()
             self.spark.catalog.clearCache()
         encode_s = self.tr.per_pass("functions.encode_udf")
         knn_s = self.tr.per_pass("operators.knn")
+        pip = pip_rate(self.xyz, self.regions)
         return {
             "kernels.coverer.cover_ms": self.cover_ms,
             "kernels.cellid.encode_mpts_s": rate / 1e6,
             "functions.encode_udf_s": encode_s,
             "functions.udf_overhead_ratio": encode_s / (self.n_points / rate),
-            "kernels.predicates.pip_mpts_s": pip_rate(self.xyz, self.regions) / 1e6,
-            "operators.contains_join.candidate_s": candidate_s,
-            "operators.contains_join.refine_s": join_s - candidate_s,
+            "kernels.predicates.pip_mpts_s": pip / 1e6,
+            "operators.contains_join.candidate_s": statistics.median(candidate_s),
+            "operators.contains_join.refine_s":
+                statistics.median(join_s) - statistics.median(candidate_s),
+            # the refinement kernel on every candidate, spread over all
+            # cores, ÷ the traced pass: the share a kernel gain could remove
+            "operators.contains_join.refine_pass_share":
+                candidates / pip / self.nproc / self.tr.per_pass("bench.pass"),
             "operators.contains_join.candidates": candidates,
             "operators.contains_join.pairs": self.n_pairs,
             "operators.contains_join.useful_ratio": self.n_pairs / max(candidates, 1),
@@ -235,9 +244,13 @@ class ImageWorkload:
     """image_tiling_job: the checkpointed tiling job of
     jobs/image_tiling_job.py over a seeded window of generated images."""
 
-    # two buckets keep the per-bucket manifest and resume path; each bucket
-    # adds fixed Spark job costs (4 buckets took twice as long per pass)
-    N_BUCKETS = 2
+    # one bucket still runs the bucket filter, the manifest, the merge and
+    # the resume; each further bucket adds fixed Spark job costs (on a
+    # 4-core VM a pass took 5 s with one bucket, 6.5 s with two, 13-16 s
+    # with four)
+    N_BUCKETS = 1
+    # a run times two passes, so job_p50_s is not a single pass's noise
+    min_passes = 2
 
     def __init__(self, spark, tracer, work: str, seed: int, nproc: int, n_images: int,
                  px_scale: int):
@@ -328,13 +341,18 @@ class ImageWorkload:
 
     def probes(self) -> dict[str, float]:
         table = pq.read_table(self.images_path, columns=["bytes", "fmt"]).to_pandas()
-        decode = {}
+        decode, decode_s = {}, 0.0
         for fmt, group in table.groupby("fmt"):
             blobs = group["bytes"].tolist()[:50]
             secs = _median_time(lambda: [imagecodec.decode(b) for b in blobs])
             decode[f"kernels.imagecodec.decode_ms.{fmt}"] = secs / len(blobs) * 1e3
+            decode_s += secs / len(blobs) * len(group)
         return {
             **decode,
+            # single-thread decode of every image, spread over all cores, ÷
+            # the traced pass: the share a decode gain could remove at most
+            "kernels.imagecodec.decode_pass_share":
+                decode_s / self.nproc / self.tr.per_pass("bench.pass"),
             "kernels.cellid.encode_mpts_s": encode_rate(self.xyz) / 1e6,
             "operators.image_pipeline.geotag_s": self.tr.per_pass("operators.image_pipeline.geotag"),
             "operators.image_pipeline.audit_s": self.tr.per_pass("operators.image_pipeline.audit"),

@@ -1,6 +1,7 @@
 """Spans around calls into the engine's layers, and a /proc memory sampler.
 
-A span records name, start, end, parent and the pass it belongs to.
+A span records name, start, end, parent, the pass it belongs to and the
+CPU seconds all of the run's processes used while it was open.
 While tracing, each span runs its Spark jobs under its own job group, so
 the public StatusTracker attributes stages and tasks to it.  Spans stay
 in memory and are written to JSON when the run ends.
@@ -35,6 +36,7 @@ class Tracer:
             "name": name,
             "parent": parent["id"] if parent else None,
             "pass": self.pass_id,
+            "cpu_start": tree_cpu_s(),
             "start": time.perf_counter(),
         }
         self.spans.append(rec)
@@ -45,6 +47,7 @@ class Tracer:
             yield
         finally:
             rec["end"] = time.perf_counter()
+            rec["cpu_s"] = tree_cpu_s() - rec["cpu_start"]
             self._stack.pop()
             if parent is not None:
                 self.sc.setJobGroup(f"perfbench-span-{parent['id']}", parent["name"])
@@ -101,9 +104,15 @@ class Tracer:
             for name, totals in per.items()
         }
 
+    def cpu_per_pass(self) -> dict[str, float]:
+        """`<span>.cpu_s` for every span name: the median over traced
+        passes of the CPU seconds used in spans of that name."""
+        return {f"{name}.cpu_s": self.per_pass(name, "cpu_s")
+                for name in dict.fromkeys(s["name"] for s in self.spans)}
+
     def dump(self, path: str, meta: dict) -> None:
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        keep = ("id", "name", "parent", "pass", "start", "end", "dur_s", "self_s",
+        keep = ("id", "name", "parent", "pass", "start", "end", "dur_s", "self_s", "cpu_s",
                 "stages", "tasks", "tasks_failed")
         with open(path, "w") as f:
             json.dump({**meta, "spans": [{k: s[k] for k in keep} for s in self.spans]}, f,
@@ -146,6 +155,20 @@ def descendants(root: int) -> dict[int, str]:
     return out
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    live process below it, reaped children included through their
+    parents' cutime/cstime, so a worker that exits keeps its count.  Time
+    the host takes from the virtual CPUs (steal) is not in it."""
+    me = os.getpid()
+    ticks = 0
+    for pid in [me, *descendants(me)]:
+        fields = _stat_fields(pid)
+        if fields:
+            ticks += sum(int(v) for v in fields[11:15])  # utime stime cutime cstime
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def _rss_bytes(pid: int) -> int:
     try:
         with open(f"/proc/{pid}/statm") as f:
@@ -157,12 +180,13 @@ def _rss_bytes(pid: int) -> int:
 class RssSampler:
     """Samples the summed resident set of this process and all of its
     descendants (the JVM and the Python workers) every `interval` seconds;
-    remembers the peak and every pid it saw."""
+    remembers the peak of the current window and every pid it saw."""
 
     def __init__(self, interval: float = 0.5):
         self.interval = interval
         self.peak_bytes = 0
         self.seen: dict[int, str] = {}
+        self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
@@ -171,7 +195,15 @@ class RssSampler:
         kids = descendants(me)
         self.seen.update(kids)
         total = sum(_rss_bytes(p) for p in [me, *kids])
-        self.peak_bytes = max(self.peak_bytes, total)
+        with self._lock:
+            self.peak_bytes = max(self.peak_bytes, total)
+
+    def take_peak(self) -> int:
+        """The peak of the window that ends now; a new window starts."""
+        self.sample()
+        with self._lock:
+            peak, self.peak_bytes = self.peak_bytes, 0
+        return peak
 
     def _loop(self) -> None:
         while not self._stop.wait(self.interval):

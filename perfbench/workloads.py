@@ -118,6 +118,13 @@ class PointWorkload:
     """uniform_points / hot_points: leaf encode, tile rollup, containment
     join against the fixture polygons, kNN join, density + salting."""
 
+    # a pass's CPU falls by a quarter from the first warm pass to the third
+    # while the JVM compiles; the cold pass and the first warm one take the
+    # steepest part of that away.  After them one pass's CPU spreads across
+    # runs as much as the median of two (0.10 against 0.09-0.12 over ten
+    # seeds), so one timed pass keeps a round of runs within its time limit
+    warmup_passes = 2
+
     def __init__(self, spark, tracer, work: str, seed: int, nproc: int, hot: bool,
                  n_points: int, n_queries: int):
         self.spark, self.tr, self.work = spark, tracer, work
@@ -249,7 +256,9 @@ class ImageWorkload:
     # 4-core VM a pass took 5 s with one bucket, 6.5 s with two, 13-16 s
     # with four)
     N_BUCKETS = 1
-    # a run times two passes, so job_p50_s is not a single pass's noise
+    # passes speed up by a quarter over the first ten as the JVM compiles;
+    # the cold pass and one warm one take the steepest part of that away
+    warmup_passes = 2
     min_passes = 2
 
     def __init__(self, spark, tracer, work: str, seed: int, nproc: int, n_images: int,

@@ -3835,7 +3835,7 @@ SELECT pid, cluster, 'border' AS role FROM border
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN join: staged cell-neighbor ring expansion + windowed top-k."""
+    """kNN join: cell-neighbor ring expansion, one points scan per level."""
     points = _order_points_xyz(spark, sf_dir).toDF("pid", "px", "py", "pz", "p_cell")
     q = _customer_queries(spark, sf_dir, _QUERY_KEY)
     out = knn_join(spark, points, q, KNN_K, start_level=5, num_stages=2)
@@ -3846,7 +3846,7 @@ def q_knn_furthest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Furthest-point kNN (S2FurthestEdgeQuery's max-distance-target
     family, s2max_distance_targets.h, applied to points): the k furthest
     points from q are the k nearest to -q (chord2(q,p) = 4 -
-    chord2(-q,p)), so the certified staged ring expansion runs around
+    chord2(-q,p)), so the certified ring expansion runs around
     the ANTIPODES, and the final ranking recomputes chord2(q, p) in the
     pinned polynomial form (+,* only — portable bitwise), ordering DESC.
     The candidate set is selected by the antipodal metric and re-ranked
@@ -3957,7 +3957,7 @@ def q_img_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_img_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-nearest-IMAGE query (the north rule's third named operator, over
     the image+caption input table directly): for each customer query
-    point, the 3 nearest geotagged images via the staged cell-neighbor
+    point, the 3 nearest geotagged images via the cell-neighbor
     ring-expansion kNN.  Rows-only check: the image geotag derives from
     the generated table's phash (splitmix64 is not portably expressible
     in SQL); the kNN mechanism itself is oracle-proven bit-exact by the

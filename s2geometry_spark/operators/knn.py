@@ -1,18 +1,22 @@
-"""k-nearest-neighbor join via staged cell-neighbor ring expansion.
+"""k-nearest-neighbor join via cell-neighbor ring expansion, one scan per
+level.
 
 Re-expression of S2ClosestPointQuery's best-first cell search
-(s2closest_point_query_base.h:482-769) as distributed dataflow: instead of
-a per-query priority queue, every stage is ONE equi-join of queries against
-points co-bucketed by a cell-at-level prefix, followed by a windowed top-k.
-A query is *certified* at a stage when its k-th candidate distance is
-smaller than the minimum possible distance to any point outside the 3x3
-neighbor block — the same admissible lower bound the reference's queue
-pruning uses (S2Cell::GetDistance / kMinWidth, s2closest_point_query_base.h:556-560).
+(s2closest_point_query_base.h:482-769) as dataflow.  The query side is
+small, so it is collected once; each ring level is then ONE mapInPandas
+scan over the points against a broadcast block table.  A point looks up,
+by its cell at the level, the queries whose 3x3 neighbor block holds it,
+and each partition emits those queries' local top-k in (dist, pid) order
+with the pinned ((dx²+dy²)+dz²) chord² — bit-identical to the SQL
+oracles.  The driver merges the partial lists.
 
-Uncertified queries escalate to a coarser level (64x the area); the final
-fallback is a brute-force cross join for whatever remains (typically none).
-Every stage is shuffle-light: the points side is grouped once per level,
-and the neighbor explode happens on the (small) query side.
+A query is *certified* at a level when it has k candidates and its k-th
+distance is smaller than the minimum possible distance to any point
+outside its 3x3 block — the same admissible lower bound the reference's
+queue pruning uses (S2Cell::GetDistance / kMinWidth,
+s2closest_point_query_base.h:556-560).  Uncertified queries escalate to a
+coarser level (64x the area); whatever remains after the last level is
+scanned against every point (typically none).  Nothing is cached.
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -91,164 +95,103 @@ def query_bound_chord2(
     return chord * chord
 
 
-def _bound_udf(level: int):
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def bound(
-        cell_biased: pd.Series, qx: pd.Series, qy: pd.Series, qz: pd.Series
-    ) -> pd.Series:
-        ids = cellid.from_biased(cell_biased.to_numpy(np.int64))
-        P = np.stack(
-            [
-                qx.to_numpy(np.float64),
-                qy.to_numpy(np.float64),
-                qz.to_numpy(np.float64),
-            ],
-            axis=1,
-        )
-        return pd.Series(query_bound_chord2(P, ids, level))
-
-    return bound
+# Candidate (query, point) pairs a scan expands at once: one dense block
+# meeting many queries cannot grow a Python worker without limit.
+_PAIRS_PER_CHUNK = 1 << 20
 
 
-def _stage(
-    points_with_cell: DataFrame,
-    queries: DataFrame,
-    level: int,
-    k: int,
-    qid: str,
-    pid: str,
-) -> DataFrame:
-    """One ring-expansion stage at ``level``; returns per-query top-k with a
-    ``certified`` flag.
+def _block_table(cells: np.ndarray, level: int):
+    """Sorted block-cell -> query-index CSR ``(keys, offs, qi)``: the
+    queries whose 3x3 block at ``level`` (the block _neighbor_block_udf
+    builds) holds block cell ``keys[j]`` are ``qi[offs[j]:offs[j+1]]``.
+    ``cells`` are the queries' uint64 leaf ids."""
+    own = cellid.parent(cells, level)
+    idx, nbrs = cellid.append_all_neighbors(own, level)
+    blk = np.concatenate([own, nbrs])
+    qi = np.concatenate([np.arange(len(cells), dtype=np.int64), idx])
+    order = np.lexsort((qi, blk))
+    blk, qi = blk[order], qi[order]
+    new = np.r_[True, (blk[1:] != blk[:-1]) | (qi[1:] != qi[:-1])]
+    blk, qi = blk[new], qi[new]
+    keys, starts = np.unique(blk, return_index=True)
+    return keys, np.append(starts, len(blk)), qi
 
-    Shape: both sides shuffle ONCE on the block key; a cogrouped
-    applyInPandas computes per-(query, block) top-k with a vectorized
-    chord^2 matrix (pinned ((dx²+dy²)+dz²) order — bit-identical to the
-    SQL oracle), so the global top-k window sees <= 9k candidate rows per
-    query-block instead of the full joined candidate set (~8x fewer rows
-    through the window shuffle at sf0.1).
-    """
-    pts = points_with_cell.withColumn("p_blk", s2f.parent_expr("p_cell", level))
-    blk = _neighbor_block_udf(level)
-    q = queries.withColumn("q_blocks", blk(F.col("q_cell")))
-    q = q.withColumn("p_blk", F.explode("q_blocks")).drop("q_blocks")
 
-    # cogroup on a COARSER prefix (16 blocks per group): per-group pandas
-    # overhead is the dominant cost with one group per block (~6k calls at
-    # sf0.1); blocks inside a group are matched via sorted numpy slices.
-    group_level = max(level - 2, 0)
-    pts = pts.withColumn("g_blk", s2f.parent_expr("p_blk", group_level))
-    q = q.withColumn("g_blk", s2f.parent_expr("p_blk", group_level))
+def _every_point_table(n: int):
+    """Block table at level 0 whose six faces hold every one of ``n``
+    queries: the scan then sees every point as a candidate."""
+    qi = np.tile(np.arange(n, dtype=np.int64), 6)
+    return cellid.from_face(np.arange(6)), np.arange(7, dtype=np.int64) * n, qi
 
-    out_schema = (
-        f"{qid} long, qx double, qy double, qz double, q_cell long, "
-        f"{pid} long, dist_chord2 double"
-    )
 
-    def group_topk(key, qdf: pd.DataFrame, pdf: pd.DataFrame):
-        if len(qdf) == 0 or len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    qid: pd.Series(dtype="int64"),
-                    "qx": pd.Series(dtype="float64"),
-                    "qy": pd.Series(dtype="float64"),
-                    "qz": pd.Series(dtype="float64"),
-                    "q_cell": pd.Series(dtype="int64"),
-                    pid: pd.Series(dtype="int64"),
-                    "dist_chord2": pd.Series(dtype="float64"),
-                }
+def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
+    """The first k rows of each query in (dist, pid) order, queries
+    ascending, with each row's 0-based rank."""
+    order = np.lexsort((p, d, q))
+    q, p, d = q[order], p[order], d[order]
+    i = np.arange(len(q))
+    first = np.r_[True, q[1:] != q[:-1]] if len(q) else np.empty(0, bool)
+    rank = i - np.maximum.accumulate(np.where(first, i, 0))
+    keep = rank < k
+    return q[keep], p[keep], d[keep], rank[keep]
+
+
+def _scan(points: DataFrame, pid: str, Q: np.ndarray, table, level: int, k: int):
+    """One mapInPandas scan of ``points``: each point's level-``level``
+    parent finds, in the broadcast block ``table``, the queries (rows of
+    ``Q``) whose block holds it; each partition emits those queries'
+    local top-k.  Returns the driver-merged top-k ``(q, pid, d, rank)``."""
+    bc = points.sparkSession.sparkContext.broadcast((Q, *table))
+
+    def kern(batches):
+        Q, keys, offs, qi = bc.value
+        acc = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+        for pdf in batches:
+            par = cellid.parent(
+                cellid.from_biased(pdf["p_cell"].to_numpy(np.int64)), level
             )
-        p_blk = pdf["p_blk"].to_numpy(np.int64)
-        order_p = np.argsort(p_blk, kind="stable")
-        p_blk_s = p_blk[order_p]
-        P = pdf[["px", "py", "pz"]].to_numpy(np.float64)[order_p]
-        p_ids = pdf[pid].to_numpy(np.int64)[order_p]
+            pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
+            hit = np.nonzero(keys[pos] == par)[0]
+            lo = offs[pos[hit]]
+            cnt = offs[pos[hit] + 1] - lo
+            cum = np.cumsum(cnt)
+            P = pdf[["px", "py", "pz"]].to_numpy(np.float64)
+            ids = pdf[pid].to_numpy(np.int64)
+            s = 0
+            while s < len(hit):
+                budget = cum[s] - cnt[s] + _PAIRS_PER_CHUNK
+                e = max(int(np.searchsorted(cum, budget, "right")), s + 1)
+                c = cnt[s:e]
+                pi = np.repeat(hit[s:e], c)
+                off = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
+                q = qi[np.repeat(lo[s:e], c) + off]
+                dx = Q[q, 0] - P[pi, 0]
+                dy = Q[q, 1] - P[pi, 1]
+                dz = Q[q, 2] - P[pi, 2]
+                d = (dx * dx + dy * dy) + dz * dz
+                acc = _topk(
+                    np.concatenate([acc[0], q]),
+                    np.concatenate([acc[1], ids[pi]]),
+                    np.concatenate([acc[2], d]),
+                    k,
+                )[:3]
+                s = e
+        yield pd.DataFrame({"q": acc[0], "p": acc[1], "d": acc[2]})
 
-        q_blk = qdf["p_blk"].to_numpy(np.int64)
-        Qm = qdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-        q_ids = qdf[qid].to_numpy(np.int64)
-        q_cells = qdf["q_cell"].to_numpy(np.int64)
-
-        out_q, out_qx, out_qy, out_qz, out_qc, out_p, out_d = (
-            [], [], [], [], [], [], [],
+    try:
+        part = (
+            points.select(pid, "px", "py", "pz", "p_cell")
+            .mapInPandas(kern, "q long, p long, d double")
+            .toPandas()
         )
-        for b in np.unique(q_blk):
-            lo = np.searchsorted(p_blk_s, b, "left")
-            hi = np.searchsorted(p_blk_s, b, "right")
-            if lo == hi:
-                continue
-            qm = q_blk == b
-            Qb = Qm[qm]
-            Pb = P[lo:hi]
-            ids_b = p_ids[lo:hi]
-            dx = Qb[:, 0][:, None] - Pb[None, :, 0]
-            dy = Qb[:, 1][:, None] - Pb[None, :, 1]
-            dz = Qb[:, 2][:, None] - Pb[None, :, 2]
-            D = (dx * dx + dy * dy) + dz * dz
-            take = min(k, Pb.shape[0])
-            # full (dist, pid) lexicographic order — a distance-only
-            # argpartition can drop the smaller-pid member of a tie at the
-            # k-th boundary, breaking the oracle's (dist, pid) tie-break.
-            # ids_b is shared across rows, so pre-permute columns by pid once
-            # and a stable distance argsort yields (dist, pid) order.
-            oi = np.argsort(ids_b, kind="stable")
-            D2 = D[:, oi]
-            ids2 = ids_b[oi]
-            fin = np.argsort(D2, axis=1, kind="stable")[:, :take]
-            out_q.append(np.repeat(q_ids[qm], take))
-            out_qx.append(np.repeat(Qb[:, 0], take))
-            out_qy.append(np.repeat(Qb[:, 1], take))
-            out_qz.append(np.repeat(Qb[:, 2], take))
-            out_qc.append(np.repeat(q_cells[qm], take))
-            out_p.append(ids2[fin].reshape(-1))
-            out_d.append(np.take_along_axis(D2, fin, axis=1).reshape(-1))
-        if not out_q:
-            return group_topk(key, qdf.iloc[:0], pdf.iloc[:0])
-        return pd.DataFrame(
-            {
-                qid: np.concatenate(out_q),
-                "qx": np.concatenate(out_qx),
-                "qy": np.concatenate(out_qy),
-                "qz": np.concatenate(out_qz),
-                "q_cell": np.concatenate(out_qc),
-                pid: np.concatenate(out_p),
-                "dist_chord2": np.concatenate(out_d),
-            }
-        )
-
-    cand = (
-        q.groupBy("g_blk")
-        .cogroup(pts.groupBy("g_blk"))
-        .applyInPandas(group_topk, out_schema)
+    finally:
+        bc.unpersist()
+    return _topk(
+        part["q"].to_numpy(np.int64),
+        part["p"].to_numpy(np.int64),
+        part["d"].to_numpy(np.float64),
+        k,
     )
-    w = Window.partitionBy(qid).orderBy(F.col("dist_chord2").asc(), F.col(pid).asc())
-    topk = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid, "qx", "qy", "qz", "q_cell", pid, "dist_chord2", "rank")
-    )
-    # per-query bound (own-cell boundary distance + ring width) certifies
-    # strictly more queries at stage 1 than the constant kMinWidth bound
-    bnd = _bound_udf(level)
-    cert = (
-        topk.groupBy(qid)
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.max("dist_chord2").alias("_dmax"),
-            F.first("q_cell").alias("_qc"),
-            F.first("qx").alias("_qx"),
-            F.first("qy").alias("_qy"),
-            F.first("qz").alias("_qz"),
-        )
-        .withColumn("_bound", bnd(F.col("_qc"), F.col("_qx"), F.col("_qy"), F.col("_qz")))
-        .withColumn(
-            "certified", (F.col("_n") >= k) & (F.col("_dmax") < F.col("_bound"))
-        )
-        .select(qid, "certified")
-    )
-    return topk.join(cert, qid, "inner")
 
 
 def knn_join(
@@ -265,79 +208,73 @@ def knn_join(
 
     points: (pid, px, py, pz, p_cell[biased leaf]);
     queries: (qid, qx, qy, qz, q_cell[biased leaf]).
-    Returns (qid, rank, pid, dist_chord2).
+    Returns (qid, rank, pid, dist_chord2), ranked by (dist_chord2, pid).
 
-    Stages run at start_level, start_level-3, ... then brute force for the
-    (rare) remainder — each stage a cell-prefix equi-join, never a full
-    cross join of the fact table.
+    Levels run at start_level, start_level-3, ... each one scan of the
+    points against the still-uncertified queries; the (rare) remainder
+    is scanned against every point.  The query side is collected to the
+    driver.
     """
-    points = points.cache()
-    remaining = queries
-    prev_cached: list[DataFrame] = []
-    results = []
+    schema = f"{qid} long, rank int, {pid} long, dist_chord2 double"
+    qdf = queries.select(qid, "qx", "qy", "qz", "q_cell").toPandas()
+    q_ids = qdf[qid].to_numpy(np.int64)
+    Q = qdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+    cells = cellid.from_biased(qdf["q_cell"].to_numpy(np.int64))
+    remaining = np.arange(len(qdf))
+    none = np.empty(0, np.int64)
+    out = [(none, none, none, np.empty(0))]
+
+    def emit(rem, q, p, d, rank):
+        out.append((q_ids[rem[q]], rank + 1, p, d))
+
     level = start_level
     for _ in range(num_stages):
-        if level < 1:
+        if level < 1 or len(remaining) == 0:
             break
-        staged = _stage(points, remaining, level, k, qid, pid).cache()
-        results.append(
-            staged.where(F.col("certified")).select(qid, "rank", pid, "dist_chord2")
+        Qr = Q[remaining]
+        q, p, d, rank = _scan(
+            points, pid, Qr, _block_table(cells[remaining], level), level, k
         )
-        certified_q = staged.where(F.col("certified")).select(qid).distinct()
-        # uncertified AND zero-candidate queries both survive the anti-join
-        remaining = remaining.join(certified_q, qid, "left_anti").cache()
+        # certified: k candidates, the k-th nearer than anything outside
+        # the block (own-cell boundary distance + ring width)
+        n = np.bincount(q, minlength=len(remaining))
+        dmax = np.full(len(remaining), -np.inf)
+        np.maximum.at(dmax, q, d)
+        cert = (n >= k) & (dmax < query_bound_chord2(Qr, cells[remaining], level))
+        keep = cert[q]
+        emit(remaining, q[keep], p[keep], d[keep], rank[keep])
+        remaining = remaining[~cert]
         level -= 3
-        # short-circuit: a later stage would still shuffle the whole points
-        # side through the cogroup even with zero queries left; this count
-        # also materializes the new `remaining`, after which the PREVIOUS
-        # stage's remaining cache is dead weight — unpersist it so query-side
-        # caches don't pile up in block-manager memory for the session's
-        # life.  (`staged` caches stay: they back the lazily-returned result
-        # union; they're bounded by num_stages and dropped with the plan.)
-        empty = remaining.limit(1).count() == 0
-        for df in prev_cached:
-            df.unpersist()
-        prev_cached = [remaining]
-        if empty:
-            return _union_all(results)
 
-    # brute-force fallback for the (typically empty) remainder — LOUDLY
+    # the remainder is scanned against the full points table — LOUDLY
     # capped: `remaining x points` is the one plan here that does not
-    # survive a 100x scale-up, so refuse to build it for more than a
-    # trickle of queries instead of silently cross-joining the fact table
-    # (same contract as ann.cosine_topk_bruteforce's MAX_QUERIES).
-    n_remaining = remaining.limit(MAX_BRUTE_FORCE_QUERIES + 1).count()
-    if n_remaining > MAX_BRUTE_FORCE_QUERIES:
+    # survive a 100x scale-up, so refuse it for more than a trickle of
+    # queries (same contract as ann.cosine_topk_bruteforce's MAX_QUERIES).
+    if len(remaining) > MAX_BRUTE_FORCE_QUERIES:
         raise ValueError(
             f"knn_join: >{MAX_BRUTE_FORCE_QUERIES} queries "
-            f"(>= {n_remaining}) left uncertified after {num_stages} "
-            "stages; a cross join against the full points table at this "
+            f"({len(remaining)}) left uncertified after {num_stages} "
+            "stages; a scan against the full points table at this "
             "volume is a scale cliff. Increase num_stages or lower "
-            "start_level so the staged cascade certifies them."
+            "start_level so the ring levels certify them."
         )
-    if n_remaining == 0:
-        # usual case — drop the fallback subtree from the final plan
-        return _union_all(results)
-    bf = remaining.crossJoin(points)
-    dist = s2f.chord2_expr(
-        F.col("qx"), F.col("qy"), F.col("qz"), F.col("px"), F.col("py"), F.col("pz")
+    if len(remaining):
+        emit(
+            remaining,
+            *_scan(points, pid, Q[remaining], _every_point_table(len(remaining)), 0, k),
+        )
+    cols = [np.concatenate(c) for c in zip(*out)]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                qid: cols[0].astype(np.int64),
+                "rank": cols[1].astype(np.int32),
+                pid: cols[2].astype(np.int64),
+                "dist_chord2": cols[3].astype(np.float64),
+            }
+        ),
+        schema,
     )
-    w = Window.partitionBy(qid).orderBy(F.col("dist_chord2").asc(), F.col(pid).asc())
-    bf = (
-        bf.withColumn("dist_chord2", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid, "rank", pid, "dist_chord2")
-    )
-    results.append(bf)
-    return _union_all(results)
-
-
-def _union_all(dfs: list[DataFrame]) -> DataFrame:
-    out = dfs[0]
-    for r in dfs[1:]:
-        out = out.unionByName(r)
-    return out
 
 
 def hausdorff_distance(

@@ -4,7 +4,8 @@ s2closest_edge_query_base.h:1-200) re-expressed as distributed dataflow.
 The reference walks a best-first queue over the shape index's cells,
 lower-bounding each cell's distance and refining with exact
 point-to-edge distances.  The dataflow re-expression mirrors
-operators/knn.py's staged ring expansion, adapted for EDGE geometry:
+operators/knn.py's ring expansion (levels, 3x3 blocks, certification
+bound) as staged key joins, adapted for EDGE geometry:
 
   stage at level L —
     * each edge emits mixed-level KEYS from its cap-bound covering
@@ -34,15 +35,42 @@ table.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
+
 from ..kernels import cellid, measures
 from .edge_join import _edge_coverings_flat
-from .knn import _min_outside_chord2, _union_all
+from .knn import _min_outside_chord2, query_bound_chord2
 
 E_COLS = ["e0x", "e0y", "e0z", "e1x", "e1y", "e1z"]
+
+
+def _bound_udf(level: int):
+    """knn.query_bound_chord2 at ``level`` as a column UDF of
+    (q_cell, qx, qy, qz)."""
+
+    @pandas_udf(DoubleType())
+    def bound(
+        cell_biased: pd.Series, qx: pd.Series, qy: pd.Series, qz: pd.Series
+    ) -> pd.Series:
+        ids = cellid.from_biased(cell_biased.to_numpy(np.int64))
+        P = np.stack(
+            [
+                qx.to_numpy(np.float64),
+                qy.to_numpy(np.float64),
+                qz.to_numpy(np.float64),
+            ],
+            axis=1,
+        )
+        return pd.Series(query_bound_chord2(P, ids, level))
+
+    return bound
 
 
 def _spread(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -329,8 +357,6 @@ def _stage(
     # per-query bound (own-cell boundary distance + ring width): an edge
     # with no covering cell in the block lies entirely outside it, so the
     # same point-bound argument applies (see knn.query_bound_chord2)
-    from .knn import _bound_udf
-
     bnd = _bound_udf(level)
     cert = (
         topk.groupBy("qid")
@@ -422,7 +448,7 @@ def closest_edges_join(
             df.unpersist()
         prev_cached = [remaining]
         if empty:
-            return _union_all(results)
+            return reduce(DataFrame.unionByName, results)
 
     # brute-force fallback for the (typically empty) remainder; edge
     # coords come from the cached key table (covering rows carry them).
@@ -441,7 +467,7 @@ def closest_edges_join(
     if n_remaining == 0:
         # usual case: everything certified — drop the fallback subtree
         # (crossJoin + mapInPandas + window) from the final plan entirely
-        return _union_all(results)
+        return reduce(DataFrame.unionByName, results)
     edges_cached = ek_all.where("is_cov").select("eid", *E_COLS).dropDuplicates(
         ["eid"]
     )
@@ -475,7 +501,7 @@ def closest_edges_join(
         .select("qid", "rank", "eid", "dist_chord2")
     )
     results.append(bf)
-    return _union_all(results)
+    return reduce(DataFrame.unionByName, results)
 
 
 def furthest_edges_join(

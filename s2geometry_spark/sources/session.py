@@ -19,8 +19,13 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(32, cpus)
+    """Local session.  Unset core counts come from ``SPARK_GRAFT_CPUS``,
+    else from the cores this process may run on; shuffle partitions
+    default to two per core."""
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    shuffle_partitions = shuffle_partitions or 2 * cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -15,17 +15,23 @@ from s2geometry_spark.operators.contains_join import (
 from s2geometry_spark.operators.knn import knn_join
 
 
-def _points_df(spark, n=4000, key_mult=1, key_off=0):
+def _xyz(n, key_mult=1, key_off=0):
+    """(n, 3) deterministic unit points and their int64 keys."""
     keys = np.arange(1, n + 1, dtype=np.int64) * key_mult + key_off
     x0, y0, z0 = geotag.int_triplet_from_key(keys)
-    x, y, z = geotag.xyz_from_triplet(x0, y0, z0)
+    return np.stack(geotag.xyz_from_triplet(x0, y0, z0), axis=1), keys
+
+
+def _points_df(spark, n=4000, key_mult=1, key_off=0):
+    xyz, keys = _xyz(n, key_mult, key_off)
+    x, y, z = xyz.T
     cells = cellid.to_biased(cellid.from_xyz(x, y, z))
     import pandas as pd
 
     pdf = pd.DataFrame(
         {"pid": keys, "x": x, "y": y, "z": z, "cell": cells}
     )
-    return spark.createDataFrame(pdf), np.stack([x, y, z], axis=1), keys
+    return spark.createDataFrame(pdf), xyz, keys
 
 
 POLYS = {
@@ -115,6 +121,141 @@ class TestKnnJoin:
         counts = got.groupBy("qid").count().toPandas()
         assert len(counts) == 40
         assert (counts["count"] == 5).all()
+
+    def test_duplicate_coordinates_tie_break_on_pid(self, spark):
+        # every coordinate three times under scattered pids, so the k-th
+        # rank cuts through a tie that only the pid can order
+        pts, keys = _xyz(800)
+        P = np.concatenate([pts, pts, pts])
+        pids = np.concatenate([keys * 3 + 2, keys * 3, keys * 3 + 1])
+        qts, qkeys = _xyz(60, key_mult=7, key_off=3)
+        k = 5
+        got = knn_join(
+            spark, *_knn_frames(spark, P, pids, qts, qkeys), k, start_level=5
+        ).toPandas()
+        assert _rows(got) == _knn_reference(P, pids, qts, qkeys, k)
+
+    def test_fine_start_level_certifies_later(self, spark, monkeypatch):
+        pts, keys = _xyz(3000)
+        qts, qkeys = _xyz(50, key_mult=7, key_off=3)
+        levels = _record_scan_levels(monkeypatch)
+        got = knn_join(
+            spark, *_knn_frames(spark, pts, keys, qts, qkeys), 3,
+            start_level=11, num_stages=4,
+        ).toPandas()
+        assert _rows(got) == _knn_reference(pts, keys, qts, qkeys, 3)
+        assert len(levels) >= 2 and 0 not in levels
+
+    def test_remainder_scans_every_point(self, spark, monkeypatch):
+        pts, keys = _xyz(1500)
+        qts, qkeys = _xyz(30, key_mult=7, key_off=3)
+        levels = _record_scan_levels(monkeypatch)
+        got = knn_join(
+            spark, *_knn_frames(spark, pts, keys, qts, qkeys), 4,
+            start_level=20, num_stages=1,
+        ).toPandas()
+        assert _rows(got) == _knn_reference(pts, keys, qts, qkeys, 4)
+        assert levels == [20, 0]
+
+    def test_block_with_fewer_than_k_points(self, spark):
+        pts, keys = _xyz(2000)
+        qts, qkeys = _xyz(40, key_mult=7, key_off=3)
+        k, level = 4, 7
+        # the fixture must hold a query whose 3x3 block has < k points
+        qc = cellid.parent(cellid.from_xyz(qts[:, 0], qts[:, 1], qts[:, 2]), level)
+        pc = cellid.parent(cellid.from_xyz(pts[:, 0], pts[:, 1], pts[:, 2]), level)
+        idx, nbrs = cellid.append_all_neighbors(qc, level)
+        in_block = np.zeros(len(qts), np.int64)
+        for i in range(len(qts)):
+            block = np.union1d(nbrs[idx == i], qc[i : i + 1])
+            in_block[i] = np.isin(pc, block).sum()
+        assert (in_block < k).any()
+        got = knn_join(
+            spark, *_knn_frames(spark, pts, keys, qts, qkeys), k,
+            start_level=level, num_stages=2,
+        ).toPandas()
+        assert _rows(got) == _knn_reference(pts, keys, qts, qkeys, k)
+
+    def test_empty_query_side(self, spark):
+        pts, keys = _xyz(200)
+        no_queries = (np.empty((0, 3)), np.empty(0, np.int64))
+        got = knn_join(spark, *_knn_frames(spark, pts, keys, *no_queries), 3)
+        assert got.schema.simpleString() == (
+            "struct<qid:bigint,rank:int,pid:bigint,dist_chord2:double>"
+        )
+        assert len(got.toPandas()) == 0
+
+    def test_leaves_no_persistent_rdds(self, spark):
+        pts, keys = _xyz(1000)
+        qts, qkeys = _xyz(20, key_mult=7, key_off=3)
+        frames = _knn_frames(spark, pts, keys, qts, qkeys)
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        knn_join(spark, *frames, 3, start_level=8, num_stages=2).toPandas()
+        assert jsc.getPersistentRDDs().size() == before
+
+    def test_remainder_cap_raises(self, spark, monkeypatch):
+        from s2geometry_spark.operators import knn
+
+        pts, keys = _xyz(300)
+        qts, qkeys = _xyz(5, key_mult=7, key_off=3)
+        monkeypatch.setattr(knn, "MAX_BRUTE_FORCE_QUERIES", 0)
+        with pytest.raises(ValueError, match="left uncertified"):
+            knn_join(
+                spark, *_knn_frames(spark, pts, keys, qts, qkeys), 3,
+                start_level=20, num_stages=1,
+            )
+
+
+def _knn_frames(spark, pts, pids, qts, qkeys):
+    """(points, queries) frames in knn_join's input schema."""
+    import pandas as pd
+
+    def frame(xyz, ids, key, prefix):
+        cells = cellid.to_biased(cellid.from_xyz(xyz[:, 0], xyz[:, 1], xyz[:, 2]))
+        pdf = pd.DataFrame(
+            {key: np.asarray(ids, np.int64), f"{prefix}x": xyz[:, 0],
+             f"{prefix}y": xyz[:, 1], f"{prefix}z": xyz[:, 2],
+             f"{prefix}_cell": cells}
+        )
+        return spark.createDataFrame(
+            pdf, f"{key} long, {prefix}x double, {prefix}y double, "
+            f"{prefix}z double, {prefix}_cell long",
+        )
+
+    return frame(pts, pids, "pid", "p"), frame(qts, qkeys, "qid", "q")
+
+
+def _knn_reference(pts, pids, qts, qkeys, k):
+    """Exhaustive top-k in (chord², pid) order with the pinned
+    ((dx²+dy²)+dz²) sum: {(qid, rank, pid, dist_chord2)}."""
+    rows = set()
+    for i, qk in enumerate(qkeys):
+        dx, dy, dz = (qts[i, c] - pts[:, c] for c in range(3))
+        d = (dx * dx + dy * dy) + dz * dz
+        for r, j in enumerate(np.lexsort((pids, d))[:k], start=1):
+            rows.add((int(qk), r, int(pids[j]), float(d[j])))
+    return rows
+
+
+def _rows(got):
+    return set(zip(got["qid"].tolist(), got["rank"].tolist(),
+                   got["pid"].tolist(), got["dist_chord2"].tolist()))
+
+
+def _record_scan_levels(monkeypatch):
+    """Record the level of every points scan knn_join runs (0 is the
+    scan against every point)."""
+    from s2geometry_spark.operators import knn
+
+    levels, scan = [], knn._scan
+
+    def spy(points, pid, Q, table, level, k):
+        levels.append(level)
+        return scan(points, pid, Q, table, level, k)
+
+    monkeypatch.setattr(knn, "_scan", spy)
+    return levels
 
 
 class TestBoundaryDistance:

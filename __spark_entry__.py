@@ -198,8 +198,9 @@ def q_cell_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cellunion_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2CellUnion containment join: points x broadcast coverings of the
-    fixture caps, per-level prefix equi-joins (S2CellIteratorJoin shape)."""
+    """S2CellUnion containment join: points x the coverings of the fixture
+    caps, one scan looking up each point's per-level parents in the
+    sorted covering cells."""
     from s2geometry_spark.operators.contains_join import cell_union_contains_join
 
     pts = _order_points(spark, sf_dir)
@@ -235,8 +236,9 @@ def q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-polygon containment join: term-indexer broadcast equi-join
-    + vectorized crossing-parity refinement (SURVEY.md §2.4)."""
+    """Point-in-polygon containment join: one points scan that looks each
+    cell up in the polygons' coverings and refines with the vectorized
+    crossing-parity kernel (SURVEY.md §2.4)."""
     pts = _order_points_xyz(spark, sf_dir)
     return contains_join(spark, pts, _pip_index())
 

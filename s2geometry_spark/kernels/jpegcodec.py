@@ -21,6 +21,7 @@ pipeline ships (and honest about where a C codec would slot in).
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -364,11 +365,16 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _huff_lut(bits, values):
+@functools.lru_cache(maxsize=8)
+def _huff_lut(bits: bytes, values: bytes):
     """(value, length) lookup over every 16-bit window: a canonical code
     of length L occupies the 2^(16-L) windows it prefixes.  One array
     index replaces the read-one-bit-at-a-time walk (same codes, same
-    first-match semantics — canonical codes are prefix-free)."""
+    first-match semantics — canonical codes are prefix-free).
+
+    Memoized on the DHT table's raw bytes: a stream's four tables are
+    usually the ones the previous image used, and each costs two
+    65,536-entry tuples to build."""
     val = np.zeros(65536, np.int32)
     ln = np.zeros(65536, np.int32)
     code = 0
@@ -382,7 +388,7 @@ def _huff_lut(bits, values):
             code += 1
             k += 1
         code <<= 1
-    return val.tolist(), ln.tolist()
+    return tuple(val.tolist()), tuple(ln.tolist())
 
 
 # Worst case one 8x8 block can consume from the entropy stream: DC code
@@ -470,9 +476,9 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             p = 0
             while p < len(payload):
                 cls_id = payload[p]
-                bits = list(payload[p + 1 : p + 17])
+                bits = bytes(payload[p + 1 : p + 17])
                 nvals = sum(bits)
-                values = list(payload[p + 17 : p + 17 + nvals])
+                values = bytes(payload[p + 17 : p + 17 + nvals])
                 huff[(cls_id >> 4, cls_id & 0xF)] = _huff_lut(bits, values)
                 p += 17 + nvals
         elif marker == 0xDA:

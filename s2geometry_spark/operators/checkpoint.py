@@ -34,6 +34,18 @@ MANIFEST = "_partitions.jsonl"
 RUNS = "_runs.jsonl"
 
 
+def _parquet_rows(path: str) -> int:
+    """Rows of the parquet files Spark just wrote under ``path``, summed
+    from their footers (no Spark job; the manifest is local too)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
+        for name in sorted(os.listdir(path))
+        if name.endswith(".parquet")
+    )
+
+
 class CheckpointedRun:
     def __init__(self, out_dir: str, n_buckets: int = 16, run_id: str = "run0"):
         self.out_dir = out_dir
@@ -116,7 +128,7 @@ class CheckpointedRun:
                 attempt += 1  # orphaned partial write from a crashed attempt
             df = make_unit(spark, b)
             df.write.mode("overwrite").parquet(out)  # idempotent re-attempt
-            rows = spark.read.parquet(out).count()
+            rows = _parquet_rows(out)
             wall = time.time() - t0
             rec = {
                 "run_id": self.run_id,

@@ -1,34 +1,41 @@
-"""Spatial containment join: points x regions via the S2 term-indexer
-inverted-index scheme (s2region_term_indexer.cc:23-72) re-expressed as a
-Spark broadcast equi-join + vectorized crossing-parity refinement.
+"""Spatial containment join: points x regions in ONE scan of the points.
 
-Plan shape (SURVEY.md §2.4):
+S2RegionTermIndexer (s2region_term_indexer.cc:23-72) matches a point to a
+region when the point's leaf cell lies in a cell of the region's
+covering.  With the region set small enough for the driver, that lookup
+needs no join at all.
 
-  points:   leaf cell (pandas-UDF encode)
-            -> query terms per level (PURE SQL parent exprs, codegen)
-            -> explode -> equi-join on (term_cell, is_covering)
-  regions:  driver-side canonical coverings (RegionCoverer port)
-            -> index terms (covering + ancestors) -> tiny DataFrame
-            -> broadcast()
-  refine:   vectorized polygon_contains_points parity kernel per candidate
-            (pandas UDF; polygons shipped in the UDF closure/broadcast)
+Plan shape: one ``mapInPandas`` over ``(point_id, cell, x, y, z)``.
 
-At 100 TB the equi-join is a BroadcastHashJoin against a few-thousand-row
-term table (no shuffle of the fact table), and refinement is Arrow-batched
-NumPy — the same asymptotics as S2's own distributed-indexing design.
+  driver:  canonical coverings (RegionCoverer port, or precomputed)
+           -> one sorted table of covering cells, each with the regions
+              that own it (CSR), plus the distinct covering levels;
+              shipped in the UDF closure with the regions' loops
+  scan:    per Arrow batch, each leaf cell's parent at every covering
+           level -> ``np.searchsorted`` into the table -> candidate
+           (row, region) pairs, de-duplicated in the batch
+           -> the crossing-parity kernel once per region -> pairs
+
+No explode, no broadcast join, no shuffle, and one Python crossing: the
+plan is a single stage whatever the number of regions, overlapping ones
+included.  ``cell_union_contains_join`` is the same scan without the
+refinement.  ``cap_join`` and ``rect_join`` refine in SQL and keep the
+term-indexer equi-join (``point_query_terms`` against
+``RegionIndex.terms``), as does ``big_polygon_join``.
 """
 
 from __future__ import annotations
+
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import functions as s2f
-from ..kernels import cellid
+from ..kernels import cellid, cellunion
 from ..kernels.coverer import CovererOptions, RegionCoverer
 
 # S2RegionTermIndexer defaults (s2region_term_indexer.h)
@@ -41,9 +48,9 @@ DEFAULT_MAX_CELLS = 8
 class RegionIndex:
     """Driver-side index of a (broadcast-scale) region set.
 
-    Builds canonical coverings and S2 index terms for each region; exposes
-    them as a small DataFrame for the broadcast join and keeps the region
-    objects for the exact refinement kernel.
+    Builds a canonical covering for each region and keeps the region
+    objects for the exact refinement kernel.  The S2 index terms the
+    term-indexer joins need are built on first use.
     """
 
     def __init__(
@@ -79,10 +86,21 @@ class RegionIndex:
             )
             for rid, region in regions.items()
         }
-        self.terms: list[tuple[int, bool, str]] = []  # (biased_cell, is_covering, rid)
-        for rid, covering in self.coverings.items():
-            for cell_b, is_cov in self._index_terms(covering):
-                self.terms.append((cell_b, is_cov, rid))
+
+    @cached_property
+    def terms(self) -> list[tuple[int, bool, str]]:
+        """Index terms ``(biased_cell, is_covering, rid)`` for the
+        term-indexer joins.  Covering cells coarser than ``min_level`` (or
+        off the ``level_mod`` grid) are first expanded onto it, as
+        S2CellUnion::Denormalize does: a point's query terms stop at
+        ``min_level``, so such a cell would otherwise match nothing."""
+        return [
+            (cell_b, is_cov, rid)
+            for rid, covering in self.coverings.items()
+            for cell_b, is_cov in self._index_terms(
+                cellunion.denormalize(covering, self.min_level, self.level_mod)
+            )
+        ]
 
     def _index_terms(self, covering: np.ndarray):
         """GetIndexTermsForCanonicalCovering (s2region_term_indexer.cc:164-213),
@@ -144,36 +162,6 @@ def point_query_terms(df: DataFrame, index: RegionIndex, cell: str = "cell") -> 
     ).drop("q_term")
 
 
-def _make_refiner(index: RegionIndex):
-    """Vectorized exact refinement: group candidate rows by region inside
-    each Arrow batch and run the parity kernel once per region."""
-    payload = {
-        rid: (
-            [np.asarray(lp.vertices) for lp in _loops_of(region)],
-            [bool(lp.origin_inside) for lp in _loops_of(region)],
-        )
-        for rid, region in index.regions.items()
-    }
-
-    @pandas_udf(BooleanType())
-    def refine(poly_id: pd.Series, x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-        from ..kernels import predicates
-
-        pts = np.stack(
-            [x.to_numpy(np.float64), y.to_numpy(np.float64), z.to_numpy(np.float64)],
-            axis=1,
-        )
-        out = np.zeros(len(poly_id), dtype=bool)
-        codes, uniques = pd.factorize(poly_id)
-        for gi, rid in enumerate(uniques):
-            mask = codes == gi
-            loops, flags = payload[rid]
-            out[mask] = predicates.polygon_contains_points(loops, flags, pts[mask])
-        return pd.Series(out)
-
-    return refine
-
-
 def _loops_of(region):
     from ..kernels.regions import Loop, Polygon
 
@@ -233,7 +221,7 @@ def rect_join(
     (s2latlng_rect.cc:248-262, tested throughout s2latlng_rect_test.cc),
     including antimeridian-wrapping and full-longitude polar rects.
 
-    Candidates via the same covering term join as every region join;
+    Candidates via the same covering term join as cap_join;
     refinement is pure SQL (JVM codegen, no Python) and avoids atan2
     (bit-portability): latitude via the monotone z = sin(lat) bounds,
     longitude via the two meridian half-plane signs — exact for spans
@@ -281,42 +269,27 @@ def cell_union_contains_join(
 ) -> DataFrame:
     """S2CellUnion::Contains as a distributed join (s2cell_union.cc:285-308
     re-expressed): all (point, region) pairs whose leaf cell lies inside
-    the region's covering cell union.
+    the region's covering cell union, as ``(point_id, region_id)``.
 
-    Plan: ONE scan of the points, exploding (level, parent(cell, level))
-    pairs for only the levels present in any covering (pure-SQL prefix
-    exprs, codegen), then a single broadcast equi-join on (level, cell)
-    against the exploded covering dim table.  Normalized unions are
-    non-overlapping, so no dedup is needed.  This is the
-    S2CellIteratorJoin shape with the small side broadcast; the explode
-    factor equals the number of distinct covering levels (<= ~8), far
-    cheaper than re-scanning + re-encoding the fact table per level.
+    Plan: the same single ``mapInPandas`` scan as ``contains_join`` with
+    ``exact=False`` (the cell lookup of ``_cell_hits``), reading only
+    ``(point_id, cell)``.  No explode, no join, no shuffle.
     """
-    dim_rows: list[tuple[int, int, str]] = []
-    levels: set[int] = set()
-    for rid, ids in unions.items():
-        arr = np.asarray(ids, np.uint64)
-        for v, lv in zip(cellid.to_biased(arr).tolist(), cellid.level(arr).tolist()):
-            dim_rows.append((int(lv), int(v), rid))
-            levels.add(int(lv))
-    dim = F.broadcast(
-        spark.createDataFrame(
-            dim_rows, schema="u_level int, u_cell long, region_id string"
-        )
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(lv).alias("u_level"),
-                s2f.parent_expr(cell, lv).alias("u_cell"),
-            )
-            for lv in sorted(levels)
+    table = _cell_table(list(unions.values()))
+    rids = np.array(list(unions), dtype=object)
+    schema = StructType(
+        [
+            StructField(point_id, points.schema[point_id].dataType),
+            StructField("region_id", StringType()),
         ]
     )
-    exploded = points.select(point_id, F.explode(pairs).alias("p")).select(
-        point_id, F.col("p.u_level").alias("u_level"), F.col("p.u_cell").alias("u_cell")
-    )
-    return exploded.join(dim, ["u_level", "u_cell"]).select(point_id, "region_id")
+
+    def scan(batches):
+        for pdf in batches:
+            row, rg = _cell_hits(cellid.from_biased(pdf[cell].to_numpy(np.int64)), table)
+            yield pd.DataFrame({point_id: pdf[point_id].to_numpy()[row], "region_id": rids[rg]})
+
+    return points.select(point_id, cell).mapInPandas(scan, schema)
 
 
 def contains_semi_join(
@@ -336,6 +309,42 @@ def contains_anti_join(
     return points.select(point_id).join(pairs, point_id, "left_anti")
 
 
+def _cell_table(coverings: list[np.ndarray]):
+    """Sorted covering-cell -> region CSR ``(levels, keys, offs, reg)``:
+    the regions owning covering cell ``keys[j]`` are
+    ``reg[offs[j]:offs[j+1]]`` (positions in ``coverings``), and
+    ``levels`` are the distinct levels of the keys."""
+    covs = [np.asarray(c, np.uint64) for c in coverings]
+    cells = np.concatenate([np.empty(0, np.uint64), *covs])
+    reg = np.repeat(np.arange(len(covs), dtype=np.int64), [len(c) for c in covs])
+    order = np.lexsort((reg, cells))
+    cells, reg = cells[order], reg[order]
+    keys, starts = np.unique(cells, return_index=True)
+    levels = np.unique(cellid.level(keys)).tolist()
+    return levels, keys, np.append(starts, len(cells)), reg
+
+
+def _cell_hits(leaf: np.ndarray, table) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct ``(row, region)`` pairs whose leaf cell lies in one of the
+    region's covering cells: each leaf's parent at every covering level,
+    looked up in ``_cell_table``'s keys by ``np.searchsorted``.  Sorted by
+    row, then region."""
+    levels, keys, offs, reg = table
+    n_reg = int(reg.max()) + 1 if len(reg) else 1
+    pair = [np.empty(0, np.int64)]
+    for lv in levels:
+        par = cellid.parent(leaf, lv)
+        pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
+        hit = np.nonzero(keys[pos] == par)[0]
+        lo = offs[pos[hit]]
+        cnt = offs[pos[hit] + 1] - lo
+        off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        pair.append(np.repeat(hit, cnt) * n_reg + reg[np.repeat(lo, cnt) + off])
+    # a row meets a region once, however many of its cells hold it
+    pair = np.unique(np.concatenate(pair))
+    return pair // n_reg, pair % n_reg
+
+
 def contains_join(
     spark: SparkSession,
     points: DataFrame,
@@ -345,22 +354,48 @@ def contains_join(
     xyz: tuple[str, str, str] = ("x", "y", "z"),
     exact: bool = True,
 ) -> DataFrame:
-    """All (point, region) pairs where the region contains the point.
+    """All (point, region) pairs where the region contains the point:
+    ``(point_id, poly_id)``, the id column keeping the input's type.
 
-    ``exact=False`` returns the candidate set (covering-intersection
-    semantics, no parity refinement) — what S2CellIndex-style queries give.
+    ``exact=False`` returns the candidate set instead, as
+    ``(point_id, x, y, z, poly_id)``: the pairs whose leaf cell lies in a
+    cell of the region's covering, with no parity refinement — what
+    S2CellIndex-style queries give.
+
+    Pairs are found per input row, so the output is the distinct
+    (point id, region) pairs when point ids are unique.  Rows that repeat
+    an id each contribute their own pairs: the same pair can then appear
+    more than once (``dropDuplicates`` restores a set).
     """
-    terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = q.join(terms, ["term_cell", "is_covering"], "inner").select(
-        point_id, *xyz, "poly_id"
-    ).dropDuplicates([point_id, "poly_id"])
-    if not exact:
-        return cand
-    refine = _make_refiner(index)
+    table = _cell_table(list(index.coverings.values()))
+    rids = np.array(list(index.coverings), dtype=object)
+    loops = [_loops_of(index.regions[rid]) for rid in rids] if exact else []
+    payload = [
+        ([np.asarray(lp.vertices) for lp in ls], [bool(lp.origin_inside) for lp in ls])
+        for ls in loops
+    ]
     x, y, z = xyz
-    return (
-        cand.withColumn("_inside", refine(F.col("poly_id"), F.col(x), F.col(y), F.col(z)))
-        .where(F.col("_inside"))
-        .select(point_id, "poly_id")
+    keep_cols = [point_id] if exact else [point_id, x, y, z]
+    schema = StructType(
+        [StructField(c, points.schema[c].dataType) for c in keep_cols]
+        + [StructField("poly_id", StringType())]
     )
+
+    def scan(batches):
+        from ..kernels import predicates
+
+        for pdf in batches:
+            row, rg = _cell_hits(cellid.from_biased(pdf[cell].to_numpy(np.int64)), table)
+            if exact:
+                P = pdf[[x, y, z]].to_numpy(np.float64)
+                inside = np.zeros(len(row), dtype=bool)
+                for g in np.unique(rg):
+                    m = rg == g
+                    verts, flags = payload[g]
+                    inside[m] = predicates.polygon_contains_points(verts, flags, P[row[m]])
+                row, rg = row[inside], rg[inside]
+            out = {c: pdf[c].to_numpy()[row] for c in keep_cols}
+            out["poly_id"] = rids[rg]
+            yield pd.DataFrame(out)
+
+    return points.select(point_id, cell, *xyz).mapInPandas(scan, schema)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import functions as s2f
+from .tiling import tile_rollup
 
 
 def measure_density(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
@@ -36,18 +37,9 @@ def measure_density(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
 
 
 def density_tree(df: DataFrame, levels, cell: str = "cell") -> DataFrame:
-    """Multi-level density tree from ONE fine aggregation (ancestor
-    property: coarse weights are sums of fine weights)."""
-    levels = sorted(levels)
-    fine = measure_density(df, levels[-1], cell).withColumn("level", F.lit(levels[-1]))
-    out = fine
-    for lvl in reversed(levels[:-1]):
-        out = out.unionByName(
-            fine.groupBy(s2f.parent_expr("cell_lvl", lvl).alias("cell_lvl"))
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("level", F.lit(lvl))
-        )
-    return out.select("level", "cell_lvl", "cnt")
+    """Multi-level density tree ``(level, cell_lvl, cnt)``: the
+    multi-level tile rollup (one aggregation over every level)."""
+    return tile_rollup(df, levels, cell)
 
 
 def salt_factors(

@@ -368,8 +368,8 @@ def sample_video_frames(videos: DataFrame, every: int) -> DataFrame:
 def images_pip_join(
     spark: SparkSession, images_geo: DataFrame, index: RegionIndex
 ) -> DataFrame:
-    """Which polygons contain each image's geotag point — the flagship
-    broadcast term-join, with image_id as the point id."""
+    """Which polygons contain each image's geotag point — the one-scan
+    containment join, with image_id as the point id."""
     pts = with_xyz(images_geo).select(
         F.col("image_id").alias("pid"), "x", "y", "z", "cell"
     )

@@ -25,7 +25,7 @@ themselves, not a replay of them.
 Scale shape: the composition runs as ONE applyInPandas over (pair,
 mode) groups of a few dozen covering cells each — shuffle size is
 O(pairs x max_cells), never the fact table.  The point-membership join
-is the S2CellIteratorJoin shape shared with cell_union_contains_join:
+is the S2CellIteratorJoin shape:
 one scan of the points exploding (level, parent) pairs for only the
 levels present in any composed covering, one broadcast equi-join, and a
 count — normalized unions are disjoint, so no dedup exists anywhere.

@@ -148,26 +148,29 @@ def per_tile_hulls(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
 
 
 def tile_rollup(df: DataFrame, levels, cell: str = "cell") -> DataFrame:
-    """Multi-level tile rollup in ONE shuffle.
+    """Multi-level tile rollup as ONE aggregation: ``(level, cell_lvl,
+    cnt)`` for every requested level.
 
-    Aggregates once at the finest level, then re-aggregates coarser levels
-    from the fine partials (the density-tree ancestor property,
-    s2density_tree.h:16-40): map-side combine does most of the work and the
-    coarse levels reuse the fine aggregate instead of rescanning the fact
-    table.
+    Each row expands into its ``(level, parent(cell, level))`` tile at
+    every level (pure-SQL prefix exprs, codegen) and a single
+    ``groupBy().count()`` counts them — map-side partial counts, one
+    shuffle.  Summing fine tiles into coarse ones (the density-tree
+    ancestor property, s2density_tree.h:16-40) gives the same counts but
+    needs an aggregation per level.
     """
-    levels = sorted(levels)
-    finest = levels[-1]
-    fine = df.groupBy(s2f.parent_expr(cell, finest).alias("cell_lvl")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    fine = fine.withColumn("level", F.lit(finest))
-    out = fine
-    for lvl in reversed(levels[:-1]):
-        coarser = (
-            fine.groupBy(s2f.parent_expr("cell_lvl", lvl).alias("cell_lvl"))
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("level", F.lit(lvl))
+    tiles = F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(int(lvl)).alias("level"),
+                    s2f.parent_expr(cell, lvl).alias("cell_lvl"),
+                )
+                for lvl in sorted(levels)
+            ]
         )
-        out = out.unionByName(coarser)
-    return out.select("level", "cell_lvl", "cnt")
+    )
+    return (
+        df.select(tiles)
+        .groupBy("level", "cell_lvl")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )

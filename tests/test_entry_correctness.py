@@ -32,7 +32,7 @@ def _fresh_duck():
     memory ceiling.  The 133-oracle sweep previously shared ONE connection,
     whose accumulated MATERIALIZED-CTE state eventually OOM'd DuckDB
     mid-sweep next to the live local[32] JVM (VERDICT r4 "What's wrong" #1);
-    a fresh connection per batch keeps each oracle's footprint independent."""
+    a fresh connection per oracle keeps each oracle's footprint independent."""
     import duckdb
 
     con = duckdb.connect()
@@ -48,22 +48,46 @@ def _fresh_duck():
     return con
 
 
+def _oracle_frame(sql):
+    """One oracle's result as pandas, computed in a child process."""
+    con = _fresh_duck()
+    try:
+        return con.sql(sql).df()
+    finally:
+        con.close()
+
+
+class _OracleResult:
+    """The part of a DuckDB relation compare_frames reads: ``.df()``."""
+
+    def __init__(self, pdf):
+        self._pdf = pdf
+
+    def df(self):
+        return self._pdf
+
+
 def test_queries_match_oracles(spark, entry_mod):
+    """Each oracle runs in a fresh child process.  DuckDB's allocator
+    keeps what a heavy oracle took after ``close()`` (about 9 GB for
+    ``closed_set_normalize``); in the test process that memory stayed
+    resident for the rest of the suite, which made the test process the
+    OOM killer's pick.  A child that dies fails this test loudly
+    (BrokenProcessPool) and the suite goes on."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert set(oracles) <= set(qs)
-    con, used = None, 0
-    for name, sql in oracles.items():
-        if con is None or used >= 10:
-            if con is not None:
-                con.close()
-            con, used = _fresh_duck(), 0
-        sdf = qs[name](spark, SF_ORACLE)
-        rel = con.sql(sql)
-        compare_frames(sdf, rel)
-        used += 1
-    if con is not None:
-        con.close()
+    with ProcessPoolExecutor(
+        max_workers=1,
+        mp_context=multiprocessing.get_context("spawn"),
+        max_tasks_per_child=1,
+    ) as pool:
+        for name, sql in oracles.items():
+            sdf = qs[name](spark, SF_ORACLE)
+            compare_frames(sdf, _OracleResult(pool.submit(_oracle_frame, sql).result()))
 
 
 def test_rows_only_queries_run(spark, entry_mod):

@@ -260,3 +260,30 @@ def test_truncated_entropy_stream_raises_valueerror_not_indexerror():
                 data_start + (len(buf) - data_start) // 2):
         with pytest.raises(ValueError):
             decode_jpeg(buf[:cut] + b"\xff\xd9")
+
+
+def test_huffman_tables_cached_per_dht(monkeypatch):
+    """Streams with two different DHT tables, decoded interleaved through
+    the memoized lookup tables, equal the decodes with freshly built
+    tables; each distinct table is built once."""
+    from s2geometry_spark.kernels import jpegcodec as jc
+
+    pa, pb = gen_pixels(5, 24, 16), gen_pixels(6, 16, 24)
+    std = encode_jpeg(pa, 90)
+    with monkeypatch.context() as m:
+        # same code lengths, symbols reassigned: a different valid table
+        m.setattr(jc, "AC_LUMA_SPEC", (jc.AC_LUMA_SPEC[0], jc.AC_LUMA_SPEC[1][::-1]))
+        m.setattr(jc, "DC_CHROMA_SPEC", (jc.DC_CHROMA_SPEC[0], jc.DC_CHROMA_SPEC[1][::-1]))
+        alt = encode_jpeg(pb, 90)
+    streams = [std, alt, std, alt]
+    jc._huff_lut.cache_clear()
+    cached = [decode_jpeg(s) for s in streams]
+    assert jc._huff_lut.cache_info().misses == 6  # 4 + the 2 changed
+    with monkeypatch.context() as m:
+        m.setattr(jc, "_huff_lut", jc._huff_lut.__wrapped__)
+        fresh = [decode_jpeg(s) for s in streams]
+    for got, want in zip(cached, fresh):
+        assert np.array_equal(got, want)
+    # the tables only change the entropy coding, never the coefficients
+    assert alt != encode_jpeg(pb, 90)
+    assert np.array_equal(cached[3], decode_jpeg(encode_jpeg(pb, 90)))

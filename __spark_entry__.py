@@ -105,6 +105,13 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _parquet_rows(sf_dir: str, name: str) -> int:
+    """Row count of a table from its parquet footers (no Spark job)."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+
+
 def _order_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders -> deterministic sphere points with leaf cell ids (biased)."""
     orders = _load(spark, sf_dir, "orders")
@@ -441,15 +448,16 @@ def _customer_queries(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
 
 def q_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closest-edge kNN join (S2ClosestEdgeQuery): customer-derived query
-    points x orders-derived short edges; staged ring expansion with the
-    pinned point-to-arc chord^2 kernel (bit-exact DuckDB oracle)."""
+    points x orders-derived short edges; knn's ring expansion (one edge
+    scan per level against the collected query side) with the pinned
+    point-to-arc chord^2 kernel (bit-exact DuckDB oracle)."""
     from s2geometry_spark.operators.knn_edges import closest_edges_join
 
     edges = _edges_df(spark, sf_dir, "orders", "o_orderkey", _EDGE_A_KEY2, "eid", "e")
     q = _customer_queries(spark, sf_dir, _QUERY_KEY)
-    # sizing hint from parquet metadata (one edge per orders row): skips
-    # the dedicated count job that would re-run the edge-derivation kernel
-    n_edges = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    # sizing hint from the parquet footers (one edge per orders row): no
+    # Spark job, and no count that would re-run the edge-derivation kernel
+    n_edges = _parquet_rows(sf_dir, "orders")
     out = closest_edges_join(spark, edges, q, KNN_K, num_stages=2, n_edges=n_edges)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -475,13 +483,13 @@ def _dist_to_boundary_oracle() -> str:
 def q_project_to_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closest-point projection onto the nearest edge
     (S2ClosestEdgeQuery::Project): customer query points x orders edges;
-    the k=1 staged join picks the edge, the pinned projection kernel
-    computes the point (bit-exact DuckDB replay)."""
+    the k=1 ring-expansion join picks the edge, the pinned projection
+    kernel computes the point (bit-exact DuckDB replay)."""
     from s2geometry_spark.operators.knn_edges import project_to_closest_edges
 
     edges = _edges_df(spark, sf_dir, "orders", "o_orderkey", _EDGE_A_KEY2, "eid", "e")
     q = _customer_queries(spark, sf_dir, _QUERY_KEY)
-    n_edges = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    n_edges = _parquet_rows(sf_dir, "orders")
     return project_to_closest_edges(spark, edges, q, n_edges=n_edges)
 
 
@@ -5435,9 +5443,9 @@ def q_composite_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2RegionUnion / S2RegionIntersection (s2region_union.h:36-73,
     s2region_intersection.h:37-76) composed at the covering level:
     per unordered (cap|loop) fixture pair and mode in {union,
-    intersection, difference}, the distributed S2CellUnion set-op
-    (applyInPandas over pair groups) followed by the broadcast
-    cell-iterator point join; n_points per composite, zeros included.
+    intersection, difference}, the S2CellUnion set-op composed on the
+    driver, then one points scan counting cell hits per composite
+    (contains_join._cell_hits); n_points per composite, zeros included.
     The oracle replays membership as boolean algebra over the MEMBER
     coverings — an independent check of the set-op kernels."""
     from s2geometry_spark.operators.region_algebra import composite_region_join

@@ -104,6 +104,18 @@ def _edge_coverings_flat(
     return owner, cell
 
 
+def _mixed_group(keys_u64: np.ndarray, group_level: int) -> np.ndarray:
+    """Cogroup key (biased) for MIXED-LEVEL cell keys: fine keys group
+    under their group-level parent, keys at/above the group level group
+    as themselves — both sides compute the same value for a matching
+    key, so exact-key matches always co-locate."""
+    lv = cellid.level(keys_u64)
+    g = np.where(
+        lv <= group_level, keys_u64, cellid.parent(keys_u64, group_level)
+    )
+    return cellid.to_biased(g.astype(np.uint64))
+
+
 def _terms_flat(owner: np.ndarray, cell: np.ndarray, side: str):
     """Vectorized term emission for a flat covering batch.
 
@@ -186,8 +198,6 @@ def _term_table(
                 src = A0 if i < 3 else A1
                 out[cc] = src[o[keep], i % 3]
             if group_level is not None:
-                from .knn_edges import _mixed_group
-
                 out["g"] = _mixed_group(
                     cellid.from_biased(out["term_cell"].to_numpy(np.int64)),
                     group_level,
@@ -261,7 +271,7 @@ def edge_crossing_join_cogrouped(
     """edge_crossing_join without MATERIALIZING the candidate join.
 
     The two term tables are COGROUPED on a coarse cell prefix
-    (knn_edges._mixed_group) instead of equi-joined: each side's term
+    (_mixed_group) instead of equi-joined: each side's term
     rows cross the Arrow boundary ONCE per group, the exact
     (term_cell, is_covering) match runs as a vectorized searchsorted
     range join in-group, and the crossing kernel + pair dedup run on the

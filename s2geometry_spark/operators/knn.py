@@ -1,22 +1,30 @@
-"""k-nearest-neighbor join via cell-neighbor ring expansion, one scan per
+"""k-nearest-neighbor joins via cell-neighbor ring expansion, one scan per
 level.
 
 Re-expression of S2ClosestPointQuery's best-first cell search
 (s2closest_point_query_base.h:482-769) as dataflow.  The query side is
 small, so it is collected once; each ring level is then ONE mapInPandas
-scan over the points against a broadcast block table.  A point looks up,
-by its cell at the level, the queries whose 3x3 neighbor block holds it,
-and each partition emits those queries' local top-k in (dist, pid) order
-with the pinned ((dx²+dy²)+dz²) chord² — bit-identical to the SQL
-oracles.  The driver merges the partial lists.
+scan over the indexed rows against a broadcast block table.  A row looks
+up the queries whose 3x3 neighbor block at the level it touches, and
+each partition emits those queries' local top-k in (dist, id) order; the
+driver merges the partial lists.
+
+The loop (``_ring_join``) is shared by two callers that differ only in
+how a row finds its blocks and how it is scored:
+
+* ``knn_join`` (points): the row's cell at the level, with the pinned
+  ((dx²+dy²)+dz²) chord² — bit-identical to the SQL oracles;
+* ``knn_edges.closest_edges_join`` (S2ClosestEdgeQuery): the edge's
+  covering cells, range-tested against the block cells, with the pinned
+  point-to-arc chord².
 
 A query is *certified* at a level when it has k candidates and its k-th
-distance is smaller than the minimum possible distance to any point
+distance is smaller than the minimum possible distance to any row
 outside its 3x3 block — the same admissible lower bound the reference's
 queue pruning uses (S2Cell::GetDistance / kMinWidth,
 s2closest_point_query_base.h:556-560).  Uncertified queries escalate to a
 coarser level (64x the area); whatever remains after the last level is
-scanned against every point (typically none).  Nothing is cached.
+scanned against every row (typically none).  Nothing is cached.
 """
 
 from __future__ import annotations
@@ -119,16 +127,20 @@ def _block_table(cells: np.ndarray, level: int):
 
 def _every_point_table(n: int):
     """Block table at level 0 whose six faces hold every one of ``n``
-    queries: the scan then sees every point as a candidate."""
+    queries: the scan then sees every row as a candidate."""
     qi = np.tile(np.arange(n, dtype=np.int64), 6)
     return cellid.from_face(np.arange(6)), np.arange(7, dtype=np.int64) * n, qi
 
 
 def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
-    """The first k rows of each query in (dist, pid) order, queries
-    ascending, with each row's 0-based rank."""
+    """The first k rows of each query in (dist, id) order, queries
+    ascending, with each row's 0-based rank.  A repeated (query, id) row
+    counts once: an edge can meet a query through two block cells."""
     order = np.lexsort((p, d, q))
     q, p, d = q[order], p[order], d[order]
+    if len(q):
+        new = np.r_[True, (q[1:] != q[:-1]) | (p[1:] != p[:-1])]
+        q, p, d = q[new], p[new], d[new]
     i = np.arange(len(q))
     first = np.r_[True, q[1:] != q[:-1]] if len(q) else np.empty(0, bool)
     rank = i - np.maximum.accumulate(np.where(first, i, 0))
@@ -136,54 +148,72 @@ def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
     return q[keep], p[keep], d[keep], rank[keep]
 
 
-def _scan(points: DataFrame, pid: str, Q: np.ndarray, table, level: int, k: int):
-    """One mapInPandas scan of ``points``: each point's level-``level``
-    parent finds, in the broadcast block ``table``, the queries (rows of
-    ``Q``) whose block holds it; each partition emits those queries'
-    local top-k.  Returns the driver-merged top-k ``(q, pid, d, rank)``."""
-    bc = points.sparkSession.sparkContext.broadcast((Q, *table))
+def _point_lookup(pdf: pd.DataFrame, keys: np.ndarray, level: int):
+    """``(row, block position, coordinates)`` of a points batch: each
+    point's level-``level`` parent, found among the block ``keys``."""
+    par = cellid.parent(cellid.from_biased(pdf["p_cell"].to_numpy(np.int64)), level)
+    pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
+    hit = np.nonzero(keys[pos] == par)[0]
+    return hit, pos[hit], pdf[["px", "py", "pz"]].to_numpy(np.float64)
+
+
+def _point_chord2(Q: np.ndarray, P: np.ndarray) -> np.ndarray:
+    """Row-wise pinned ((dx²+dy²)+dz²) chord², as the SQL oracles."""
+    dx = Q[:, 0] - P[:, 0]
+    dy = Q[:, 1] - P[:, 1]
+    dz = Q[:, 2] - P[:, 2]
+    return (dx * dx + dy * dy) + dz * dz
+
+
+# The two row kinds of the ring expansion, as ``(lookup, chord2)``:
+# ``lookup(pdf, keys, level)`` returns a batch's distinct (row, block
+# position) pairs against the sorted block cells ``keys`` plus the
+# batch's coordinate matrix; ``chord2(Q, X)`` scores query points
+# against those coordinates row-wise.
+POINTS = (_point_lookup, _point_chord2)
+
+
+def _scan(rows: DataFrame, kind, Q: np.ndarray, table, level: int, k: int):
+    """One mapInPandas scan of ``rows`` (id column first): the ``kind``'s
+    lookup maps each batch to its (row, block) pairs; every pair meets
+    the queries (rows of ``Q``) that the broadcast block ``table`` lists
+    for the block, scored by the kind's chord².  Each partition emits
+    those queries' local top-k.  Returns the driver-merged top-k
+    ``(q, id, d, rank)``."""
+    bc = rows.sparkSession.sparkContext.broadcast((Q, *table))
+    rid = rows.columns[0]
+    lookup, chord2 = kind
 
     def kern(batches):
         Q, keys, offs, qi = bc.value
         acc = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
         for pdf in batches:
-            par = cellid.parent(
-                cellid.from_biased(pdf["p_cell"].to_numpy(np.int64)), level
-            )
-            pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
-            hit = np.nonzero(keys[pos] == par)[0]
-            lo = offs[pos[hit]]
-            cnt = offs[pos[hit] + 1] - lo
+            if len(pdf) == 0:
+                continue
+            hit, pos, X = lookup(pdf, keys, level)
+            lo = offs[pos]
+            cnt = offs[pos + 1] - lo
             cum = np.cumsum(cnt)
-            P = pdf[["px", "py", "pz"]].to_numpy(np.float64)
-            ids = pdf[pid].to_numpy(np.int64)
+            ids = pdf[rid].to_numpy(np.int64)
             s = 0
             while s < len(hit):
                 budget = cum[s] - cnt[s] + _PAIRS_PER_CHUNK
                 e = max(int(np.searchsorted(cum, budget, "right")), s + 1)
                 c = cnt[s:e]
-                pi = np.repeat(hit[s:e], c)
+                ri = np.repeat(hit[s:e], c)
                 off = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
                 q = qi[np.repeat(lo[s:e], c) + off]
-                dx = Q[q, 0] - P[pi, 0]
-                dy = Q[q, 1] - P[pi, 1]
-                dz = Q[q, 2] - P[pi, 2]
-                d = (dx * dx + dy * dy) + dz * dz
                 acc = _topk(
                     np.concatenate([acc[0], q]),
-                    np.concatenate([acc[1], ids[pi]]),
-                    np.concatenate([acc[2], d]),
+                    np.concatenate([acc[1], ids[ri]]),
+                    np.concatenate([acc[2], chord2(Q[q], X[ri])]),
                     k,
                 )[:3]
                 s = e
         yield pd.DataFrame({"q": acc[0], "p": acc[1], "d": acc[2]})
 
     try:
-        part = (
-            points.select(pid, "px", "py", "pz", "p_cell")
-            .mapInPandas(kern, "q long, p long, d double")
-            .toPandas()
-        )
+        part = rows.mapInPandas(kern, "q long, p long, d double").toPandas()
     finally:
         bc.unpersist()
     return _topk(
@@ -191,6 +221,88 @@ def _scan(points: DataFrame, pid: str, Q: np.ndarray, table, level: int, k: int)
         part["p"].to_numpy(np.int64),
         part["d"].to_numpy(np.float64),
         k,
+    )
+
+
+def _ring_join(
+    spark: SparkSession,
+    rows: DataFrame,
+    queries: DataFrame,
+    k: int,
+    start_level: int,
+    num_stages: int,
+    kind,
+    qid: str = "qid",
+) -> DataFrame:
+    """The ring expansion shared by ``knn_join`` and the closest-edge join.
+
+    ``rows`` is the scanned side, id column first, of row ``kind`` (see
+    ``POINTS``).  queries: (qid, qx, qy, qz, q_cell[biased leaf]).
+    Returns (qid, rank, id, dist_chord2), ranked by (dist_chord2, id).
+
+    Levels run at start_level, start_level-3, ... each one scan of
+    ``rows`` against the still-uncertified queries; the (rare) remainder
+    is scanned against every row.  The query side is collected to the
+    driver.
+    """
+    rid = rows.columns[0]
+    schema = f"{qid} long, rank int, {rid} long, dist_chord2 double"
+    qdf = queries.select(qid, "qx", "qy", "qz", "q_cell").toPandas()
+    q_ids = qdf[qid].to_numpy(np.int64)
+    Q = qdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+    cells = cellid.from_biased(qdf["q_cell"].to_numpy(np.int64))
+    remaining = np.arange(len(qdf))
+    none = np.empty(0, np.int64)
+    out = [(none, none, none, np.empty(0))]
+
+    def emit(rem, q, p, d, rank):
+        out.append((q_ids[rem[q]], rank + 1, p, d))
+
+    level = start_level
+    for _ in range(num_stages):
+        if level < 1 or len(remaining) == 0:
+            break
+        Qr = Q[remaining]
+        q, p, d, rank = _scan(
+            rows, kind, Qr, _block_table(cells[remaining], level), level, k
+        )
+        # certified: k candidates, the k-th nearer than anything outside
+        # the block (own-cell boundary distance + ring width)
+        n = np.bincount(q, minlength=len(remaining))
+        dmax = np.full(len(remaining), -np.inf)
+        np.maximum.at(dmax, q, d)
+        cert = (n >= k) & (dmax < query_bound_chord2(Qr, cells[remaining], level))
+        keep = cert[q]
+        emit(remaining, q[keep], p[keep], d[keep], rank[keep])
+        remaining = remaining[~cert]
+        level -= 3
+
+    # the remainder is scanned against every row — LOUDLY capped:
+    # `remaining x rows` is the one plan here that does not survive a
+    # 100x scale-up, so refuse it for more than a trickle of queries
+    # (same contract as ann.cosine_topk_bruteforce's MAX_QUERIES).
+    if len(remaining) > MAX_BRUTE_FORCE_QUERIES:
+        raise ValueError(
+            f">{MAX_BRUTE_FORCE_QUERIES} queries ({len(remaining)}) left "
+            f"uncertified after {num_stages} stages; a scan against the "
+            "full table at this volume is a scale cliff. Increase "
+            "num_stages or lower start_level so the ring levels certify "
+            "them."
+        )
+    if len(remaining):
+        table = _every_point_table(len(remaining))
+        emit(remaining, *_scan(rows, kind, Q[remaining], table, 0, k))
+    cols = [np.concatenate(c) for c in zip(*out)]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                qid: cols[0].astype(np.int64),
+                "rank": cols[1].astype(np.int32),
+                rid: cols[2].astype(np.int64),
+                "dist_chord2": cols[3].astype(np.float64),
+            }
+        ),
+        schema,
     )
 
 
@@ -211,69 +323,18 @@ def knn_join(
     Returns (qid, rank, pid, dist_chord2), ranked by (dist_chord2, pid).
 
     Levels run at start_level, start_level-3, ... each one scan of the
-    points against the still-uncertified queries; the (rare) remainder
-    is scanned against every point.  The query side is collected to the
-    driver.
+    points against the still-uncertified queries (``_ring_join``); a
+    point meets the queries whose block holds its cell at the level.
     """
-    schema = f"{qid} long, rank int, {pid} long, dist_chord2 double"
-    qdf = queries.select(qid, "qx", "qy", "qz", "q_cell").toPandas()
-    q_ids = qdf[qid].to_numpy(np.int64)
-    Q = qdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-    cells = cellid.from_biased(qdf["q_cell"].to_numpy(np.int64))
-    remaining = np.arange(len(qdf))
-    none = np.empty(0, np.int64)
-    out = [(none, none, none, np.empty(0))]
-
-    def emit(rem, q, p, d, rank):
-        out.append((q_ids[rem[q]], rank + 1, p, d))
-
-    level = start_level
-    for _ in range(num_stages):
-        if level < 1 or len(remaining) == 0:
-            break
-        Qr = Q[remaining]
-        q, p, d, rank = _scan(
-            points, pid, Qr, _block_table(cells[remaining], level), level, k
-        )
-        # certified: k candidates, the k-th nearer than anything outside
-        # the block (own-cell boundary distance + ring width)
-        n = np.bincount(q, minlength=len(remaining))
-        dmax = np.full(len(remaining), -np.inf)
-        np.maximum.at(dmax, q, d)
-        cert = (n >= k) & (dmax < query_bound_chord2(Qr, cells[remaining], level))
-        keep = cert[q]
-        emit(remaining, q[keep], p[keep], d[keep], rank[keep])
-        remaining = remaining[~cert]
-        level -= 3
-
-    # the remainder is scanned against the full points table — LOUDLY
-    # capped: `remaining x points` is the one plan here that does not
-    # survive a 100x scale-up, so refuse it for more than a trickle of
-    # queries (same contract as ann.cosine_topk_bruteforce's MAX_QUERIES).
-    if len(remaining) > MAX_BRUTE_FORCE_QUERIES:
-        raise ValueError(
-            f"knn_join: >{MAX_BRUTE_FORCE_QUERIES} queries "
-            f"({len(remaining)}) left uncertified after {num_stages} "
-            "stages; a scan against the full points table at this "
-            "volume is a scale cliff. Increase num_stages or lower "
-            "start_level so the ring levels certify them."
-        )
-    if len(remaining):
-        emit(
-            remaining,
-            *_scan(points, pid, Q[remaining], _every_point_table(len(remaining)), 0, k),
-        )
-    cols = [np.concatenate(c) for c in zip(*out)]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                qid: cols[0].astype(np.int64),
-                "rank": cols[1].astype(np.int32),
-                pid: cols[2].astype(np.int64),
-                "dist_chord2": cols[3].astype(np.float64),
-            }
-        ),
-        schema,
+    return _ring_join(
+        spark,
+        points.select(pid, "px", "py", "pz", "p_cell"),
+        queries,
+        k,
+        start_level,
+        num_stages,
+        POINTS,
+        qid,
     )
 
 

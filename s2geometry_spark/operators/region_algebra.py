@@ -19,16 +19,15 @@ Because all three are LEAF-EXACT set operations on coverage, membership
 of a level-30 point in the composed union obeys pure boolean algebra
 over the member coverings — which is what the DuckDB oracle replays
 (in-A OR/AND/AND-NOT in-B over per-level literal IN-lists), making the
-oracle an independent check of the distributed set-op kernels
+oracle an independent check of the set-op kernels
 themselves, not a replay of them.
 
-Scale shape: the composition runs as ONE applyInPandas over (pair,
-mode) groups of a few dozen covering cells each — shuffle size is
-O(pairs x max_cells), never the fact table.  The point-membership join
-is the S2CellIteratorJoin shape:
-one scan of the points exploding (level, parent) pairs for only the
-levels present in any composed covering, one broadcast equi-join, and a
-count — normalized unions are disjoint, so no dedup exists anywhere.
+Scale shape: the coverings arrive as a driver dict of a few dozen cells
+each, so every (pair, mode) is composed on the driver.  The point
+membership count is then ONE scan of the points' cells
+(contains_join._cell_hits against a sorted table of every composed
+covering, the S2CellIteratorJoin shape) summing hits per composite — no
+explode, no join, no shuffle, nothing cached.
 """
 
 from __future__ import annotations
@@ -38,44 +37,25 @@ import itertools
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernels import cellid, cellunion
-from .. import functions as s2f
+from .contains_join import _cell_hits, _cell_table
 
 MODES = ("union", "intersection", "difference")
 
 
-def _compose_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    rid_a, rid_b, mode = key
-    a = cellid.from_biased(
-        pdf.loc[pdf["side"] == "a", "cell"].to_numpy(np.int64)
-    )
-    b = cellid.from_biased(
-        pdf.loc[pdf["side"] == "b", "cell"].to_numpy(np.int64)
-    )
+def _compose(a: np.ndarray, b: np.ndarray, mode: str) -> np.ndarray:
     if mode == "union":
-        comp = cellunion.normalize(cellunion.union(a, b))
-    elif mode == "intersection":
-        comp = cellunion.intersection(a, b)
-    else:
-        comp = cellunion.difference(a, b)
-    return pd.DataFrame(
-        {
-            "rid_a": rid_a,
-            "rid_b": rid_b,
-            "mode": mode,
-            "cell": cellid.to_biased(comp).astype(np.int64),
-            "level": cellid.level(comp).astype(np.int32),
-        }
-    )
+        return cellunion.normalize(cellunion.union(a, b))
+    if mode == "intersection":
+        return cellunion.intersection(a, b)
+    return cellunion.difference(a, b)
 
 
 def composite_region_join(
     spark: SparkSession,
     points: DataFrame,
     coverings: dict[str, "np.ndarray"],
-    point_id: str = "pid",
     cell: str = "cell",
     modes: tuple[str, ...] = MODES,
 ) -> DataFrame:
@@ -83,57 +63,35 @@ def composite_region_join(
     the COMPOSED region's covering.  Returns (rid_a, rid_b, mode,
     n_points) for every pair x mode, zeros included (an empty
     intersection is a result, not an absence)."""
-    rows: list[tuple[str, str, str, str, int]] = []
-    for ra, rb in itertools.combinations(sorted(coverings), 2):
-        for mode in modes:
-            for side, rid in (("a", ra), ("b", rb)):
-                arr = np.asarray(coverings[rid], np.uint64)
-                for c in cellid.to_biased(arr).tolist():
-                    rows.append((ra, rb, mode, side, int(c)))
-    sides = spark.createDataFrame(
-        rows, schema="rid_a string, rid_b string, mode string, side string, cell long"
-    )
-    composed = (
-        sides.groupBy("rid_a", "rid_b", "mode")
-        .applyInPandas(
-            _compose_group,
-            schema="rid_a string, rid_b string, mode string, cell long, level int",
-        )
-        .persist()
-    )
-    # the distinct composed levels: a bounded scalar collect (<= 31 ints)
-    levels = sorted(
-        r.level for r in composed.select("level").distinct().collect()
-    )
-    all_pairs = sides.select("rid_a", "rid_b", "mode").distinct()
-    if not levels:  # every composition empty — all-zero counts
-        return all_pairs.select(
-            "rid_a", "rid_b", "mode", F.lit(0).cast("long").alias("n_points")
-        )
-    parents = F.array(
-        *[
-            F.struct(
-                F.lit(lv).cast("int").alias("level"),
-                s2f.parent_expr(cell, lv).alias("pcell"),
+    keys = [
+        (ra, rb, mode)
+        for ra, rb in itertools.combinations(sorted(coverings), 2)
+        for mode in modes
+    ]
+    table = _cell_table(
+        [
+            _compose(
+                np.asarray(coverings[ra], np.uint64),
+                np.asarray(coverings[rb], np.uint64),
+                mode,
             )
-            for lv in levels
+            for ra, rb, mode in keys
         ]
     )
-    exploded = points.select(point_id, F.explode(parents).alias("p")).select(
-        point_id,
-        F.col("p.level").alias("level"),
-        F.col("p.pcell").alias("cell"),
-    )
-    counts = (
-        exploded.join(F.broadcast(composed), ["level", "cell"])
-        .groupBy("rid_a", "rid_b", "mode")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-    )
-    return all_pairs.join(counts, ["rid_a", "rid_b", "mode"], "left").select(
-        "rid_a",
-        "rid_b",
-        "mode",
-        F.coalesce(F.col("n_points"), F.lit(0)).cast("long").alias("n_points"),
+
+    def scan(batches):
+        n = np.zeros(len(keys), np.int64)
+        for pdf in batches:
+            leaf = cellid.from_biased(pdf[cell].to_numpy(np.int64))
+            n += np.bincount(_cell_hits(leaf, table)[1], minlength=len(keys))
+        yield pd.DataFrame({"g": np.arange(len(keys)), "n": n})
+
+    part = points.select(cell).mapInPandas(scan, "g long, n long").toPandas()
+    n = np.zeros(len(keys), np.int64)
+    np.add.at(n, part["g"].to_numpy(np.int64), part["n"].to_numpy(np.int64))
+    return spark.createDataFrame(
+        pd.DataFrame(keys, columns=["rid_a", "rid_b", "mode"]).assign(n_points=n),
+        "rid_a string, rid_b string, mode string, n_points long",
     )
 
 

@@ -169,3 +169,21 @@ def test_composite_region_join_matches_boolean_membership(spark):
         assert got[(ra, rb, "difference")] == int(np.sum(in_a & ~in_b))
     # the disjoint pair's intersection must be present as an explicit 0
     assert got[("a", "c", "intersection")] == 0 or got[("b", "c", "intersection")] == 0
+
+
+def test_composite_region_join_leaves_no_persistent_rdds(spark):
+    from s2geometry_spark.operators.region_algebra import composite_region_join
+
+    leaf = cellid.from_latlng_degrees(np.array([10.0, 20.0, 30.0]), np.array([10.0, 20.0, 30.0]))
+    covs = {
+        "a": cellunion.normalize(cellid.parent(leaf[:2], 5)),
+        "b": cellunion.normalize(cellid.parent(leaf[1:], 6)),
+    }
+    pts = spark.createDataFrame(
+        [(i, int(c)) for i, c in enumerate(cellid.to_biased(leaf).tolist())],
+        "pid long, cell long",
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    composite_region_join(spark, pts, covs).toPandas()
+    assert jsc.getPersistentRDDs().size() == before

@@ -54,35 +54,35 @@ def test_point_edge_max_chord2_antipodal_identity():
     assert np.allclose(mx, d, atol=1e-4)
 
 
+def _unit(X):
+    return X / np.linalg.norm(X, axis=1)[:, None]
+
+
+def _edges_df(spark, A, B):
+    return spark.createDataFrame(
+        [(i, *map(float, a), *map(float, b)) for i, (a, b) in enumerate(zip(A, B))],
+        "eid long, e0x double, e0y double, e0z double, "
+        "e1x double, e1y double, e1z double",
+    )
+
+
+def _queries_df(spark, Q):
+    qc = cellid.to_biased(cellid.from_xyz(Q[:, 0], Q[:, 1], Q[:, 2]))
+    return spark.createDataFrame(
+        [(int(i), *map(float, Q[i]), int(qc[i])) for i in range(len(Q))],
+        "qid long, qx double, qy double, qz double, q_cell long",
+    )
+
+
 @pytest.fixture(scope="module")
 def edge_tables(spark):
     """Deterministic points + short edges scattered globally."""
     rng = np.random.RandomState(42)
     n_e, n_q = 400, 120
-    P = rng.randn(n_e, 3)
-    P /= np.linalg.norm(P, axis=1)[:, None]
-    D = rng.randn(n_e, 3)
-    E1 = P + 0.05 * D
-    E1 /= np.linalg.norm(E1, axis=1)[:, None]
-    edges = spark.createDataFrame(
-        [
-            (int(i), *map(float, P[i]), *map(float, E1[i]))
-            for i in range(n_e)
-        ],
-        "eid long, e0x double, e0y double, e0z double, "
-        "e1x double, e1y double, e1z double",
-    )
-    Q = rng.randn(n_q, 3)
-    Q /= np.linalg.norm(Q, axis=1)[:, None]
-    qc = cellid.to_biased(cellid.from_xyz(Q[:, 0], Q[:, 1], Q[:, 2]))
-    queries = spark.createDataFrame(
-        [
-            (int(i), float(Q[i, 0]), float(Q[i, 1]), float(Q[i, 2]), int(qc[i]))
-            for i in range(n_q)
-        ],
-        "qid long, qx double, qy double, qz double, q_cell long",
-    )
-    return edges, queries
+    P = _unit(rng.randn(n_e, 3))
+    E1 = _unit(P + 0.05 * rng.randn(n_e, 3))
+    Q = _unit(rng.randn(n_q, 3))
+    return _edges_df(spark, P, E1), _queries_df(spark, Q)
 
 
 def _brute(spark, edges, queries, k):
@@ -185,53 +185,111 @@ def test_project_to_closest_edges(spark, edge_tables):
         assert (r.px, r.py, r.pz) == (P[0], P[1], P[2])
 
 
-def test_empty_arrow_batch_emits_full_schema():
-    """Regression (r3 ADVICE): a zero-row Arrow batch must still yield a
-    frame with every declared schema column — including each g_<level>
-    group key — or Spark's Arrow serializer crashes on the column-count
-    mismatch.  Drives both mapInPandas generators directly."""
-    import pandas as pd
+def _sorted(df):
+    return sorted((r.qid, r.rank, r.eid, r.dist_chord2) for r in df.collect())
 
-    from s2geometry_spark.operators.knn_edges import (
-        E_COLS,
-        _edge_cover_batches,
-        _edge_cover_schema,
-        _point_keys_flat,
+
+def _assert_matches_brute(spark, edges, queries, k, **kw):
+    got = _sorted(closest_edges_join(spark, edges, queries, k, **kw))
+    assert got == _sorted(_brute(spark, edges, queries, k))
+
+
+def test_duplicate_edges_tie_on_eid_at_rank_k(spark, edge_tables):
+    """Three copies of a quarter of the edges: equal distances straddle
+    rank k, and the tie breaks on eid as in the brute-force window."""
+    edges, queries = edge_tables
+    base = edges.where("eid < 100")
+    dup = edges.unionByName(base.withColumn("eid", F.col("eid") + 1000)).unionByName(
+        base.withColumn("eid", F.col("eid") + 2000)
+    )
+    k = 4
+    wide = _sorted(_brute(spark, dup, queries, k + 1))
+    d = {(q, r): dist for q, r, _, dist in wide}
+    assert any(d.get((q, k)) == d.get((q, k + 1)) for q, _, _, _ in wide)
+    _assert_matches_brute(spark, dup, queries, k, start_level=6, num_stages=2)
+
+
+def test_remainder_scan_matches_bruteforce(spark, edge_tables):
+    """Level 20 certifies no query, so every one takes the scan against
+    the whole edge table."""
+    edges, queries = edge_tables
+    _assert_matches_brute(spark, edges, queries, 3, start_level=20, num_stages=1)
+
+
+def test_fine_start_certifies_at_second_level(spark, edge_tables, monkeypatch):
+    """From level 5, finer than the auto level for 400 edges, the first
+    level leaves queries uncertified and the second (level 2) certifies
+    all of them: with no remainder allowed, one level raises and two
+    match the brute force."""
+    from s2geometry_spark.operators import knn
+
+    edges, queries = edge_tables
+    monkeypatch.setattr(knn, "MAX_BRUTE_FORCE_QUERIES", 0)
+    with pytest.raises(ValueError, match="left uncertified"):
+        closest_edges_join(spark, edges, queries, 1, start_level=5, num_stages=1)
+    _assert_matches_brute(spark, edges, queries, 1, start_level=5, num_stages=2)
+
+
+def test_long_edges_cover_coarser_than_the_level(spark):
+    """Edges of about 0.5 rad have covering cells coarser than the stage
+    level: such a cell contains block cells rather than lying in one."""
+    from s2geometry_spark.operators.edge_join import _edge_coverings_flat
+
+    rng = np.random.RandomState(5)
+    A = _unit(rng.randn(60, 3))
+    B = _unit(A + 0.5 * _unit(rng.randn(60, 3)))
+    _, cells = _edge_coverings_flat(A, B)
+    assert cellid.level(cells).max() < 6
+    queries = _queries_df(spark, _unit(rng.randn(40, 3)))
+    _assert_matches_brute(
+        spark, _edges_df(spark, A, B), queries, 2, start_level=6, num_stages=2
     )
 
-    stage_levels = [4, 6]
-    declared = [
-        f.split()[0] for f in _edge_cover_schema(stage_levels).split(", ")
-    ]
-    empty_in = pd.DataFrame({c: pd.Series(dtype="float64") for c in E_COLS})
-    empty_in.insert(0, "eid", pd.Series(dtype="int64"))
-    outs = list(_edge_cover_batches(stage_levels)(iter([empty_in])))
-    assert len(outs) == 1
-    assert list(outs[0].columns) == declared
-    assert len(outs[0]) == 0
 
-    # non-empty path produces the same column set (order-insensitive:
-    # Spark's Arrow writer matches by name)
-    one = pd.DataFrame(
-        {
-            "eid": [1],
-            "e0x": [1.0], "e0y": [0.0], "e0z": [0.0],
-            "e1x": [0.0], "e1y": [1.0], "e1z": [0.0],
-        }
-    )
-    outs2 = list(_edge_cover_batches(stage_levels)(iter([one])))
-    assert sorted(outs2[0].columns) == sorted(declared)
+def test_remainder_cap_raises(spark, edge_tables, monkeypatch):
+    from s2geometry_spark.operators import knn
 
-    # point-key generator: empty batch keeps qid/qx/qy/qz/q_cell + key + g
-    q_empty = pd.DataFrame(
-        {
-            "qid": pd.Series(dtype="int64"),
-            "qx": pd.Series(dtype="float64"),
-            "qy": pd.Series(dtype="float64"),
-            "qz": pd.Series(dtype="float64"),
-            "q_cell": pd.Series(dtype="int64"),
-        }
-    )
-    pouts = list(_point_keys_flat(6, 4, 2)(iter([q_empty])))
-    assert len(pouts) == 1
-    assert list(pouts[0].columns) == ["qid", "qx", "qy", "qz", "q_cell", "key", "g"]
+    edges, queries = edge_tables
+    monkeypatch.setattr(knn, "MAX_BRUTE_FORCE_QUERIES", 0)
+    with pytest.raises(ValueError, match="left uncertified"):
+        closest_edges_join(spark, edges, queries, 3, start_level=20, num_stages=1)
+
+
+def test_empty_query_side_returns_schema(spark, edge_tables):
+    edges, queries = edge_tables
+    out = closest_edges_join(spark, edges, queries.limit(0), 3)
+    assert out.columns == ["qid", "rank", "eid", "dist_chord2"]
+    assert out.count() == 0
+
+
+def test_empty_edge_table(spark, edge_tables):
+    edges, queries = edge_tables
+    out = closest_edges_join(spark, edges.limit(0), queries, 3, start_level=6)
+    assert out.columns == ["qid", "rank", "eid", "dist_chord2"]
+    assert out.count() == 0
+
+
+def test_empty_partitions_in_the_scan(spark, edge_tables):
+    """Three edges over 8 partitions: most scan tasks see no rows and
+    must still emit the declared schema."""
+    edges, queries = edge_tables
+    few = edges.where("eid < 3").repartition(8)
+    _assert_matches_brute(spark, few, queries, 2, start_level=6, num_stages=2)
+
+
+def test_closest_edges_join_leaves_no_persistent_rdds(spark, edge_tables):
+    edges, queries = edge_tables
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    closest_edges_join(spark, edges, queries, 3).toPandas()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_project_to_closest_edges_leaves_no_persistent_rdds(spark, edge_tables):
+    from s2geometry_spark.operators.knn_edges import project_to_closest_edges
+
+    edges, queries = edge_tables
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    project_to_closest_edges(spark, edges, queries).toPandas()
+    assert jsc.getPersistentRDDs().size() == before

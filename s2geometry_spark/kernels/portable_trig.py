@@ -4,7 +4,7 @@ libm trig differs ACROSS ENGINES in the last ulp (measured here: ~20%
 of random inputs disagree between CPython's libm and DuckDB's sin/cos,
 ~10% for atan2), so any bit-hashed oracle column downstream of a trig
 call would go red on value-identical geometry.  Following the
-operators/text.ln_portable_sql recipe, these evaluate a fixed
+operators/sketch.ln_portable_sql recipe, these evaluate a fixed
 pinned-order polynomial using only +,-,*,/ and floor — operations every
 engine rounds identically under IEEE-754.
 
@@ -28,7 +28,7 @@ from __future__ import annotations
 import numpy as np
 
 # exponent-notation literals parse as DOUBLE on both engines (a bare
-# decimal literal parses as DECIMAL — see operators/text.py)
+# decimal literal parses as DECIMAL — see operators/sketch.py)
 _TWO_OVER_PI = 6.36619772367581382e-01
 _PI2_HI = 1.57079632679489656e00
 _PI2_LO = 6.12323399573676604e-17

@@ -1,9 +1,9 @@
 """Distributed connected components over near-duplicate pair lists.
 
-The dedup operators (minhash_lsh_pairs, simhash_near_pairs,
-phash_near_dup, embedding_near_dup) emit PAIRS; a training-data pipeline
-needs CLUSTERS — one keeper per transitively-connected group.  This is
-the canonical "connected components in MapReduce" step.
+Pair-emitting operators (image_dedup's pHash near-dup pairs, knn's
+DBSCAN neighbour pairs, the polyline and polygon assembly layers' edge
+lists) need CLUSTERS — one label per transitively-connected group.  This
+is the canonical "connected components in MapReduce" step.
 
 Algorithm: alternating large-star / small-star contraction (Kiveris et
 al., "Connected Components in MapReduce and Beyond", SoCC'14), which
@@ -219,67 +219,4 @@ reach(node, r) AS (
   SELECT reach.node, e.t FROM reach JOIN edges e ON e.s = reach.r
 )
 SELECT node AS doc_id, min(r) AS component_id FROM reach GROUP BY 1
-"""
-
-
-def canonical_keep(comp: DataFrame, scores: DataFrame) -> DataFrame:
-    """Canonical-representative selection per near-dup cluster — the
-    keep-rule half of corpus dedup (components tell you WHAT is
-    duplicated; this decides WHICH copy survives): keep the
-    highest-score member, ties broken by smallest doc_id.
-
-    ``comp``: (doc_id, component_id); ``scores``: (doc_id, quality).
-    One equi-join plus one hash aggregate (max over a (quality,
-    -doc_id) struct — no window, no per-component sort), so the reduce
-    is map-side combinable and skew-safe even when one cluster holds
-    millions of copies."""
-    j = comp.join(scores, "doc_id")
-    best = F.max(
-        F.struct(F.col("quality").alias("q"), (-F.col("doc_id")).alias("nd"))
-    ).alias("b")
-    return (
-        j.groupBy("component_id")
-        .agg(F.count("*").alias("n_members"), best)
-        .select(
-            "component_id",
-            "n_members",
-            (-F.col("b.nd")).alias("keep_doc_id"),
-            F.col("b.q").alias("keep_quality"),
-        )
-    )
-
-
-def canonical_oracle_sql(pairs_sql: str, scores_sql: str) -> str:
-    """components_oracle_sql's transitive closure composed with a
-    per-component argmax replayed as a window rank (a DIFFERENT
-    physical recipe from the engine's struct-max aggregate)."""
-    return f"""
-WITH RECURSIVE prs AS ({pairs_sql}),
-edges AS (
-  SELECT doc_a AS s, doc_b AS t FROM prs
-  UNION
-  SELECT doc_b, doc_a FROM prs
-),
-nodes AS (SELECT DISTINCT s AS node FROM edges),
-reach(node, r) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT reach.node, e.t FROM reach JOIN edges e ON e.s = reach.r
-),
-comp AS (SELECT node AS doc_id, min(r) AS component_id FROM reach GROUP BY 1),
-qual AS ({scores_sql}),
-joined AS (
-  SELECT c.component_id, c.doc_id, q.quality
-  FROM comp c JOIN qual q USING (doc_id)),
-ranked AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY component_id
-                            ORDER BY quality DESC, doc_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY component_id) AS n_members
-  FROM joined)
-SELECT CAST(component_id AS BIGINT) AS component_id,
-       CAST(n_members AS BIGINT) AS n_members,
-       CAST(doc_id AS BIGINT) AS keep_doc_id,
-       quality AS keep_quality
-FROM ranked WHERE rn = 1
 """

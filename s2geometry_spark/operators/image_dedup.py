@@ -1,12 +1,10 @@
 """Perceptual near-duplicate image detection: decode -> pHash ->
 exact Hamming-ball join (small radius) / banded Hamming join (generic).
 
-The LLM-training-data counterpart of the text dedup family
-(operators/dedup.py simhash_near_pairs) on the IMAGE axis: every image
-is decoded once, reduced to the 64-bit block-mean perceptual hash
-(kernels/imagecodec.phash64 — the same function that derives the
-geotag metadata at generation time), and near-duplicate pairs are found
-by joining hashes within Hamming distance ``max_dist``.
+Every image is decoded once, reduced to the 64-bit block-mean
+perceptual hash (kernels/imagecodec.phash64 — the same function that
+derives the geotag metadata at generation time), and near-duplicate
+pairs are found by joining hashes within Hamming distance ``max_dist``.
 
 Two candidate generators, picked by radius:
   * ``max_dist <= 2`` (the production dedup setting): contract identical
@@ -33,10 +31,8 @@ Scale shape (the whole point):
     blow-up left is the true duplicate multiplicity, which the clusters
     operator never materializes (star edges, not cliques).
 
-The banded-join mechanism itself is oracle-proven bit-exact by the
-``dedup_simhash`` entry query; what this operator adds is the binary
-decode front-end, which SQL cannot express — the entry query is
-therefore rows-only (like the other three image queries) and the
+The binary decode front-end cannot be expressed in SQL, so the entry
+query is rows-only (like the other three image queries) and the
 pairing guarantees are pytest-verified against a brute-force popcount
 over all pairs.
 """
@@ -232,8 +228,7 @@ def phash_near_dup_pairs(
         # the hash table feeds BOTH legs of the self-join (and is the
         # product of the only expensive step, the binary decode) —
         # persist the narrow (id, 8-byte hash) projection so the decode
-        # runs once, not per leg (the dedup_minhash_lsh recompute
-        # lesson, operators/dedup.py:262)
+        # runs once, not per leg
         pa = pa.persist(StorageLevel.MEMORY_AND_DISK)
     if images_b is None and max_dist <= 2:
         # one-table small-radius form: exact Hamming-ball join on the
@@ -353,7 +348,7 @@ def phash_dedup_clusters(
     0 loop edges instead of g(g-1)/2 — the same contraction a 100 TB
     run needs, where exact-duplicate multiplicity is the dominant skew.
     """
-    from .dedup import md5_h64
+    from .tiling import md5_h64
     from .graph import connected_components
 
     if (images is None) == (hashes is None):

@@ -21,13 +21,13 @@ through Add() assigns id k to the k-th DISTINCT canonical multi-set by
 first occurrence — so k is a pure function of the data: the number of
 distinct multi-sets whose first-referencing row precedes this set's
 first-referencing row.  That count is a rank over the (small,
-deduplicated) distinct-set table, which this operator computes with the
-same two-level distributed prefix sum as operators/text.pack_assign
-(BENCH.md §3: a global ORDER BY window is a one-partition scale cliff):
-distinct sets bucket by ``first_ref div RANK_BUCKET_W`` — an ORDERED
-RANGE partition of the row-id axis, so bucket-major order IS global
-first_ref order — each bucket ranks locally in parallel, and the tiny
-per-bucket totals become broadcast offsets.
+deduplicated) distinct-set table, which this operator computes with a
+two-level distributed prefix sum (BENCH.md §3: a global ORDER BY window
+is a one-partition scale cliff): distinct sets bucket by ``first_ref
+div RANK_BUCKET_W`` — an ORDERED RANGE partition of the row-id axis, so
+bucket-major order IS global first_ref order — each bucket ranks
+locally in parallel, and the tiny per-bucket totals become broadcast
+offsets.
 
 Scale shape: one hash agg over the multi-set rows (groupBy canonical
 key), windows only over the deduplicated distinct-set table, one

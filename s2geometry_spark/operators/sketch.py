@@ -19,8 +19,8 @@ estimator:
 The estimator (the only float arithmetic) is pinned portable:
 2^-M_j = 1.0 / (1::BIGINT << M_j) (exact), folded in register order,
 the empty-register mass V added last; alpha_m embedded as one literal;
-the small-range linear-counting branch E <= 5m/2 uses ln_portable
-(operators/text) on the rational m/V.  The 2^32 large-range branch is
+the small-range linear-counting branch E <= 5m/2 uses ln_portable_sql
+(below) on the rational m/V.  The 2^32 large-range branch is
 omitted: keys are 64-bit hashed and tile cardinalities here are far
 below 2^32 (documented, matching common implementations).
 
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import ln_portable_sql
+from .tiling import md5_h64, md5_h64_sql
 
 P_BITS = 8
 M_REGS = 1 << P_BITS  # 256
@@ -46,12 +46,48 @@ ALPHA = repr(0.7213 / (1.0 + 1.079 / M_REGS))
 _W_MASK = (1 << 56) - 1
 
 
+# ---------- portable natural log (Spark == DuckDB, bit-exact) ----------
+#
+# libm log differs between the JVM and DuckDB in the last ulp (measured:
+# max 8.9e-16 on 22k inputs), so the linear-counting branch uses
+# ln_portable_sql: floor(log2 x) argument reduction + an atanh Horner
+# series evaluated in a pinned order — plain floor/log2/power/+-*/ that
+# both engines round identically.
+#
+# Exponent-notation literals parse as DOUBLE on BOTH engines; a bare
+# decimal literal parses as DECIMAL (Spark AND DuckDB), and the
+# decimal->double conversion can land one ulp off the correctly-rounded
+# parse (observed: Spark's 0.0526315789... coefficient flipped the last
+# bit of the result on ~10% of inputs)
+_LN2 = "6.93147180559945286e-01"
+# 1/19 .. 1/3, Horner order (odd atanh series to r^19)
+_LN_COEFFS = ["%.17e" % (1.0 / k) for k in (19, 17, 15, 13, 11, 9, 7, 5, 3)]
+
+
+def ln_portable_sql(x: str) -> str:
+    """ln(x) for x > 0 as a portable SQL expression (identical doubles in
+    Spark SQL and DuckDB).
+
+    Argument reduction rounds the exponent (m in [sqrt2/2, sqrt2), |r| <=
+    0.1716) so the series truncation (r^21/21 < 5e-17) stays below double
+    resolution even for x just under a power of two; the floor boundary
+    then sits at 2^(k+1/2), which rational inputs such as m/V cannot
+    approach within an ulp (irrationality-measure separation of sqrt2)."""
+    e = f"floor(log2({x}) + 0.5)"
+    m = f"(({x}) / power(2.0, {e}))"
+    r = f"(({m} - 1.0) / ({m} + 1.0))"
+    r2 = f"({r} * {r})"
+    p = _LN_COEFFS[0]
+    for c in _LN_COEFFS[1:]:
+        p = f"({p} * {r2} + {c})"
+    p = f"({p} * {r2} + 1.0)"
+    return f"(({e} * {_LN2}) + ((2.0 * {r}) * {p}))"
+
+
 def hll_keyed_rho(
     keyed: DataFrame, tile_col: str = "tile", key_col: str = "key"
 ) -> DataFrame:
     """(tile, key, reg, rho) — the stateless hash/register derivation."""
-    from .dedup import md5_h64
-
     h = md5_h64(
         F.concat(F.lit("hll:"), F.col(key_col).cast("string"))
     )
@@ -156,8 +192,6 @@ def tile_distinct_hll(
 
 def tile_distinct_hll_oracle_sql(src_sql: str) -> str:
     """DuckDB replay over ``src_sql`` (must yield tile, key)."""
-    from .dedup import md5_h64_sql
-
     h = md5_h64_sql("'hll:' || CAST(key AS VARCHAR)")
     ln_mv = ln_portable_sql(
         f"({float(M_REGS)!r} / CAST(({M_REGS} - n_regs) AS DOUBLE))"
@@ -212,8 +246,6 @@ def hll_estimate_oracle_sql(src_sql: str) -> str:
     """DuckDB replay of registers + estimator only — (tile, n_regs,
     estimate) — for the streaming variant, whose state holds no raw
     keys to count exactly."""
-    from .dedup import md5_h64_sql
-
     h = md5_h64_sql("'hll:' || CAST(key AS VARCHAR)")
     ln_mv = ln_portable_sql(
         f"({float(M_REGS)!r} / CAST(({M_REGS} - n_regs) AS DOUBLE))"
@@ -279,8 +311,6 @@ def tile_heavy_hitters(
     — the exact per-(tile, key) agg it replaces is the unbounded one.
     All integer, portable md5 row hashes, bit-exact in DuckDB.
     """
-    from .dedup import md5_h64
-
     rows = F.array(
         *[
             F.struct(
@@ -332,8 +362,6 @@ def tile_heavy_hitters(
 
 def tile_heavy_hitters_oracle_sql(src_sql: str, threshold: int) -> str:
     """DuckDB replay over ``src_sql`` (must yield tile, key)."""
-    from .dedup import md5_h64_sql
-
     arms = " UNION ALL ".join(
         "SELECT tile, key, {i} AS i, "
         "(({h}) % {w} + {w}) % {w} AS b FROM src".format(

@@ -17,6 +17,43 @@ from .. import functions as s2f
 DEFAULT_TILING_LEVELS = (2, 5, 8, 12)
 
 
+# ---------- portable 64-bit string hash (Spark == DuckDB, bit-exact) ----------
+#
+# xxhash64 is Spark-only, so every operator that must be ORACLE-CHECKABLE
+# hashes strings via md5 (available in both engines) and recomposes the
+# first 16 hex chars into a signed 64-bit integer:
+#   hi32 = int(hex[0:8]), lo32 = int(hex[8:16]); h = (hi32 << 32) + lo32
+# Spark's shiftleft wraps into the sign bit (no ANSI overflow) and DuckDB
+# gets the same two's-complement value via an explicit signed fold.
+
+
+def md5_h64(c: Column) -> Column:
+    """Signed 64-bit hash of a string column from its md5 (portable)."""
+    hx = F.md5(c)
+    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
+    return F.shiftleft(hi, 32) + lo
+
+
+def md5_h64_sql(expr: str) -> str:
+    """DuckDB SQL for the identical signed 64-bit md5 hash."""
+    hi = f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
+    lo = f"(('0x' || substr(md5({expr}), 9, 8))::BIGINT)"
+    return (
+        f"((CASE WHEN {hi} >= 2147483648 THEN {hi} - 4294967296 ELSE {hi} END)"
+        f" * 4294967296 + {lo})"
+    )
+
+
+def md5_h32(c: Column) -> Column:
+    """Unsigned 32-bit md5-derived hash (always fits int64)."""
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+
+
+def md5_h32_sql(expr: str) -> str:
+    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
+
+
 def with_cell_from_triplet(
     df: DataFrame, x0: str = "x0", y0: str = "y0", z0: str = "z0", out: str = "cell"
 ) -> DataFrame:
@@ -79,8 +116,6 @@ def tile_sample(
     upstream with the density-tree sharder (operators/density.py) — the
     sample itself is insensitive to salting because the hash order is a
     global property of the rows."""
-    from .dedup import md5_h32
-
     from pyspark.sql import Window
 
     tile_col = f"cell_l{level}"

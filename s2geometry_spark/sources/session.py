@@ -38,7 +38,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # TIMESTAMP_NTZ -> TIMESTAMP casts interpret the naive value in
-        # the session timezone; pin it so epoch arithmetic (sessionize)
+        # the session timezone; pin it so epoch arithmetic (event-time windows)
         # is deterministic and matches DuckDB's naive epoch_us()
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))

@@ -24,26 +24,6 @@ GOOD = ["BroadcastHashJoin", "PushedFilters", "codegen id"]
 # smells that are deliberate and scale-safe, with the justification
 # rendered into PLANS.md instead of a flag
 ALLOWED = {
-    ("text_bm25", "BroadcastNestedLoopJoin"): (
-        "1-row broadcast of the global (n_docs, avgdl) stats — a scalar "
-        "dim join, constant size at any scale"
-    ),
-    ("corpus_mixture", "BroadcastNestedLoopJoin"): (
-        "1-row broadcast of the corpus token total — a scalar dim join, "
-        "constant size at any scale"
-    ),
-    ("unigram_logprob", "BroadcastNestedLoopJoin"): (
-        "1-row broadcast of the corpus (n_total, vocab) LM stats — a "
-        "scalar dim join, constant size at any scale"
-    ),
-    ("lang_temperature", "BroadcastNestedLoopJoin"): (
-        "1-row broadcast of the min language token mass — a scalar dim "
-        "join, constant size at any scale"
-    ),
-    ("tfidf_keywords", "BroadcastNestedLoopJoin"): (
-        "1-row broadcast of the corpus document count — a scalar dim "
-        "join, constant size at any scale"
-    ),
     ("loop_pair_distance", "BroadcastNestedLoopJoin"): (
         "the FIXTURE's all-pairs enumeration: a chain_b > chain_a "
         "non-equi self-join over the distinct LOOP IDS only (hundreds of "
@@ -68,10 +48,6 @@ HEADLINE = [
     "chain_interpolate",
     "builder_snap",
     "hausdorff",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "ann_topk",
-    "text_token_stats",
     "poly_boolean_shared",
     "polyline_simplify",
     "polyline_alignment",
@@ -79,14 +55,10 @@ HEADLINE = [
     "polyline_clip_models",
     "img_phash_near_dup",
     "winding_build",
-    "sessionize",
-    "text_bm25",
-    "dedup_components",
     "builder_snap_round",
     "polyline_self_crossings",
     "chain_centroids",
     "project_to_edges",
-    "ann_topk_sq8",
     "chain_pair_distance",
     "loop_validate",
     "loop_pair_distance",
@@ -95,36 +67,20 @@ HEADLINE = [
     "builder_snap_latlng",
     "loop_nesting",
     "polyline_simplify_disc",
-    "dedup_lsh_recall",
     "polygon_validate",
     "knn_furthest",
     # round 4
     "hausdorff_pairs",
     "edge_crossings_all",
-    "ann_ivf_recall",
-    "decontaminate",
-    "pack_assign",
-    "emb_kmeans",
-    "emb_kmeans_sample",
-    "emb_semdedup",
     "img_mosaic",
-    "quality_sample",
-    "unigram_logprob",
-    "corpus_mixture",
     "range_pairs",
     "dbscan",
-    # round 4 session 3
-    "asof_join",
-    "interval_join",
-    "text_dup_spans",
-    "text_pii",
     # round 4 session 4
     "face_segments",
     "edge_clip_faces",
     "edge_cells",
     "edge_clip_cells",
     "zonal_stats",
-    "bpe_encode",
     "polygon_degeneracies",
     "img_dedup_dihedral",
     # shape_index's BFS rounds execute during plan construction
@@ -141,11 +97,8 @@ HEADLINE = [
     "shape_measures",
     # round 4 session 7
     "edge_intersections",
-    "emb_caption_align",
-    "emb_hard_negatives",
     # round 4 session 8
     "cell_index_ranges",
-    "text_chunks",
     "cap_relations",
     "rect_algebra",
     # polyline_assembly: the star-contraction rounds execute during plan
@@ -161,15 +114,8 @@ HEADLINE = [
     "closed_set_normalize",
     "rect_hausdorff",
     "shape_reference_point",
-    # streaming_sessionize excluded: building its plan executes the
-    # stream (awaitTermination inside the query fn), like the other
-    # streaming queries; bpe_encode's plan covers the encode join (the
-    # 6 training rounds run during plan construction, as for bpe_vocab)
     # streaming_tile_counts excluded: building its plan EXECUTES the
-    # stream (awaitTermination inside the query fn); bpe_merges/bpe_vocab
-    # excluded for the same reason (the driver merge loop runs during
-    # plan construction; per-round plans are window+hashAgg over the
-    # localCheckpointed symbol table, same shape as sessionize)
+    # stream (awaitTermination inside the query fn)
     # round 4 session 11
     "label_lexicon",
     # polyline_walks: star-contraction rounds run during plan
@@ -177,17 +123,10 @@ HEADLINE = [
     # the dumped plan is the per-component-bucket applyInPandas plus the
     # JVM-side trivial-edge anti-join arm
     "polyline_walks",
-    "audio_near_dup",
-    "dedup_incremental",
-    "lang_temperature",
-    "tfidf_keywords",
     "img_tile_dedup",
-    "emb_screen",
     "tile_distinct_hll",
     "tile_heavy_hitters",
     # round 4 session 12
-    "domain_cap",
-    "decon_bloom",
     "tile_quantiles",
     # composite_regions: the (pair, mode) set-op applyInPandas and the
     # distinct-levels collect run during plan construction; the dumped

@@ -32,9 +32,6 @@ def duck():
         "part",
         "orders",
         "lineitem",
-        "events",
-        "documents",
-        "embeddings",
     ]:
         con.sql(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_ORACLE}/{name}.parquet')"

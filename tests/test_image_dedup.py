@@ -1,7 +1,6 @@
 """Perceptual near-dup image detection vs a brute-force popcount oracle.
 
-The banded-Hamming join MECHANISM is oracle-proven bit-exact by the
-dedup_simhash entry query; these tests pin the image front-end: decoded
+These tests pin the banded-Hamming join and its image front-end: decoded
 pHash values, losslessness of the 4x16-bit banding at radius <= 3, the
 planted original/variant guarantee, and the end-to-end pair set against
 an all-pairs NumPy popcount.

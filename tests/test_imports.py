@@ -1,0 +1,75 @@
+"""Static import check: every engine import resolves, with no Spark.
+
+Many imports in this repo are lazy (inside functions), so a module that
+is moved or deleted breaks them only when the function runs.  This test
+walks the source with ``ast`` and resolves each ``s2geometry_spark``
+(and ``__spark_entry__``) import, and each name imported from one, with
+``importlib``.  Importing the package pulls in pyspark but starts no
+JVM, so a broken import fails here with its file and line instead of
+surfacing later as a failed Spark test.
+"""
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+LOCAL = {"s2geometry_spark", "__spark_entry__"}
+
+
+def _sources() -> list[Path]:
+    files = [ROOT / "__spark_entry__.py"]
+    for d in ("s2geometry_spark", "jobs", "scripts"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    return files
+
+
+def _package(path: Path) -> str:
+    """Dotted package a file's relative imports resolve against."""
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1])
+
+
+def _imports(path: Path):
+    """(line, module, names) per import; names is empty for ``import m``."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                yield node.lineno, a.name, []
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:
+                pkg = _package(path).split(".")
+                base = pkg[: len(pkg) - node.level + 1]
+                mod = ".".join(base + ([mod] if mod else []))
+            yield node.lineno, mod, [a.name for a in node.names]
+
+
+def _unresolved(mod: str, names: list[str]) -> list[str]:
+    try:
+        m = importlib.import_module(mod)
+    except ImportError as exc:
+        return [f"{mod} ({exc})"]
+    missing = []
+    for n in names:
+        if n == "*" or hasattr(m, n):
+            continue
+        is_pkg = hasattr(m, "__path__")
+        if not is_pkg or importlib.util.find_spec(f"{mod}.{n}") is None:
+            missing.append(f"{mod}.{n}")
+    return missing
+
+
+def test_every_engine_import_resolves():
+    files = _sources()
+    checked, bad = 0, []
+    for path in files:
+        for line, mod, names in _imports(path):
+            if mod.split(".")[0] not in LOCAL:
+                continue
+            checked += 1
+            for miss in _unresolved(mod, names):
+                bad.append(f"{path.relative_to(ROOT)}:{line}: {miss}")
+    assert len(files) > 50 and checked > 100, (len(files), checked)
+    assert not bad, "unresolved imports:\n" + "\n".join(bad)

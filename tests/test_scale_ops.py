@@ -131,46 +131,3 @@ def test_checkpoint_attempt_lineage(spark, images_geo, tmp_path):
     run3 = CheckpointedRun(out, n_buckets=2)
     # bucket 0 was done before the failed marker; force a re-run path check
     assert run3.pending_buckets() == []
-
-
-def test_curation_pipeline_job_funnel_and_resume(spark, tmp_path):
-    """End-to-end curation DAG (jobs/curation_pipeline_job.py): funnel is
-    monotone, packing covers exactly the surviving train docs, and a
-    re-run with the same --out skips every stage."""
-    import subprocess
-    import sys as _sys
-    import json as _json
-
-    out = str(tmp_path / "curation")
-    cmd = [
-        _sys.executable,
-        "jobs/curation_pipeline_job.py",
-        "--sf-dir",
-        "/root/testdata/sf0.001",
-        "--out",
-        out,
-        "--cpus",
-        "4",
-    ]
-    r = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
-    assert r.returncode == 0, r.stderr[-2000:]
-    lines = [_json.loads(x) for x in r.stdout.strip().splitlines()]
-    summary = lines[-1]
-    assert (
-        summary["raw_docs"]
-        >= summary["after_exact"]
-        >= summary["after_near_dup"]
-        >= summary["after_quality"]
-        >= summary["after_decontamination"]
-        >= summary["packed_train_docs"]
-    )
-    assert summary["packed_train_docs"] > 0
-    assert summary["context_windows"] > 0
-    r2 = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
-    assert r2.returncode == 0, r2.stderr[-2000:]
-    lines2 = [_json.loads(x) for x in r2.stdout.strip().splitlines()]
-    assert all(
-        rec.get("skipped") for rec in lines2 if rec.get("stage", "").startswith("s")
-        and "skipped" in rec
-    )
-    assert lines2[-1] == summary

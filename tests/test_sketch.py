@@ -1,9 +1,13 @@
-"""Portable HLL sketch: mergeability, branch coverage, accuracy."""
+"""Portable sketches: HLL mergeability, branch coverage, accuracy; the
+portable natural log they share with DuckDB."""
 
+import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from s2geometry_spark.operators.sketch import M_REGS, tile_distinct_hll
+from s2geometry_spark.operators.sketch import M_REGS, ln_portable_sql, tile_distinct_hll
 
 
 def _keyed(spark, rows):
@@ -123,3 +127,43 @@ def test_quantile_sketch_interpolation_inside_bin(spark):
     }
     for q in (500, 900, 990):
         assert abs(out[q].estimate - out[q].exact_value) <= 10.0 + 1e-9
+
+
+class TestPortableLn:
+    def test_accuracy_and_cross_engine_equality(self):
+        rng = np.random.default_rng(11)
+        xs = np.concatenate(
+            [
+                rng.uniform(1e-4, 1e4, 5000),
+                (np.arange(1, 500) + 0.5) / (np.arange(1, 500)[::-1] + 0.5),
+                [1.0, 2.0, 0.5, 4.0, 1.0 / 1024, 1024.0],
+            ]
+        )
+        con = duckdb.connect()
+        con.register("t", pd.DataFrame({"x": xs}))
+        got = con.execute(f"SELECT {ln_portable_sql('x')} AS l FROM t").fetchdf()[
+            "l"
+        ].to_numpy()
+        rel = np.abs(got - np.log(xs)) / np.maximum(np.abs(np.log(xs)), 1e-3)
+        assert rel.max() < 1e-12
+
+    def test_spark_matches_duckdb_bitwise(self, spark):
+        from pyspark.sql import functions as F
+
+        rng = np.random.default_rng(12)
+        xs = np.concatenate(
+            [rng.uniform(1e-4, 1e4, 20000), [1.0, 2.0, 8.0, 0.25]]
+        )
+        pdf = pd.DataFrame({"x": xs})
+        sp = (
+            spark.createDataFrame(pdf)
+            .select(F.expr(ln_portable_sql("x")).alias("l"))
+            .toPandas()["l"]
+            .to_numpy()
+        )
+        con = duckdb.connect()
+        con.register("t", pdf)
+        du = con.execute(f"SELECT {ln_portable_sql('x')} AS l FROM t").fetchdf()[
+            "l"
+        ].to_numpy()
+        assert np.array_equal(sp, du)

@@ -45,7 +45,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from s2geometry_spark.operators import density, image_pipeline as ip
-    from s2geometry_spark.operators.checkpoint import CheckpointedRun
+    from s2geometry_spark.operators.checkpoint import CheckpointedRun, parquet_rows
     from s2geometry_spark.sources.images import images_df
     from s2geometry_spark.sources.session import get_spark
 
@@ -84,8 +84,10 @@ def main() -> None:
     )
     final_path = os.path.join(args.out, "tiles_final")
     final.write.mode("overwrite").parquet(final_path)
+    # one row per tile: the count comes from the written footers, and
+    # only the cnt sum re-reads the table
     total = spark.read.parquet(final_path).agg(F.sum("cnt")).collect()[0][0]
-    print(json.dumps({"final_tiles": final.count(), "total_rows": int(total),
+    print(json.dumps({"final_tiles": parquet_rows(final_path), "total_rows": int(total),
                       "expected_rows": args.n_images,
                       "ok": int(total) == args.n_images}))
     spark.stop()

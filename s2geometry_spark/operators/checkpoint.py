@@ -34,7 +34,7 @@ MANIFEST = "_partitions.jsonl"
 RUNS = "_runs.jsonl"
 
 
-def _parquet_rows(path: str) -> int:
+def parquet_rows(path: str) -> int:
     """Rows of the parquet files Spark just wrote under ``path``, summed
     from their footers (no Spark job; the manifest is local too)."""
     import pyarrow.parquet as pq
@@ -128,7 +128,7 @@ class CheckpointedRun:
                 attempt += 1  # orphaned partial write from a crashed attempt
             df = make_unit(spark, b)
             df.write.mode("overwrite").parquet(out)  # idempotent re-attempt
-            rows = _parquet_rows(out)
+            rows = parquet_rows(out)
             wall = time.time() - t0
             rec = {
                 "run_id": self.run_id,

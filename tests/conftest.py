@@ -76,3 +76,18 @@ def compare_frames(spark_df, duck_rel, sort_cols=None):
                 (i, a, b) for i, (a, b) in enumerate(zip(sv, dv)) if a != b
             ]
             assert not mism, f"column {c}: {len(mism)} mismatches, first: {mism[:3]}"
+
+
+def load_entry():
+    """A fresh module object of this checkout's ``__spark_entry__.py``.
+
+    It is not registered in ``sys.modules``, so the UDFs it defines are
+    pickled by value and the Python workers need not import it."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("spark_entry", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from s2geometry_spark.kernels.regions import Loop, Polygon
 from s2geometry_spark.operators import big_polygon_join as bpj
 from s2geometry_spark.operators.contains_join import RegionIndex, contains_join
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, load_entry
 
 
 REGIONS = {
@@ -24,13 +24,7 @@ REGIONS = {
 
 @pytest.fixture(scope="module")
 def pts(spark):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    e = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(e)
+    e = load_entry()
     df = e._order_points_xyz(spark, SF_TEST).cache()
     df.count()
     yield df

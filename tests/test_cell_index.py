@@ -19,17 +19,11 @@ from s2geometry_spark.operators.cell_index import (
     N_LABELS,
     cell_index_ranges,
 )
-from tests.conftest import SF_TEST
+from tests.conftest import SF_TEST, load_entry
 
 
 def _points(spark):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_ci", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     return mod._order_points(spark, SF_TEST)
 
 

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from s2geometry_spark.kernels.convexhull import contains_all, convex_hull
+from tests.conftest import load_entry
 
 
 def cap_points(rng, lat, lng, r, n):
@@ -71,13 +72,7 @@ def test_hull_of_square_is_square():
 
 def test_per_tile_hull_operator(spark):
     from s2geometry_spark.operators.tiling import per_tile_hulls
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    e = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(e)
+    e = load_entry()
     pts = e._order_points_xyz(spark, "/root/testdata/sf0.001")
     out = per_tile_hulls(pts, level=2).collect()
     assert out

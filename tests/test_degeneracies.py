@@ -1,13 +1,11 @@
 """FindPolygonDegeneracies: reference goldens + distributed oracle gate."""
 
-import importlib.util
-
 import numpy as np
 import pytest
 
 from s2geometry_spark.kernels.coords import latlng_to_xyz
 from s2geometry_spark.kernels.degeneracies import find_polygon_degeneracies
-from tests.conftest import SF_ORACLE, compare_frames
+from tests.conftest import SF_ORACLE, compare_frames, load_entry
 
 
 def _graph(loops_str: str):
@@ -93,17 +91,8 @@ def test_fully_degenerate_raises():
         _run("0:0")
 
 
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_degen", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_polygon_degeneracies_matches_duckdb(spark, duck):
-    mod = _entry()
+    mod = load_entry()
     sdf = mod.q_polygon_degeneracies(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["polygon_degeneracies"])
     compare_frames(sdf, rel)
@@ -113,7 +102,7 @@ def test_polygon_degeneracies_plan(spark):
     """Every family emits all 7 planted degeneracies with the planted
     orientation: shrunk (t<1) degeneracies are holes, expanded (t>1)
     shells; sibling pairs report 2 edges."""
-    mod = _entry()
+    mod = load_entry()
     pdf = mod.q_polygon_degeneracies(spark, SF_ORACLE).toPandas()
     n_fam = pdf["family_id"].nunique()
     assert len(pdf) == 7 * n_fam

@@ -1,11 +1,9 @@
 """Dihedral-invariant pHash dedup: exactness + planted-pair recovery."""
 
-import importlib.util
-
 import numpy as np
 
 from s2geometry_spark.kernels import imagecodec as ic
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, load_entry
 
 
 def test_canon_invariant_under_all_dihedral_transforms():
@@ -68,11 +66,7 @@ def test_fused_canon_pass_equals_composed(spark):
 
 
 def test_planted_pairs_recovered(spark):
-    mod_spec = importlib.util.spec_from_file_location(
-        "spark_entry_dih", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(mod_spec)
-    mod_spec.loader.exec_module(mod)
+    mod = load_entry()
     pdf = mod.q_img_dedup_dihedral(spark, SF_ORACLE).toPandas()
 
     from s2geometry_spark.sources import images as imgsrc

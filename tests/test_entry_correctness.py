@@ -3,21 +3,12 @@ oracle_sql() twin must match DuckDB on sf0.01 (rows + schema + values)."""
 
 import pytest
 
-from tests.conftest import SF_ORACLE, SF_TEST, compare_frames
-
-
-def _entry_module():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from tests.conftest import SF_ORACLE, SF_TEST, compare_frames, load_entry
 
 
 @pytest.fixture(scope="module")
 def entry_mod():
-    return _entry_module()
+    return load_entry()
 
 
 def test_entry_smoke(spark, entry_mod):

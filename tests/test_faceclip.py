@@ -17,7 +17,7 @@ from s2geometry_spark.kernels.faceclip import (
     get_face_segments,
     robust_cross_prod,
 )
-from tests.conftest import SF_ORACLE, compare_frames
+from tests.conftest import SF_ORACLE, compare_frames, load_entry
 
 
 def _random_units(rng, n):
@@ -122,13 +122,7 @@ def test_empty_batch_schema(spark):
 
 
 def test_spark_matches_duckdb(spark, duck):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_fseg", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     sdf = mod.q_face_segments(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["face_segments"])
     compare_frames(sdf, rel)
@@ -174,13 +168,7 @@ def test_clip_padding_monotone():
 
 
 def test_edge_clip_faces_matches_duckdb(spark, duck):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_clip", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     sdf = mod.q_edge_clip_faces(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["edge_clip_faces"])
     compare_frames(sdf, rel)
@@ -214,13 +202,7 @@ def test_edge_cells_covers_sampled_points():
 
 
 def test_edge_cells_matches_duckdb(spark, duck):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_ecells", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     sdf = mod.q_edge_cells(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["edge_cells"])
     compare_frames(sdf, rel)
@@ -254,13 +236,7 @@ def test_clip_edge_agrees_with_intersects_rect():
 
 
 def test_edge_cell_clips_matches_duckdb(spark, duck):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_eclips", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     sdf = mod.q_edge_clip_cells(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["edge_clip_cells"])
     compare_frames(sdf, rel)

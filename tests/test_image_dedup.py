@@ -17,6 +17,7 @@ from s2geometry_spark.operators.image_dedup import (
     reencoded_variants,
 )
 from s2geometry_spark.sources import images as imgsrc
+from tests.conftest import load_entry
 
 N = 500
 
@@ -213,13 +214,7 @@ class TestHammingBall:
 def test_caption_conflict_planted(spark):
     """Odd-index planted variants get edited captions -> must surface as
     conflicts; even-index planted pairs share the caption -> excluded."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     from s2geometry_spark.operators.image_dedup import caption_conflict_pairs
     from pyspark.sql import functions as F
 

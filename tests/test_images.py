@@ -11,6 +11,7 @@ from s2geometry_spark.kernels.regions import Cap, Loop
 from s2geometry_spark.operators import image_pipeline as ip
 from s2geometry_spark.operators.contains_join import RegionIndex
 from s2geometry_spark.sources import images as imgsrc
+from tests.conftest import load_entry
 
 N = 240
 
@@ -270,15 +271,9 @@ def test_img_knn_matches_brute_force(spark):
     """The k-nearest-image query (staged ring-expansion kNN over the
     geotagged generated images) equals the NumPy brute-force top-k with
     the same (dist, pid) tie-break."""
-    import importlib.util
-
     import numpy as np
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
 
     sf = "/root/testdata/sf0.001"
     out = mod.q_img_knn(spark, sf).toPandas()

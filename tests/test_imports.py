@@ -73,3 +73,52 @@ def test_every_engine_import_resolves():
                 bad.append(f"{path.relative_to(ROOT)}:{line}: {miss}")
     assert len(files) > 50 and checked > 100, (len(files), checked)
     assert not bad, "unresolved imports:\n" + "\n".join(bad)
+
+
+def test_unchanged_zip_is_not_reread(tmp_path, monkeypatch):
+    """PySpark's worker calls ``importlib.invalidate_caches()`` before each
+    task; the engine's guard keeps an unchanged zip from being re-read
+    each time, and a rewritten or deleted one still behaves as before."""
+    import sys
+    import zipfile
+    import zipimport
+
+    import s2geometry_spark
+
+    guard = zipimport.zipimporter.invalidate_caches
+    assert hasattr(guard, "stdlib") == (sys.version_info < (3, 13))
+    importlib.reload(s2geometry_spark)
+    assert zipimport.zipimporter.invalidate_caches is guard, "installed twice"
+
+    archive = tmp_path / "guarded.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zg_one.py", "X = 1\n")
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("zg_one").X == 1
+        assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
+        reads.clear()
+        for _ in range(5):
+            importlib.invalidate_caches()
+        assert reads.count(str(archive)) <= 1, reads
+
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zg_one.py", "X = 1\n")
+            z.writestr("zg_two.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert importlib.import_module("zg_two").Y == 2
+
+        archive.unlink()
+        importlib.invalidate_caches()
+    finally:
+        for name in ("zg_one", "zg_two"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)

@@ -12,6 +12,7 @@ from s2geometry_spark.operators.lax_layers import (
     lax_polyline_vertices,
     process_edges_directed,
 )
+from tests.conftest import load_entry
 
 ALL_MODES = ["discard", "discard_holes", "discard_shells", "keep"]
 
@@ -253,15 +254,9 @@ def test_lax_polyline_keeps_duplicates_and_walks():
 def test_grouped_matches_sequential(spark):
     """The distributed per-graph path must reproduce the sequential
     reference build loop-for-loop on the entry fixture at sf0.001."""
-    import importlib.util
-
     import pandas as pd
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_lax", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     from s2geometry_spark.operators.lax_layers import (
         lax_polygon_loops_grouped,
         process_edges_directed,

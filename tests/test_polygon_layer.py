@@ -22,6 +22,7 @@ from s2geometry_spark.operators.polygon_layer import (
     assemble_loops,
     assemble_loops_grouped,
 )
+from tests.conftest import load_entry
 
 
 def test_add_vertex_edges_reference_example():
@@ -245,13 +246,7 @@ def test_random_graphs_match_independent_port():
 
 
 def test_contraction_path_matches_grouped_path(spark):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_entry()
     edges = m._loop_graph_edges(spark, "/root/testdata/sf0.001")
     cols = ["loop_id", "vec_key", "pos", "eid", "src", "dst"]
     a = (

@@ -14,6 +14,7 @@ from s2geometry_spark.operators.polyline_walks import (
     build_walks,
     polyline_walks,
 )
+from tests.conftest import load_entry
 
 
 def _edges_from_polylines(polylines):
@@ -125,13 +126,7 @@ def test_distributed_matches_sequential(spark):
 
 def test_entry_fixture_conserves_edges(spark):
     """Every fixture edge lands in exactly one walk exactly once."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     sf = "/root/testdata/sf0.001"
     out = mod.queries()["polyline_walks"](spark, sf).toPandas()
     n_orders = spark.read.parquet(f"{sf}/orders.parquet").count()

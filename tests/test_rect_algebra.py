@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 from s2geometry_spark.operators import rect_algebra as ra
+from tests.conftest import load_entry
 
 PI = math.pi
 
@@ -157,13 +158,7 @@ def test_fixture_contract_and_port_parity(spark):
     """The synthesized sf0.001 pairs: endpoints never ±π, intervals
     non-empty/non-full, and the full distributed query equals the
     Python port row-for-row."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "se_ra", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     rows = (
         mod.q_rect_algebra(spark, "/root/testdata/sf0.001")
         .toPandas()

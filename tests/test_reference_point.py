@@ -15,6 +15,7 @@ from s2geometry_spark.kernels.predicates import (
     compute_origin_inside,
     loop_contains_points,
 )
+from tests.conftest import load_entry
 
 
 def _unit(v):
@@ -59,13 +60,7 @@ def test_matched_edges_give_zero_sign():
 
 
 def test_sweep_picks_min_unmatched_edge(spark):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_entry()
     out = (
         m.queries()["shape_reference_point"](spark, "/root/testdata/sf0.001")
         .toPandas()

@@ -131,3 +131,30 @@ def test_checkpoint_attempt_lineage(spark, images_geo, tmp_path):
     run3 = CheckpointedRun(out, n_buckets=2)
     # bucket 0 was done before the failed marker; force a re-run path check
     assert run3.pending_buckets() == []
+
+
+def test_workers_run_the_zip_reread_guard(spark):
+    """Every Python worker that runs an engine UDF holds the zip re-read
+    guard of ``s2geometry_spark/__init__.py`` (installed below 3.13 only)."""
+    import pandas as pd
+
+    def probe(batches):
+        import os
+        import sys
+        import zipimport
+
+        # unpickling this function imports the engine, as any engine UDF's does
+        assert tiling.__name__ == "s2geometry_spark.operators.tiling"
+        fn = zipimport.zipimporter.invalidate_caches
+        guarded = fn.__module__ == "s2geometry_spark" and hasattr(fn, "stdlib")
+        for b in batches:
+            yield pd.DataFrame({"pid": [os.getpid()] * len(b), "guarded": guarded,
+                                "expected": sys.version_info < (3, 13)})
+
+    rows = (
+        spark.range(16, numPartitions=16)
+        .mapInPandas(probe, "pid long, guarded boolean, expected boolean")
+        .collect()
+    )
+    assert len(rows) == 16
+    assert all(r.guarded == r.expected for r in rows), rows

@@ -1,23 +1,12 @@
 """Distributed shape-index build (MutableS2ShapeIndex twin) tests."""
 
-import importlib.util
-
 import numpy as np
 
-from tests.conftest import SF_ORACLE, compare_frames
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_sidx", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from tests.conftest import SF_ORACLE, compare_frames, load_entry
 
 
 def test_shape_index_matches_duckdb(spark, duck):
-    mod = _entry()
+    mod = load_entry()
     sdf = mod.q_shape_index(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["shape_index"])
     compare_frames(sdf, rel)
@@ -32,7 +21,7 @@ def test_shape_index_invariants(spark):
         MAX_LEVEL,
     )
 
-    mod = _entry()
+    mod = load_entry()
     pdf = mod.q_shape_index(spark, SF_ORACLE).toPandas()
     assert len(pdf) > 0
     below_cap = pdf[pdf["level"] < MAX_LEVEL]
@@ -55,7 +44,7 @@ def test_shape_index_invariants(spark):
 
 
 def test_shape_index_lookup_matches_duckdb(spark, duck):
-    mod = _entry()
+    mod = load_entry()
     sdf = mod.q_shape_index_lookup(spark, SF_ORACLE)
     rel = duck.sql(mod.oracle_sql()["shape_index_lookup"])
     compare_frames(sdf, rel)
@@ -64,7 +53,7 @@ def test_shape_index_lookup_matches_duckdb(spark, duck):
 def test_shape_index_lookup_unique_cell_per_point(spark):
     """The frontier property implies a point matches at most one cell,
     and the matched cell's grid range contains the point's leaf ij."""
-    mod = _entry()
+    mod = load_entry()
     pdf = mod.q_shape_index_lookup(spark, SF_ORACLE).toPandas()
     assert len(pdf) > 0
     assert pdf["pid"].is_unique

@@ -25,7 +25,8 @@ import json
 import sys
 import os
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -49,6 +50,11 @@ def main() -> None:
     from s2geometry_spark.sources.images import images_df
     from s2geometry_spark.sources.session import get_spark
 
+    # the Python workers the session starts import the engine too, from
+    # wherever the job was launched
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark("image-tiling-job", cpus=args.cpus)
 
     # 1. deterministic source table (stand-in for the Iceberg images table)

@@ -7,7 +7,11 @@ small, so it is collected once; each ring level is then ONE mapInPandas
 scan over the indexed rows against a broadcast block table.  A row looks
 up the queries whose 3x3 neighbor block at the level it touches, and
 each partition emits those queries' local top-k in (dist, id) order; the
-driver merges the partial lists.
+driver merges the partial lists.  Inside a batch the scan widens as the
+reference does: a query is scored first against its 3x3 blocks at finer
+levels (level+9, +6, +3) and settles at the first that holds k of its
+rows nearer than anything outside it; only the queries still open meet
+the rows of their block at the level itself.
 
 The loop (``_ring_join``) is shared by two callers that differ only in
 how a row finds its blocks and how it is scored:
@@ -132,6 +136,38 @@ def _every_point_table(n: int):
     return cellid.from_face(np.arange(6)), np.arange(7, dtype=np.int64) * n, qi
 
 
+# Block levels a scan at level L tries in each batch, finest first, as
+# offsets above L.  A query settles at the first rung where the batch
+# holds k of its rows nearer than anything outside that rung's block, so
+# a dense query never expands its coarse block.  The step is the ring
+# cascade's 3 levels (64x the area): a query stops within one step of
+# its density, at no more than four lookups per batch.  A finer rung is
+# scored only while it meets fewer than half the (row, query) pairs of
+# level L itself: rows coarser than the rung (edges whose covering cells
+# hold whole blocks) meet nearly as many pairs in a fine block as in the
+# coarse one, and scoring them twice cannot pay.  A rung's pairs are a
+# subset of the next coarser rung's, so the first rung over that limit
+# ends the climb.
+_LADDER = (9, 6, 3, 0)
+
+
+def _ladder(Q: np.ndarray, cells: np.ndarray, level: int):
+    """A scan's rungs, finest first: ``(level, keys, offs, qi, bound)``
+    for level+9, +6, +3 and ``level`` (capped at 30, each once), with the
+    rung's block table (``_block_table``) and each query's
+    ``query_bound_chord2`` at it.  The last rung settles every query
+    still open and carries no bound; level 0 is the one rung that meets
+    every row."""
+    if level == 0:
+        return [(0, *_every_point_table(len(Q)), None)]
+    levels = sorted({min(30, level + s) for s in _LADDER}, reverse=True)
+    return [
+        (lv, *_block_table(cells, lv),
+         None if lv == level else query_bound_chord2(Q, cells, lv))
+        for lv in levels
+    ]
+
+
 def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
     """The first k rows of each query in (dist, id) order, queries
     ascending, with each row's 0-based rank.  A repeated (query, id) row
@@ -148,13 +184,67 @@ def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
     return q[keep], p[keep], d[keep], rank[keep]
 
 
-def _point_lookup(pdf: pd.DataFrame, keys: np.ndarray, level: int):
-    """``(row, block position, coordinates)`` of a points batch: each
-    point's level-``level`` parent, found among the block ``keys``."""
-    par = cellid.parent(cellid.from_biased(pdf["p_cell"].to_numpy(np.int64)), level)
+_NONE = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64))
+
+
+def _pairs_topk(hit, lo, cnt, qi, ids, Q, X, chord2, k):
+    """Top-k ``(q, id, d, rank)`` over the distinct (query, row) pairs
+    where row ``hit[j]`` meets the queries ``qi[lo[j]:lo[j] + cnt[j]]``,
+    expanded and scored at most ``_PAIRS_PER_CHUNK`` pairs at a time."""
+    out = _NONE
+    cum = np.cumsum(cnt)
+    s = 0
+    while s < len(hit):
+        budget = cum[s] - cnt[s] + _PAIRS_PER_CHUNK
+        e = max(int(np.searchsorted(cum, budget, "right")), s + 1)
+        c = cnt[s:e]
+        ri = np.repeat(hit[s:e], c)
+        off = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
+        q = qi[np.repeat(lo[s:e], c) + off]
+        # a row meets a query once per block cell of the query's that it
+        # touches (an edge's covering cell can hold all nine): score each
+        # pair once.  The ids arrive in sorted runs, so timsort is cheap.
+        pair = np.sort(ri * len(Q) + q, kind="stable")
+        new = np.ones(len(pair), bool)
+        new[1:] = pair[1:] != pair[:-1]
+        ri, q = np.divmod(pair[new], len(Q))
+        out = _topk(
+            np.concatenate([out[0], q]),
+            np.concatenate([out[1], ids[ri]]),
+            np.concatenate([out[2], chord2(Q[q], X[ri])]),
+            k,
+        )
+        s = e
+    return out
+
+
+def _open_pairs(hit, pos, offs, qi, open_):
+    """``(hit, lo, cnt, qi)`` for ``_pairs_topk``: the rows ``hit`` that
+    meet block positions ``pos`` of a block table's CSR ``(offs, qi)``,
+    restricted to the ``open_`` queries by masking ``qi``."""
+    if not open_.all():
+        m = open_[qi]
+        offs = np.r_[0, np.cumsum(m)][offs]
+        qi = qi[m]
+    lo = offs[pos]
+    cnt = offs[pos + 1] - lo
+    nz = cnt > 0
+    return hit[nz], lo[nz], cnt[nz], qi
+
+
+def _point_rows(pdf: pd.DataFrame):
+    """A points batch's leaf cells and coordinates."""
+    leaf = cellid.from_biased(pdf["p_cell"].to_numpy(np.int64))
+    return leaf, pdf[["px", "py", "pz"]].to_numpy(np.float64)
+
+
+def _point_lookup(leaf: np.ndarray, keys: np.ndarray, level: int):
+    """``(row, block position)`` of each point whose level-``level``
+    parent is among the block ``keys``."""
+    par = cellid.parent(leaf, level)
     pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
     hit = np.nonzero(keys[pos] == par)[0]
-    return hit, pos[hit], pdf[["px", "py", "pz"]].to_numpy(np.float64)
+    return hit, pos[hit]
 
 
 def _point_chord2(Q: np.ndarray, P: np.ndarray) -> np.ndarray:
@@ -165,51 +255,57 @@ def _point_chord2(Q: np.ndarray, P: np.ndarray) -> np.ndarray:
     return (dx * dx + dy * dy) + dz * dz
 
 
-# The two row kinds of the ring expansion, as ``(lookup, chord2)``:
-# ``lookup(pdf, keys, level)`` returns a batch's distinct (row, block
-# position) pairs against the sorted block cells ``keys`` plus the
-# batch's coordinate matrix; ``chord2(Q, X)`` scores query points
-# against those coordinates row-wise.
-POINTS = (_point_lookup, _point_chord2)
+# The two row kinds of the ring expansion, as ``(rows, lookup, chord2)``:
+# ``rows(pdf)`` derives a batch's lookup data once, with its coordinate
+# matrix; ``lookup(data, keys, level)`` returns the batch's distinct
+# (row, block position) pairs against the sorted block cells ``keys``;
+# ``chord2(Q, X)`` scores query points against those coordinates
+# row-wise.
+POINTS = (_point_rows, _point_lookup, _point_chord2)
 
 
-def _scan(rows: DataFrame, kind, Q: np.ndarray, table, level: int, k: int):
-    """One mapInPandas scan of ``rows`` (id column first): the ``kind``'s
-    lookup maps each batch to its (row, block) pairs; every pair meets
-    the queries (rows of ``Q``) that the broadcast block ``table`` lists
-    for the block, scored by the kind's chord².  Each partition emits
-    those queries' local top-k.  Returns the driver-merged top-k
-    ``(q, id, d, rank)``."""
-    bc = rows.sparkSession.sparkContext.broadcast((Q, *table))
+def _scan(rows: DataFrame, kind, Q: np.ndarray, cells: np.ndarray, level: int, k: int):
+    """One mapInPandas scan of ``rows`` (id column first) for the queries
+    at ``Q`` (leaf ``cells``) and their 3x3 blocks at ``level``.  Each
+    batch climbs the ``_ladder`` fine to coarse: the ``kind``'s lookup
+    maps the batch to its (row, block) pairs at a rung, every pair meets
+    the rung's still-open queries listed for the block, scored by the
+    kind's chord², and a query settles once it has k rows there nearer
+    than its bound.  A finer block lies inside the coarse one and every
+    row outside it is beyond that bound, so each batch's top-k is the
+    one the coarse block alone gives.  Each partition emits its queries'
+    local top-k.  Returns the driver-merged top-k ``(q, id, d, rank)``."""
+    bc = rows.sparkSession.sparkContext.broadcast((Q, _ladder(Q, cells, level)))
     rid = rows.columns[0]
-    lookup, chord2 = kind
+    batch_rows, lookup, chord2 = kind
 
     def kern(batches):
-        Q, keys, offs, qi = bc.value
-        acc = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+        Q, ladder = bc.value
+        acc = _NONE[:3]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            hit, pos, X = lookup(pdf, keys, level)
-            lo = offs[pos]
-            cnt = offs[pos + 1] - lo
-            cum = np.cumsum(cnt)
+            data, X = batch_rows(pdf)
             ids = pdf[rid].to_numpy(np.int64)
-            s = 0
-            while s < len(hit):
-                budget = cum[s] - cnt[s] + _PAIRS_PER_CHUNK
-                e = max(int(np.searchsorted(cum, budget, "right")), s + 1)
-                c = cnt[s:e]
-                ri = np.repeat(hit[s:e], c)
-                off = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
-                q = qi[np.repeat(lo[s:e], c) + off]
-                acc = _topk(
-                    np.concatenate([acc[0], q]),
-                    np.concatenate([acc[1], ids[ri]]),
-                    np.concatenate([acc[2], chord2(Q[q], X[ri])]),
-                    k,
-                )[:3]
-                s = e
+            *fine, (lv, keys, offs, qi, _) = ladder
+            coarse = (*lookup(data, keys, lv), offs, qi)
+            found = [acc]
+            open_ = np.ones(len(Q), bool)
+            for lv, keys, offs, qi, bound in fine:
+                hit, lo, cnt, qi = _open_pairs(*lookup(data, keys, lv), offs, qi, open_)
+                if 2 * cnt.sum() > _open_pairs(*coarse, open_)[2].sum():
+                    break  # and so does every coarser rung
+                q, p, d, rank = _pairs_topk(hit, lo, cnt, qi, ids, Q, X, chord2, k)
+                kth = rank == k - 1
+                settled = np.zeros(len(Q), bool)
+                settled[q[kth][d[kth] < bound[q[kth]]]] = True
+                keep = settled[q]
+                found.append((q[keep], p[keep], d[keep]))
+                open_ &= ~settled
+            if open_.any():
+                pairs = _open_pairs(*coarse, open_)
+                found.append(_pairs_topk(*pairs, ids, Q, X, chord2, k)[:3])
+            acc = _topk(*(np.concatenate(c) for c in zip(*found)), k)[:3]
         yield pd.DataFrame({"q": acc[0], "p": acc[1], "d": acc[2]})
 
     try:
@@ -263,9 +359,7 @@ def _ring_join(
         if level < 1 or len(remaining) == 0:
             break
         Qr = Q[remaining]
-        q, p, d, rank = _scan(
-            rows, kind, Qr, _block_table(cells[remaining], level), level, k
-        )
+        q, p, d, rank = _scan(rows, kind, Qr, cells[remaining], level, k)
         # certified: k candidates, the k-th nearer than anything outside
         # the block (own-cell boundary distance + ring width)
         n = np.bincount(q, minlength=len(remaining))
@@ -290,8 +384,7 @@ def _ring_join(
             "them."
         )
     if len(remaining):
-        table = _every_point_table(len(remaining))
-        emit(remaining, *_scan(rows, kind, Q[remaining], table, 0, k))
+        emit(remaining, *_scan(rows, kind, Q[remaining], cells[remaining], 0, k))
     cols = [np.concatenate(c) for c in zip(*out)]
     return spark.createDataFrame(
         pd.DataFrame(

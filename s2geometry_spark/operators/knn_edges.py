@@ -12,7 +12,8 @@ bound), with only the row side swapped from points to EDGES:
     one contains the other, i.e. iff their leaf ranges overlap, so each
     covering cell is looked up by range against the level's sorted,
     disjoint block cells — one test for a covering cell inside a block
-    cell and for one containing several;
+    cell and for one containing several.  A batch derives its coverings
+    once; each block level of the scan's ladder only runs the lookup;
   * candidates are scored with the pinned point-to-arc kernel
     (measures.point_edge_chord2), bit-exact with the DuckDB oracle;
   * a query is CERTIFIED when its k-th distance beats the admissible
@@ -69,25 +70,41 @@ def _auto_start_level(n_edges: int, k: int) -> int:
     return max(1, min(10, int(math.log(max(target, 4.0), 4.0))))
 
 
-def _edge_lookup(pdf: pd.DataFrame, keys: np.ndarray, level: int):
-    """``(row, block position, coordinates)`` of an edge batch: the
-    distinct (edge, block cell) pairs whose cells overlap in leaf range,
-    one covering cell at a time against the sorted block ``keys``."""
+def _edge_rows(pdf: pd.DataFrame):
+    """An edge batch's covering cells as ``(owner edge, leaf range min,
+    leaf range max)``, derived once and ordered by (edge, range min), and
+    its endpoint coordinates.  In that order each lookup's binary
+    searches run over nearly sorted needles and its (edge, block) ids
+    come out nearly sorted, which halves the cost of a lookup."""
     X = pdf[E_COLS].to_numpy(np.float64)
     owner, cell = _edge_coverings_flat(X[:, :3], X[:, 3:])
-    lo = np.searchsorted(cellid.range_max(keys), cellid.range_min(cell), "left")
-    hi = np.searchsorted(cellid.range_min(keys), cellid.range_max(cell), "right")
+    cmin = cellid.range_min(cell)
+    order = np.lexsort((cmin, owner))
+    return (owner[order], cmin[order], cellid.range_max(cell)[order]), X
+
+
+def _edge_lookup(cover, keys: np.ndarray, level: int):
+    """``(row, block position)``: the distinct (edge, block cell) pairs
+    whose cells overlap in leaf range, one covering cell at a time
+    against the sorted block ``keys``, in ascending (edge, block) order."""
+    owner, cmin, cmax = cover
+    lo = np.searchsorted(cellid.range_max(keys), cmin, "left")
+    hi = np.searchsorted(cellid.range_min(keys), cmax, "right")
     cnt = hi - lo
     off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    pair = np.unique(np.repeat(owner, cnt) * len(keys) + np.repeat(lo, cnt) + off)
-    return pair // len(keys), pair % len(keys), X
+    pair = np.repeat(owner, cnt) * len(keys) + np.repeat(lo, cnt) + off
+    pair = np.sort(pair, kind="stable")  # timsort: linear on sorted runs
+    new = np.ones(len(pair), bool)
+    new[1:] = pair[1:] != pair[:-1]
+    pair = pair[new]
+    return pair // len(keys), pair % len(keys)
 
 
 def _edge_chord2(Q: np.ndarray, X: np.ndarray) -> np.ndarray:
     return measures.point_edge_chord2(Q, X[:, :3], X[:, 3:])
 
 
-EDGES = (_edge_lookup, _edge_chord2)
+EDGES = (_edge_rows, _edge_lookup, _edge_chord2)
 
 
 def closest_edges_join(

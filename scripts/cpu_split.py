@@ -10,17 +10,22 @@ reads ``/proc`` and prints the CPU seconds (user + system) of:
 
 * ``driver``: this Python process;
 * ``task``: the JVM's ``Executor task launch worker`` threads;
-* ``jit``: the JVM's compiler threads;
-* ``gc``: the JVM's garbage-collector threads;
-* ``jvm_other``: the rest of the JVM, threads that ended during the pass
+* ``jit``: the JVM's compiler threads, those that ended during the pass
   included;
+* ``gc``: the JVM's garbage-collector threads;
+* ``jvm_other``: the rest of the JVM, other threads that ended during
+  the pass included;
 * ``python``: the Python workers below the JVM (the daemon and its
   forked workers, with the workers it has reaped).
 
-A worker that was alive at the start of a pass and was reaped during it
-is counted whole in its parent's ``cutime``, so ``python`` may run high
-by the part of its life before the pass.  The last line is JSON: the
-median of each class over the timed passes.
+The JVM starts and stops compiler threads inside a pass, so its threads
+are also read every ``POLL_S`` seconds during the pass, and a thread
+that ended counts in its class up to its last reading (the polling's own
+CPU lands in ``driver``).  A worker that was alive at the start of a
+pass and was reaped during it is counted whole in its parent's
+``cutime``, so ``python`` may run high by the part of its life before
+the pass.  The last line is JSON: the median of each class over the
+timed passes.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ import os
 import shutil
 import statistics
 import sys
+import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -44,6 +50,7 @@ THREAD_CLASSES = (
     ("gc", ("GC Thread", "G1 ")),
 )
 TICK = os.sysconf("SC_CLK_TCK")
+POLL_S = 0.02
 
 
 def _stat(path: str) -> tuple[str, list[str]] | None:
@@ -68,6 +75,39 @@ def _thread_class(name: str) -> str | None:
     return None
 
 
+def _threads(jvm: int) -> dict[int, tuple[str | None, int]]:
+    """{tid: (class, ticks)} of the JVM's live threads."""
+    out = {}
+    try:
+        tids = os.listdir(f"/proc/{jvm}/task")
+    except OSError:
+        return out
+    for tid in tids:
+        st = _stat(f"/proc/{jvm}/task/{tid}/stat")
+        if st:
+            out[int(tid)] = (_thread_class(st[0]), _ticks(st[1], False))
+    return out
+
+
+class ThreadPoller(threading.Thread):
+    """Reads the JVMs' threads every ``POLL_S`` seconds until stopped and
+    keeps each thread's last reading in ``threads``."""
+
+    def __init__(self, jvms: list[int]):
+        super().__init__(daemon=True)
+        self.jvms, self.threads, self.done = jvms, {}, threading.Event()
+
+    def run(self) -> None:
+        while not self.done.wait(POLL_S):
+            for jvm in self.jvms:
+                self.threads.update(_threads(jvm))
+
+    def stop(self) -> dict:
+        self.done.set()
+        self.join()
+        return self.threads
+
+
 def sample() -> dict:
     """Ticks of the driver, of every JVM thread ({tid: (class, ticks)}),
     of the whole JVM and of the Python workers below it."""
@@ -80,13 +120,10 @@ def sample() -> dict:
                 procs[int(entry)] = st
     jvms = [p for p, (name, f) in procs.items() if int(f[1]) == me and name == "java"]
     out = {"driver": _ticks(procs[me][1], children=False), "jvm": 0, "threads": {},
-           "python": 0}
+           "python": 0, "jvms": jvms}
     for jvm in jvms:
         out["jvm"] += _ticks(procs[jvm][1], children=False)
-        for tid in os.listdir(f"/proc/{jvm}/task"):
-            st = _stat(f"/proc/{jvm}/task/{tid}/stat")
-            if st:
-                out["threads"][int(tid)] = (_thread_class(st[0]), _ticks(st[1], False))
+        out["threads"].update(_threads(jvm))
         frontier = [jvm]
         while frontier:
             parent = frontier.pop()
@@ -96,12 +133,13 @@ def sample() -> dict:
     return out
 
 
-def split(before: dict, after: dict) -> dict[str, float]:
-    """CPU seconds per class between two samples."""
+def split(before: dict, polled: dict, after: dict) -> dict[str, float]:
+    """CPU seconds per class between two samples, with the threads
+    ``polled`` in between that had ended by the second."""
     cpu = dict.fromkeys(CLASSES, 0)
     cpu["driver"] = after["driver"] - before["driver"]
     cpu["python"] = after["python"] - before["python"]
-    for tid, (cls, ticks) in after["threads"].items():
+    for tid, (cls, ticks) in {**polled, **after["threads"]}.items():
         if cls is not None:
             cpu[cls] += ticks - before["threads"].get(tid, (cls, 0))[1]
     cpu["jvm_other"] = after["jvm"] - before["jvm"] - cpu["task"] - cpu["jit"] - cpu["gc"]
@@ -141,12 +179,17 @@ def main() -> int:
         wl.prepare()
         wl.reference()
         warm = getattr(wl, "warmup_passes", 1)
+        print(f"JVM threads polled every {POLL_S * 1000:.0f} ms during each pass")
         print(f"{'pass':>6} {'wall':>6} {'total':>6} " + " ".join(f"{c:>9}" for c in CLASSES))
         timed, wrong = [], 0
         for i in range(warm + args.passes):
-            before, t = sample(), time.perf_counter()
+            before = sample()
+            poller = ThreadPoller(before["jvms"])
+            poller.start()
+            t = time.perf_counter()
             out = wl.run_pass()
-            wall, cpu = time.perf_counter() - t, split(before, sample())
+            wall, polled = time.perf_counter() - t, poller.stop()
+            cpu = split(before, polled, sample())
             wrong += wl.check(out)
             if i >= warm:
                 timed.append(cpu)
@@ -154,7 +197,7 @@ def main() -> int:
             print(f"{label:>6} {wall:6.2f} {sum(cpu.values()):6.2f} "
                   + " ".join(f"{cpu[c]:9.2f}" for c in CLASSES), flush=True)
         medians = {c: round(statistics.median(p[c] for p in timed), 3) for c in CLASSES}
-        print(json.dumps({"workload": args.workload, "seed": args.seed,
+        print(json.dumps({"workload": args.workload, "seed": args.seed, "poll_ms": POLL_S * 1000,
                           "correct": wrong == 0, "cpu_s": medians}))
         return 0 if wrong == 0 else 1
     finally:

@@ -206,6 +206,142 @@ class TestKnnJoin:
                 start_level=20, num_stages=1,
             )
 
+    # Each batch settles a query at the finest block level of the scan's
+    # ladder (start, +3, +6, +9) that holds k of its rows nearer than its
+    # bound; these fixtures mix queries that settle fine with ones that
+    # only the start level serves.
+
+    def test_dense_cluster_and_sparse_tail_from_a_coarse_level(self, spark):
+        pts, pids, qts, qkeys = _cluster_and_tail()
+        k = 5
+        fine, coarse = _settles_at(pts, qts, k, 13)
+        assert fine.any() and coarse.any()
+        got = knn_join(
+            spark, *_knn_frames(spark, pts, pids, qts, qkeys), k, start_level=4
+        ).toPandas()
+        assert _rows(got) == _knn_reference(pts, pids, qts, qkeys, k)
+
+    def test_many_arrow_batches_per_partition(self, spark):
+        pts, pids, qts, qkeys = _cluster_and_tail()
+        points, queries = _knn_frames(spark, pts, pids, qts, qkeys)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        batch = 64
+        assert len(pts) > 4 * batch * points.rdd.getNumPartitions()
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(batch))
+        try:
+            got = knn_join(spark, points, queries, 5, start_level=4).toPandas()
+        finally:
+            spark.conf.set(key, old)
+        assert _rows(got) == _knn_reference(pts, pids, qts, qkeys, 5)
+
+    def test_ties_cut_at_a_fine_levels_kth_row(self, spark):
+        # every clustered coordinate three times under scattered pids: a
+        # query settled at level 13 has its k-th row inside a tie
+        pts, pids, qts, qkeys = _cluster_and_tail(n_dense=900, n_tail=300)
+        P = np.concatenate([pts, pts, pts])
+        ids = np.concatenate([pids * 3 + 2, pids * 3, pids * 3 + 1])
+        k = 4
+        fine, _ = _settles_at(P, qts, k, 13)
+        assert fine.any()
+        got = knn_join(
+            spark, *_knn_frames(spark, P, ids, qts, qkeys), k, start_level=4
+        ).toPandas()
+        assert _rows(got) == _knn_reference(P, ids, qts, qkeys, k)
+
+    def test_cube_corner_and_pole_queries(self, spark):
+        corner = np.full(3, 1 / np.sqrt(3))
+        pole = np.array([0.0, 0.0, 1.0])
+        pts, pids, _, _ = _cluster_and_tail(centers=[corner, pole])
+        tilt = _unit(corner + np.array([1e-6, -1e-6, 0.0]))
+        qts = np.stack([corner, pole, tilt, -corner, -pole])
+        qkeys = np.arange(len(qts), dtype=np.int64)
+        k = 6
+        got = knn_join(
+            spark, *_knn_frames(spark, pts, pids, qts, qkeys), k, start_level=4
+        ).toPandas()
+        assert _rows(got) == _knn_reference(pts, pids, qts, qkeys, k)
+
+    def test_fine_rows_with_a_nearer_row_outside_do_not_settle(self, spark):
+        # k rows inside each query's level-13 block and one nearer row
+        # just outside it, all in one partition: level 13 must not settle
+        qts, trap, halo = _block_trap(13)
+        tail, _ = _xyz(500)
+        pts = np.concatenate([trap.reshape(-1, 3), halo, tail])
+        pids = np.arange(len(pts), dtype=np.int64)
+        qkeys = np.arange(len(qts), dtype=np.int64)
+        points, queries = _knn_frames(spark, pts, pids, qts, qkeys)
+        got = knn_join(spark, points.coalesce(1), queries, 4, start_level=4).toPandas()
+        assert _rows(got) == _knn_reference(pts, pids, qts, qkeys, 4)
+
+
+def _unit(X):
+    return X / np.linalg.norm(X, axis=-1, keepdims=True)
+
+
+def _cluster_and_tail(n_dense=3000, n_tail=1000, centers=None, seed=17):
+    """Points: ``n_dense`` within about 1e-4 rad of a few centers, plus
+    ``n_tail`` spread over the sphere.  Queries: ten near the centers,
+    twenty anywhere.  Returns (pts, pids, qts, qkeys)."""
+    rng = np.random.RandomState(seed)
+    if centers is None:
+        centers = _unit(rng.randn(3, 3))
+    C = np.asarray(centers)
+    dense = C[rng.randint(len(C), size=n_dense)] + 1e-4 * rng.randn(n_dense, 3)
+    pts = _unit(np.concatenate([dense, rng.randn(n_tail, 3)]))
+    near = C[rng.randint(len(C), size=10)] + 5e-5 * rng.randn(10, 3)
+    qts = _unit(np.concatenate([near, rng.randn(20, 3)]))
+    pids = rng.permutation(len(pts)).astype(np.int64) * 5 + 1
+    return pts, pids, qts, np.arange(len(qts), dtype=np.int64) * 7 + 3
+
+
+def _block_trap(level, n=8, seed=3):
+    """Queries at ``n`` level-``level`` cell centers, and per query five
+    points: four inside its 3x3 block toward the block's corners and,
+    last, one just outside the block that is nearer than the farthest
+    of the four.  A halo of 40 points 0.01-0.03 rad around each query
+    fills its coarse blocks, so that the fine level meets far fewer
+    pairs than a scan at a coarse level and is scored.
+    Returns (qts, trap points of shape (n, 5, 3), halo points)."""
+    from s2geometry_spark.operators import knn
+
+    rng = np.random.RandomState(seed)
+    seeds = _unit(rng.randn(n, 3))
+    own = cellid.parent(cellid.from_xyz(*seeds.T), level)
+    c = np.stack(cellid.to_point(own), axis=1)
+    V = cellid.corners_xyz(own)
+    inside = _unit(c[:, None, :] + 2.6 * (V - c[:, None, :]))
+    outside = _unit(c + 3.3 * ((V[:, 0] + V[:, 1]) / 2 - c))
+    trap = np.concatenate([inside, outside[:, None, :]], axis=1)
+    # the fixture's premise: the four are in the block, the fifth is not
+    # and is nearer, and the k-th of the four is beyond the bound
+    keys = knn._block_table(cellid.from_xyz(*c.T), level)[0]
+    par = cellid.parent(cellid.from_xyz(*trap.reshape(-1, 3).T), level)
+    assert (np.isin(par, keys).reshape(n, 5) == [True] * 4 + [False]).all()
+    d = ((trap - c[:, None, :]) ** 2).sum(axis=2)
+    assert (d[:, 4] < d[:, :4].max(axis=1)).all()
+    bound = knn.query_bound_chord2(c, cellid.from_xyz(*c.T), level)
+    assert (d[:, :4].max(axis=1) > bound).all()
+    t = rng.randn(n, 40, 3)
+    t -= (t * c[:, None, :]).sum(axis=2, keepdims=True) * c[:, None, :]
+    r = rng.uniform(0.01, 0.03, (n, 40, 1))
+    halo = _unit(c[:, None, :] + r * _unit(t)).reshape(-1, 3)
+    assert not np.isin(cellid.parent(cellid.from_xyz(*halo.T), level), keys).any()
+    return c, trap, halo
+
+
+def _settles_at(pts, qts, k, level):
+    """(fine, coarse): whether each query's global k-th distance beats
+    its bound at ``level``, i.e. whether its k nearest points lie in its
+    block there with nothing outside nearer."""
+    from s2geometry_spark.operators import knn
+
+    d = ((qts[:, None, :] - pts[None, :, :]) ** 2).sum(axis=2)
+    kth = np.sort(d, axis=1)[:, k - 1]
+    cells = cellid.from_xyz(qts[:, 0], qts[:, 1], qts[:, 2])
+    fine = kth < knn.query_bound_chord2(qts, cells, level)
+    return fine, ~fine
+
 
 def _knn_frames(spark, pts, pids, qts, qkeys):
     """(points, queries) frames in knn_join's input schema."""
@@ -250,9 +386,9 @@ def _record_scan_levels(monkeypatch):
 
     levels, scan = [], knn._scan
 
-    def spy(points, pid, Q, table, level, k):
+    def spy(points, kind, Q, cells, level, k):
         levels.append(level)
-        return scan(points, pid, Q, table, level, k)
+        return scan(points, kind, Q, cells, level, k)
 
     monkeypatch.setattr(knn, "_scan", spy)
     return levels

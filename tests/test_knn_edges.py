@@ -293,3 +293,107 @@ def test_project_to_closest_edges_leaves_no_persistent_rdds(spark, edge_tables):
     before = jsc.getPersistentRDDs().size()
     project_to_closest_edges(spark, edges, queries).toPandas()
     assert jsc.getPersistentRDDs().size() == before
+
+
+# Each batch settles a query at the finest block level of the scan's
+# ladder (start, +3, +6, +9) that holds k of its edges nearer than its
+# bound.  The fixtures are knn_join's, with every point the first
+# endpoint of a short edge, checked against an exhaustive NumPy top-k.
+
+
+def _short_edges(spark, P, length, ids=None, seed=5):
+    """(edges frame, endpoints (n, 6), eids): an edge of about
+    ``length`` rad from every point of ``P``, in one partition per core,
+    each holding a contiguous run of the rows (the join keeps them)."""
+    rng = np.random.RandomState(seed)
+    E = np.concatenate([P, _unit(P + length * rng.randn(len(P), 3))], axis=1)
+    ids = np.arange(len(P)) if ids is None else np.asarray(ids)
+    sc = spark.sparkContext
+    rows = [(int(i), *map(float, e)) for i, e in zip(ids, E)]
+    df = spark.createDataFrame(
+        sc.parallelize(rows, sc.defaultParallelism),
+        "eid long, e0x double, e0y double, e0z double, "
+        "e1x double, e1y double, e1z double",
+    )
+    return df, E, ids
+
+
+def _edge_reference(Q, E, ids, k):
+    """Exhaustive top-k in (chord², eid) order, sorted like ``_sorted``."""
+    rows = []
+    for i, q in enumerate(Q):
+        d = measures.point_edge_chord2(np.broadcast_to(q, (len(E), 3)), E[:, :3], E[:, 3:])
+        for r, j in enumerate(np.lexsort((ids, d))[:k], start=1):
+            rows.append((i, r, int(ids[j]), float(d[j])))
+    return sorted(rows)
+
+
+def _assert_matches_reference(spark, P, Q, k, length=1e-6, ids=None):
+    edges, E, ids = _short_edges(spark, P, length, ids)
+    got = _sorted(closest_edges_join(spark, edges, _queries_df(spark, Q), k, start_level=4))
+    assert got == _edge_reference(Q, E, ids, k)
+
+
+def test_dense_cluster_and_sparse_tail_from_a_coarse_level(spark):
+    from tests.test_joins import _cluster_and_tail
+
+    pts, _, qts, _ = _cluster_and_tail()
+    _assert_matches_reference(spark, pts, qts, 5)
+
+
+def test_many_arrow_batches_per_partition(spark):
+    from tests.test_joins import _cluster_and_tail
+
+    pts, _, qts, _ = _cluster_and_tail()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch = 64
+    assert len(pts) > 4 * batch * spark.sparkContext.defaultParallelism
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        _assert_matches_reference(spark, pts, qts, 5)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_ties_cut_at_a_fine_levels_kth_edge(spark):
+    """Every clustered edge three times under scattered eids."""
+    from tests.test_joins import _cluster_and_tail
+
+    pts, _, qts, _ = _cluster_and_tail(n_dense=900, n_tail=300)
+    n = len(pts)
+    ids = np.concatenate([np.arange(n) * 3 + 2, np.arange(n) * 3, np.arange(n) * 3 + 1])
+    _assert_matches_reference(spark, np.concatenate([pts] * 3), qts, 4, length=0.0, ids=ids)
+
+
+def test_cube_corner_and_pole_queries(spark):
+    from tests.test_joins import _cluster_and_tail
+
+    corner = np.full(3, 1 / np.sqrt(3))
+    pole = np.array([0.0, 0.0, 1.0])
+    pts, _, _, _ = _cluster_and_tail(centers=[corner, pole])
+    tilt = _unit(corner[None, :] + [[1e-6, -1e-6, 0.0]])[0]
+    Q = np.stack([corner, pole, tilt, -corner, -pole])
+    _assert_matches_reference(spark, pts, Q, 6)
+
+
+def test_fine_edges_with_a_nearer_edge_outside_do_not_settle(spark):
+    """Four edges inside each query's level-13 block and one nearer edge
+    just outside it, all in the first partition: level 13 must not
+    settle."""
+    from s2geometry_spark.operators import knn
+    from s2geometry_spark.operators.edge_join import _edge_coverings_flat
+    from tests.test_joins import _block_trap, _xyz
+
+    qts, trap, halo = _block_trap(13)
+    tail, _ = _xyz(500)
+    P = np.concatenate([trap.reshape(-1, 3), halo, tail])
+    # the outside edges' coverings stay outside the blocks
+    _, E, _ = _short_edges(spark, P, 1e-9)
+    owner, cells = _edge_coverings_flat(E[:, :3], E[:, 3:])
+    keys = knn._block_table(cellid.from_xyz(*qts.T), 13)[0]
+    lo = np.searchsorted(cellid.range_max(keys), cellid.range_min(cells), "left")
+    hi = np.searchsorted(cellid.range_min(keys), cellid.range_max(cells), "right")
+    assert (hi == lo)[np.isin(owner, np.arange(4, 5 * len(qts), 5))].all()
+    assert 5 * len(qts) <= len(P) // spark.sparkContext.defaultParallelism
+    _assert_matches_reference(spark, P, qts, 4, length=1e-9)

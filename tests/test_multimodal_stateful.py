@@ -147,7 +147,22 @@ def test_streaming_tile_totals_accumulates(spark, event_stream_dirs):
     assert sum(want2.values()) == 280
 
 
-def test_streaming_first_seen_dedup(spark, tmp_path):
+@pytest.fixture
+def data_batches_only(spark):
+    """``streaming_first_seen`` times markers out by processing time, and
+    such a query asks for another (no-data) batch after every batch, so an
+    ``availableNow`` run would never end by itself and would go on running
+    no-data batches in the shared session.  Without no-data batches the
+    run ends once the files present are processed; expired markers are
+    then removed in the next data batch."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_streaming_first_seen_dedup(spark, tmp_path, data_batches_only):
     from s2geometry_spark.streaming.stateful import streaming_first_seen
 
     src = tmp_path / "src"
@@ -187,7 +202,7 @@ def test_streaming_first_seen_dedup(spark, tmp_path):
     assert got.select("key").distinct().count() == 120
 
 
-def test_streaming_first_seen_ttl_bounds_state(spark, tmp_path):
+def test_streaming_first_seen_ttl_bounds_state(spark, tmp_path, data_batches_only):
     """With a TTL, an idle key's marker is expired and REMOVED, so (a)
     state stays bounded by the trailing window's distinct keys and (b) a
     duplicate arriving after expiry is re-emitted — the documented

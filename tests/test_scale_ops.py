@@ -158,3 +158,32 @@ def test_workers_run_the_zip_reread_guard(spark):
     )
     assert len(rows) == 16
     assert all(r.guarded == r.expected for r in rows), rows
+
+
+def test_workers_freeze_their_import_time_heap(spark):
+    """Every Python worker that runs an engine UDF has frozen its
+    import-time objects out of the per-task ``gc.collect()``; the
+    driver's heap stays unfrozen."""
+    import gc
+
+    import pandas as pd
+
+    def probe(batches):
+        import gc
+        import os
+
+        # unpickling this function imports the engine, as any engine UDF's does
+        assert tiling.__name__ == "s2geometry_spark.operators.tiling"
+        for b in batches:
+            yield pd.DataFrame({"pid": [os.getpid()] * len(b),
+                                "frozen": [gc.get_freeze_count()] * len(b)})
+
+    driver = gc.get_freeze_count()
+    rows = (
+        spark.range(16, numPartitions=16)
+        .mapInPandas(probe, "pid long, frozen long")
+        .collect()
+    )
+    assert len(rows) == 16
+    assert all(r.frozen > 0 for r in rows), rows
+    assert gc.get_freeze_count() == driver

@@ -2890,8 +2890,9 @@ def _poly_boolean_shared_oracle() -> str:
 
 
 def q_cap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """within-distance (cap) join: covering-term candidates + pure-SQL
-    chord^2 refinement."""
+    """within-distance (cap) join: contains_join's covering-lookup scan
+    for candidates (one scan, no join, no shuffle) + pure-SQL chord^2
+    refinement.  Pairs come per order row; o_orderkey is unique."""
     pts = _order_points_xyz(spark, sf_dir)
     return cap_join(spark, pts, _caps())
 
@@ -2899,8 +2900,9 @@ def q_cap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rect_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2LatLngRect::Contains(S2Point) join (s2latlng_rect.cc:248-262,
     s2latlng_rect_test.cc), incl. an antimeridian-wrapping rect and a
-    full-longitude polar rect; covering-term candidates + atan2-free SQL
-    refinement (z = sin(lat) bounds, meridian half-plane signs)."""
+    full-longitude polar rect; contains_join's covering-lookup scan for
+    candidates + atan2-free SQL refinement (z = sin(lat) bounds, meridian
+    half-plane signs).  Pairs come per order row; o_orderkey is unique."""
     from s2geometry_spark.operators.contains_join import rect_join
 
     pts = _order_points_xyz(spark, sf_dir)

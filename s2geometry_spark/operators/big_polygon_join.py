@@ -1,9 +1,10 @@
 """Containment join against a LARGE polygon table (no broadcast).
 
-`contains_join` (term-indexer + broadcast) assumes the polygon set fits
-on the driver — the north-star case.  At 10^12 scale the polygon side can
-itself be a big table; this operator keeps the same two-phase shape with
-every step distributed:
+`contains_join` (one scan looking each point's cell up in the driver's
+covering table) assumes the polygon set fits on the driver — the
+north-star case.  At 10^12 scale the polygon side can itself be a big
+table; this operator matches points to polygons with S2's term indexer
+instead, every step distributed, and is the engine's one copy of it:
 
 1. **index terms** — each polygon's covering + ancestor terms are computed
    INSIDE a mapInPandas pass (the RegionCoverer port runs per-row in the
@@ -28,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import functions as s2f
 from ..kernels import cellid
 from ..kernels.coverer import CovererOptions, RegionCoverer
 from ..kernels.predicates import compute_origin_inside, polygon_contains_points
@@ -37,8 +39,6 @@ from .contains_join import (
     DEFAULT_MAX_CELLS,
     DEFAULT_MAX_LEVEL,
     DEFAULT_MIN_LEVEL,
-    RegionIndex,
-    point_query_terms,
 )
 
 TERM_SCHEMA = "term_cell long, is_covering boolean, poly_id string"
@@ -53,6 +53,67 @@ def polygons_to_df(spark: SparkSession, regions: dict[str, object]) -> DataFrame
     return spark.createDataFrame(
         rows, schema="poly_id string, loops array<array<array<double>>>"
     )
+
+
+def index_terms(
+    covering: np.ndarray, min_level: int, level_mod: int, true_max_level: int
+) -> list[tuple[int, bool]]:
+    """Index terms ``(biased_cell, is_covering)`` of a canonical covering
+    whose cells lie on the ``min_level``/``level_mod`` grid:
+    GetIndexTermsForCanonicalCovering (s2region_term_indexer.cc:164-213),
+    optimize_for_space=False."""
+    out = []
+    prev_id = None
+    for v in covering.tolist():
+        arr = np.array([v], dtype=np.uint64)
+        level = int(cellid.level(arr)[0])
+        b = int(cellid.to_biased(arr)[0])
+        if level < true_max_level:
+            out.append((b, True))  # covering term
+        out.append((b, False))  # ancestor term for the cell itself
+        lv = level
+        while True:
+            lv -= level_mod
+            if lv < min_level:
+                break
+            anc = cellid.parent(arr, lv)
+            if prev_id is not None:
+                pa = np.array([prev_id], dtype=np.uint64)
+                if int(cellid.level(pa)[0]) > lv and int(
+                    cellid.parent(pa, lv)[0]
+                ) == int(anc[0]):
+                    break
+            out.append((int(cellid.to_biased(anc)[0]), False))
+        prev_id = v
+    return out
+
+
+def point_query_terms(
+    df: DataFrame, min_level: int, level_mod: int, true_max_level: int, cell: str = "cell"
+) -> DataFrame:
+    """GetQueryTerms for points (s2region_term_indexer.cc:215-245) as pure
+    SQL: one ancestor term at true_max_level + covering terms for every
+    ancestor level.  Stays in whole-stage codegen; output has one row per
+    (row, term) after the explode."""
+    terms = [
+        F.struct(
+            s2f.parent_expr(cell, true_max_level).alias("term_cell"),
+            F.lit(False).alias("is_covering"),
+        )
+    ]
+    lv = true_max_level
+    while lv >= min_level:
+        terms.append(
+            F.struct(
+                s2f.parent_expr(cell, lv).alias("term_cell"),
+                F.lit(True).alias("is_covering"),
+            )
+        )
+        lv -= level_mod
+    return df.withColumn("q_term", F.explode(F.array(*terms))).select(
+        "*", F.col("q_term.term_cell").alias("term_cell"),
+        F.col("q_term.is_covering").alias("is_covering"),
+    ).drop("q_term")
 
 
 def polygon_index_terms(
@@ -75,7 +136,7 @@ def polygon_index_terms(
         coverer = RegionCoverer(opts)
         true_max = opts.true_max_level()
         for pdf in it:
-            cells_out, cov_out, pid_out = [], [], []
+            rows = []
             for row in pdf.itertuples(index=False):
                 loops = [
                     Loop(np.stack([np.asarray(v, np.float64) for v in lv]))
@@ -83,34 +144,11 @@ def polygon_index_terms(
                 ]
                 region = Polygon(loops) if len(loops) > 1 else loops[0]
                 covering = coverer.get_covering(region)
-                # GetIndexTermsForCanonicalCovering (optimize_for_space=False)
-                prev_id = None
-                for v in covering.tolist():
-                    arr = np.array([v], dtype=np.uint64)
-                    lv = int(cellid.level(arr)[0])
-                    b = int(cellid.to_biased(arr)[0])
-                    if lv < true_max:
-                        cells_out.append(b); cov_out.append(True); pid_out.append(row.poly_id)
-                    cells_out.append(b); cov_out.append(False); pid_out.append(row.poly_id)
-                    lvl = lv
-                    while True:
-                        lvl -= level_mod
-                        if lvl < min_level:
-                            break
-                        anc = cellid.parent(arr, lvl)
-                        if prev_id is not None:
-                            pa = np.array([prev_id], dtype=np.uint64)
-                            if int(cellid.level(pa)[0]) > lvl and int(
-                                cellid.parent(pa, lvl)[0]
-                            ) == int(anc[0]):
-                                break
-                        cells_out.append(int(cellid.to_biased(anc)[0]))
-                        cov_out.append(False)
-                        pid_out.append(row.poly_id)
-                    prev_id = v
-            yield pd.DataFrame(
-                {"term_cell": cells_out, "is_covering": cov_out, "poly_id": pid_out}
-            )
+                rows += [
+                    (b, is_cov, row.poly_id)
+                    for b, is_cov in index_terms(covering, min_level, level_mod, true_max)
+                ]
+            yield pd.DataFrame(rows, columns=["term_cell", "is_covering", "poly_id"])
 
     return polygons.mapInPandas(batches, TERM_SCHEMA)
 
@@ -133,15 +171,9 @@ def contains_join_big(
         level_mod=index_opts.get("level_mod", DEFAULT_LEVEL_MOD),
     )
     terms = polygon_index_terms(polygons, **index_opts)
-
-    # a tiny shim index carrying just the level parameters for the
-    # pure-SQL point query-term generator
-    class _Opts:
-        min_level = opts.min_level
-        level_mod = opts.level_mod
-        true_max_level = opts.true_max_level()
-
-    q = point_query_terms(points, _Opts, cell=cell)
+    q = point_query_terms(
+        points, opts.min_level, opts.level_mod, opts.true_max_level(), cell=cell
+    )
     x, y, z = xyz
     cand = (
         q.join(terms, ["term_cell", "is_covering"])

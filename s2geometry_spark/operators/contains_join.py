@@ -19,14 +19,13 @@ Plan shape: one ``mapInPandas`` over ``(point_id, cell, x, y, z)``.
 No explode, no broadcast join, no shuffle, and one Python crossing: the
 plan is a single stage whatever the number of regions, overlapping ones
 included.  ``cell_union_contains_join`` is the same scan without the
-refinement.  ``cap_join`` and ``rect_join`` refine in SQL and keep the
-term-indexer equi-join (``point_query_terms`` against
-``RegionIndex.terms``), as does ``big_polygon_join``.
+refinement.  ``cap_join`` and ``rect_join`` take the scan's candidates
+(``exact=False``) and refine them with a SQL predicate instead.  Only
+``big_polygon_join``, whose regions are a table rather than a driver
+dict, keeps the term-indexer equi-join.
 """
 
 from __future__ import annotations
-
-from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -35,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import functions as s2f
-from ..kernels import cellid, cellunion
+from ..kernels import cellid
 from ..kernels.coverer import CovererOptions, RegionCoverer
 
 # S2RegionTermIndexer defaults (s2region_term_indexer.h)
@@ -46,12 +45,11 @@ DEFAULT_MAX_CELLS = 8
 
 
 class RegionIndex:
-    """Driver-side index of a (broadcast-scale) region set.
-
-    Builds a canonical covering for each region and keeps the region
-    objects for the exact refinement kernel.  The S2 index terms the
-    term-indexer joins need are built on first use.
-    """
+    """Driver-side index of a (broadcast-scale) region set: a canonical
+    covering per region (``coverings``) for the scan's cell lookup, and
+    the region objects (``regions``) for the exact refinement kernel.
+    ``contains_join``, ``cap_join`` and ``rect_join`` match points to it
+    per input row, so a point id that repeats can repeat a pair."""
 
     def __init__(
         self,
@@ -66,17 +64,14 @@ class RegionIndex:
         (must COVER the region, e.g. a cell raster the region was traced
         from); regions without one are covered by the RegionCoverer."""
         self.regions = regions
-        self.min_level = min_level
-        self.max_level = max_level
-        self.level_mod = level_mod
-        opts = CovererOptions(
-            max_cells=max_cells,
-            min_level=min_level,
-            max_level=max_level,
-            level_mod=level_mod,
+        coverer = RegionCoverer(
+            CovererOptions(
+                max_cells=max_cells,
+                min_level=min_level,
+                max_level=max_level,
+                level_mod=level_mod,
+            )
         )
-        self.true_max_level = opts.true_max_level()
-        coverer = RegionCoverer(opts)
         pre = coverings or {}
         self.coverings: dict[str, np.ndarray] = {
             rid: (
@@ -86,80 +81,6 @@ class RegionIndex:
             )
             for rid, region in regions.items()
         }
-
-    @cached_property
-    def terms(self) -> list[tuple[int, bool, str]]:
-        """Index terms ``(biased_cell, is_covering, rid)`` for the
-        term-indexer joins.  Covering cells coarser than ``min_level`` (or
-        off the ``level_mod`` grid) are first expanded onto it, as
-        S2CellUnion::Denormalize does: a point's query terms stop at
-        ``min_level``, so such a cell would otherwise match nothing."""
-        return [
-            (cell_b, is_cov, rid)
-            for rid, covering in self.coverings.items()
-            for cell_b, is_cov in self._index_terms(
-                cellunion.denormalize(covering, self.min_level, self.level_mod)
-            )
-        ]
-
-    def _index_terms(self, covering: np.ndarray):
-        """GetIndexTermsForCanonicalCovering (s2region_term_indexer.cc:164-213),
-        optimize_for_space=False."""
-        out = []
-        prev_id = None
-        for v in covering.tolist():
-            arr = np.array([v], dtype=np.uint64)
-            level = int(cellid.level(arr)[0])
-            if level < self.true_max_level:
-                out.append((int(cellid.to_biased(arr)[0]), True))  # covering term
-            # ancestor term for the cell itself (optimize_for_space=False)
-            out.append((int(cellid.to_biased(arr)[0]), False))
-            lv = level
-            while True:
-                lv -= self.level_mod
-                if lv < self.min_level:
-                    break
-                anc = cellid.parent(arr, lv)
-                if prev_id is not None:
-                    pa = np.array([prev_id], dtype=np.uint64)
-                    if int(cellid.level(pa)[0]) > lv and int(
-                        cellid.parent(pa, lv)[0]
-                    ) == int(anc[0]):
-                        break
-                out.append((int(cellid.to_biased(anc)[0]), False))
-            prev_id = v
-        return out
-
-    def terms_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self.terms, schema="term_cell long, is_covering boolean, poly_id string"
-        )
-
-
-def point_query_terms(df: DataFrame, index: RegionIndex, cell: str = "cell") -> DataFrame:
-    """GetQueryTerms for points (s2region_term_indexer.cc:215-245) as pure
-    SQL: one ancestor term at true_max_level + covering terms for every
-    ancestor level.  Stays in whole-stage codegen; output has one row per
-    (row, term) after the explode."""
-    terms = [
-        F.struct(
-            s2f.parent_expr(cell, index.true_max_level).alias("term_cell"),
-            F.lit(False).alias("is_covering"),
-        )
-    ]
-    lv = index.true_max_level
-    while lv >= index.min_level:
-        terms.append(
-            F.struct(
-                s2f.parent_expr(cell, lv).alias("term_cell"),
-                F.lit(True).alias("is_covering"),
-            )
-        )
-        lv -= index.level_mod
-    return df.withColumn("q_term", F.explode(F.array(*terms))).select(
-        "*", F.col("q_term.term_cell").alias("term_cell"),
-        F.col("q_term.is_covering").alias("is_covering"),
-    ).drop("q_term")
 
 
 def _loops_of(region):
@@ -182,17 +103,13 @@ def cap_join(
     **index_opts,
 ) -> DataFrame:
     """within-distance join: all (point, cap) pairs with the point inside
-    the spherical cap.  Candidates via the term join; refinement is a pure
-    SQL chord^2 test (JVM codegen, no Python) against the cap constants."""
+    the spherical cap, as ``(point_id, poly_id)``.  Candidates are
+    ``contains_join``'s covering lookup (``exact=False``, one scan, no
+    shuffle); refinement is a pure SQL chord^2 test (JVM codegen, no
+    Python) against the cap constants.  Pairs come per input row, as in
+    ``contains_join``: a repeated point id can repeat a pair."""
     index = RegionIndex(caps, **index_opts)
-    index.regions = caps  # caps are the regions; refinement below is SQL
-    terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = (
-        q.join(terms, ["term_cell", "is_covering"], "inner")
-        .select(point_id, *xyz, "poly_id")
-        .dropDuplicates([point_id, "poly_id"])
-    )
+    cand = contains_join(spark, points, index, point_id, cell, xyz, exact=False)
     x, y, z = xyz
     # refinement predicate: one CASE over the (few) caps — constant-folded
     expr = None
@@ -221,22 +138,17 @@ def rect_join(
     (s2latlng_rect.cc:248-262, tested throughout s2latlng_rect_test.cc),
     including antimeridian-wrapping and full-longitude polar rects.
 
-    Candidates via the same covering term join as cap_join;
-    refinement is pure SQL (JVM codegen, no Python) and avoids atan2
-    (bit-portability): latitude via the monotone z = sin(lat) bounds,
-    longitude via the two meridian half-plane signs — exact for spans
-    <= pi, which covers every rect a coverer-backed join should broadcast
-    (wider rects belong in a cell-union join)."""
+    Candidates via the same covering lookup as cap_join, with pairs per
+    input row as there; refinement is pure SQL (JVM codegen, no Python)
+    and avoids atan2 (bit-portability): latitude via the monotone
+    z = sin(lat) bounds, longitude via the two meridian half-plane
+    signs — exact for spans <= pi, which covers every rect a
+    coverer-backed join should broadcast (wider rects belong in a
+    cell-union join)."""
     import math
 
     index = RegionIndex(rects, **index_opts)
-    terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = (
-        q.join(terms, ["term_cell", "is_covering"], "inner")
-        .select(point_id, *xyz, "poly_id")
-        .dropDuplicates([point_id, "poly_id"])
-    )
+    cand = contains_join(spark, points, index, point_id, cell, xyz, exact=False)
     x, y, z = xyz
     expr = None
     for rid, rect in rects.items():

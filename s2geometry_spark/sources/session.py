@@ -14,6 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def half_available_mem(meminfo: str) -> str:
+    """Half of ``MemAvailable`` in a ``/proc/meminfo`` text, as a JVM
+    size in MB (``"7812m"``)."""
+    for line in meminfo.splitlines():
+        key, _, rest = line.partition(":")
+        if key == "MemAvailable":
+            return f"{int(rest.split()[0]) // 2048}m"
+    raise ValueError("no MemAvailable line in meminfo")
+
+
+def _default_driver_mem() -> str:
+    with open("/proc/meminfo") as f:
+        return half_available_mem(f.read())
+
+
 def get_spark(
     app_name: str = "s2geometry_spark",
     cpus: int | None = None,
@@ -21,7 +36,8 @@ def get_spark(
 ) -> SparkSession:
     """Local session.  Unset core counts come from ``SPARK_GRAFT_CPUS``,
     else from the cores this process may run on; shuffle partitions
-    default to two per core."""
+    default to two per core.  The driver heap is ``SPARK_DRIVER_MEM``,
+    else half the memory available when the session starts."""
     cpus = cpus or int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     )
@@ -41,7 +57,10 @@ def get_spark(
         # the session timezone; pin it so epoch arithmetic (event-time windows)
         # is deterministic and matches DuckDB's naive epoch_us()
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

@@ -14,8 +14,8 @@ def spark():
     from s2geometry_spark.sources.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # get_spark's 48g default let the JVM grow until the OOM killer took
-    # it in the oracle sweep, whose DuckDB children take up to 12.4 GB
+    # get_spark's default heap, half the memory available at start, still
+    # outgrows the oracle sweep's DuckDB children, which take up to 12.4 GB
     os.environ.setdefault("SPARK_DRIVER_MEM", "1g")
     spark = get_spark("s2spark-tests", cpus=8, shuffle_partitions=8)
     yield spark
@@ -55,6 +55,22 @@ class OracleResult:
         return self._pdf
 
 
+def _exit_with_parent(parent_pid):
+    """Pool initializer: a daemon thread ends this child once its parent
+    is no longer ``parent_pid``.  A pytest process taken by the OOM
+    killer would otherwise leave its oracle child running, holding what
+    DuckDB took (9.3 GB seen)."""
+    import threading
+    import time
+
+    def watch():
+        while os.getppid() == parent_pid:
+            time.sleep(0.2)
+        os._exit(1)
+
+    threading.Thread(target=watch, daemon=True).start()
+
+
 def oracle_pool():
     """An executor that runs each submitted oracle in a fresh spawned
     process.  DuckDB 1.0.0's allocator keeps what an oracle took after
@@ -62,7 +78,8 @@ def oracle_pool():
     9.2 GB for ``closed_set_normalize`` and 12.3 GB for
     ``polygon_validate``.  A child returns it when it exits, so the test
     process stays small next to the session JVM, and a child that dies
-    fails its test (BrokenProcessPool), not the suite."""
+    fails its test (BrokenProcessPool), not the suite.  A child whose
+    parent dies exits too (``_exit_with_parent``)."""
     import multiprocessing
     from concurrent.futures import ProcessPoolExecutor
 
@@ -70,6 +87,8 @@ def oracle_pool():
         max_workers=1,
         mp_context=multiprocessing.get_context("spawn"),
         max_tasks_per_child=1,
+        initializer=_exit_with_parent,
+        initargs=(os.getpid(),),
     )
 
 

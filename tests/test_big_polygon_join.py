@@ -6,9 +6,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from s2geometry_spark.kernels.coverer import CovererOptions
 from s2geometry_spark.kernels.regions import Loop, Polygon
 from s2geometry_spark.operators import big_polygon_join as bpj
-from s2geometry_spark.operators.contains_join import RegionIndex, contains_join
+from s2geometry_spark.operators.contains_join import (
+    DEFAULT_LEVEL_MOD,
+    DEFAULT_MAX_CELLS,
+    DEFAULT_MAX_LEVEL,
+    DEFAULT_MIN_LEVEL,
+    RegionIndex,
+    contains_join,
+)
 from tests.conftest import SF_TEST, load_entry
 
 
@@ -32,13 +40,24 @@ def pts(spark):
 
 
 def test_terms_match_driver_index(spark):
-    """Executor-side term generation == the driver-side RegionIndex terms."""
+    """Executor-side terms == the term walk over the driver's coverings:
+    the executors' RegionCoverer gives the driver's coverings."""
     polys = bpj.polygons_to_df(spark, REGIONS)
     got = {
         (r.term_cell, r.is_covering, r.poly_id)
         for r in bpj.polygon_index_terms(polys).collect()
     }
-    want = set(RegionIndex(REGIONS).terms)
+    true_max = CovererOptions(
+        max_cells=DEFAULT_MAX_CELLS, min_level=DEFAULT_MIN_LEVEL,
+        max_level=DEFAULT_MAX_LEVEL, level_mod=DEFAULT_LEVEL_MOD,
+    ).true_max_level()
+    want = {
+        (cell_b, is_cov, rid)
+        for rid, covering in RegionIndex(REGIONS).coverings.items()
+        for cell_b, is_cov in bpj.index_terms(
+            covering, DEFAULT_MIN_LEVEL, DEFAULT_LEVEL_MOD, true_max
+        )
+    }
     assert got == want
 
 

@@ -1,5 +1,6 @@
-"""Cell-keyed operators in one pass over the points: contains_join and
-cell_union_contains_join as one scan (plan shape; brute-force checks on
+"""Cell-keyed operators in one pass over the points: contains_join,
+cell_union_contains_join, cap_join and rect_join as one scan (plan
+shape; brute-force checks on
 overlapping regions, string ids, the candidate set and coverings coarser
 than min_level) and tile_rollup as one aggregation."""
 
@@ -10,13 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2geometry_spark.kernels import cellid, predicates
-from s2geometry_spark.kernels.regions import Cap, Loop
+from s2geometry_spark.kernels.regions import Cap, LatLngRect, Loop
 from s2geometry_spark.operators import tiling
 from s2geometry_spark.operators.contains_join import (
     RegionIndex,
     cap_join,
     cell_union_contains_join,
     contains_join,
+    rect_join,
 )
 from tests.test_joins import POLYS, _points_df
 
@@ -64,6 +66,18 @@ class TestContainsJoinScan:
         nodes = _plan_nodes(contains_join(spark, df, RegionIndex(POLYS)))
         assert not [n for n in nodes if "Exchange" in n]
         assert len([n for n in nodes if re.search(r"Python|Pandas|InArrow", n)]) == 1
+
+    def test_cap_and_rect_joins_are_one_scan_without_join(self, spark):
+        """cap_join and rect_join refine the scan's candidates in place:
+        no term explode joined to a broadcast table, no de-duplicating
+        shuffle."""
+        df, _, _ = _points_df(spark, 500)
+        caps = {"c": Cap.from_latlng_degrees(47.36, 8.55, 0.3)}
+        rects = {"box": LatLngRect.from_degrees(10.0, 20.0, 35.0, 55.0)}
+        for out in (cap_join(spark, df, caps), rect_join(spark, df, rects)):
+            nodes = _plan_nodes(out)
+            assert not [n for n in nodes if "Exchange" in n or "Join" in n], nodes
+            assert len([n for n in nodes if re.search(r"Python|Pandas|InArrow", n)]) == 1
 
     def test_overlapping_regions_match_brute_force(self, spark):
         df, pts, keys = _points_df(spark, 4000)
@@ -121,7 +135,7 @@ class TestContainsJoinScan:
     @pytest.mark.parametrize("level", [2, 3])
     def test_precomputed_covering_coarser_than_min_level(self, spark, level):
         """Covering cells above min_level: the scan looks them up at their
-        own level, and the term join expands them onto min_level."""
+        own level, for contains_join and for cap_join's candidates."""
         df, pts, keys = _points_df(spark, 4000)
         loop = POLYS["zurich"]
         cap = Cap.from_latlng_degrees(47.36, 8.55, 0.25)

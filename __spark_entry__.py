@@ -1519,8 +1519,7 @@ def _polygon_validate_oracle() -> str:
     star = star_order_cte_sql(raw)
     shr = shrink_loops_cte_sql("SELECT chain_id, seq, x, y, z FROM star_m", t=0.66)
     # the star pipeline is the expensive part and feeds three of the four
-    # members AND both sub-oracles; materialize it ONCE in a nested WITH
-    # (the sub-oracle builders each wrap this string in their own vsrc)
+    # members; materialize it ONCE in a nested WITH
     verts_sql = (
         f"WITH star_m AS MATERIALIZED ({star}) "
         f"SELECT chain_id * 4 AS chain_id, seq, x, y, z FROM star_m "
@@ -1534,10 +1533,15 @@ def _polygon_validate_oracle() -> str:
   FROM (SELECT DISTINCT chain_id FROM verts) a
   JOIN (SELECT DISTINCT chain_id FROM verts) b
     ON a.chain_id // 4 = b.chain_id // 4 AND b.chain_id > a.chain_id"""
-    lv = loop_validation_oracle_sql(verts_sql)
-    rel = loop_pair_distance_oracle_sql(verts_sql, pairs_sql)
+    # both sub-oracles read the family loops from ONE top-level CTE: DuckDB
+    # binds a CTE body again for every reference to a CTE that encloses it,
+    # so verts_sql inside each sub-oracle's WITH took 12 GB to bind
+    fam = "SELECT chain_id, seq, x, y, z FROM fam_verts"
+    lv = loop_validation_oracle_sql(fam)
+    rel = loop_pair_distance_oracle_sql(fam, pairs_sql)
     return f"""
-WITH lvres AS MATERIALIZED ({lv}),
+WITH fam_verts AS MATERIALIZED ({verts_sql}),
+lvres AS MATERIALIZED ({lv}),
 relres AS MATERIALIZED ({rel}),
 inv AS (
   SELECT loop_id // 4 AS family_id,
@@ -1642,15 +1646,12 @@ def _polygon_degeneracies_oracle() -> str:
     )
     raw = f"WITH {cte} SELECT chain_id, seq, x, y, z FROM axyz"
     star = star_order_cte_sql(raw)
-    boundary = (
-        f"WITH star_m AS MATERIALIZED ({star}) "
-        "SELECT chain_id AS family_id, seq, x, y, z FROM star_m"
-    )
+    boundary = "SELECT chain_id AS family_id, seq, x, y, z FROM deg_star"
     arms = []
     for i, (deg_id, ts, seq) in enumerate(_DEGEN_PLAN):
         for slot, t in enumerate(ts):
             shr = shrink_loops_cte_sql(
-                "SELECT chain_id, seq, x, y, z FROM star_m",
+                "SELECT chain_id, seq, x, y, z FROM deg_star",
                 t=t,
                 prefix=f"dg{i}_{slot}_",
             )
@@ -1658,10 +1659,12 @@ def _polygon_degeneracies_oracle() -> str:
                 f"SELECT chain_id AS family_id, {deg_id} AS deg_id, "
                 f"{slot} AS slot, x, y, z FROM ({shr}) WHERE seq = {seq}"
             )
-    planted = (
-        f"WITH star_m AS MATERIALIZED ({star}) " + " UNION ALL ".join(arms)
-    )
-    return polygon_degeneracies_oracle_sql(boundary, planted)
+    planted = " UNION ALL ".join(arms)
+    # boundary and every planted arm read the star loops from ONE top-level
+    # CTE (see _polygon_validate_oracle): inside each of them it took 5.5 GB
+    # to bind, 9 GB in closed_set_normalize, which splices this WITH list
+    body = polygon_degeneracies_oracle_sql(boundary, planted)
+    return f"WITH deg_star AS MATERIALIZED ({star}),\n" + body.lstrip().removeprefix("WITH ")
 
 
 # --- ClosedSetNormalizer fixture (shared vertex namespace per family):
@@ -1755,18 +1758,11 @@ def q_closed_set_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _closed_set_oracle() -> str:
     """Replay: degcls = the INDEPENDENT containment-parity degeneracy
     oracle spliced in as a CTE, then the normalization rules as plain
-    joins over the same generated layers."""
-    from s2geometry_spark.operators.validate import star_order_cte_sql
-
+    joins over the same generated layers (and the same deg_star loops)."""
     full = _polygon_degeneracies_oracle()
     i = full.rindex("SELECT CAST(family_id")
     deg_ctes = full[:i].rstrip().rstrip(",")
     deg_final = full[i:].rstrip()
-    cte = _chain_cte_sql(
-        "axyz", "customer", _CHAIN_A_EXPR_SQL, _CHAIN_A_BASE_SQL, "c_custkey"
-    )
-    raw = f"WITH {cte} SELECT chain_id, seq, x, y, z FROM axyz"
-    star = star_order_cte_sql(raw)
     dpoly_arms = " UNION ALL ".join(
         f"SELECT gid, CAST({s} AS BIGINT) AS src, CAST({d} AS BIGINT) AS dst, "
         f"CAST({g} AS BIGINT) AS deg_id FROM fams"
@@ -1781,8 +1777,7 @@ def _closed_set_oracle() -> str:
     )
     return f"""{deg_ctes},
 degcls AS MATERIALIZED ({deg_final}),
-cstar AS MATERIALIZED ({star}),
-cb AS (SELECT chain_id AS gid, seq FROM cstar),
+cb AS (SELECT chain_id AS gid, seq FROM deg_star),
 cbn AS (SELECT gid, max(seq) AS mx FROM cb GROUP BY gid),
 bedges AS (
   SELECT cb.gid, CAST(cb.seq AS BIGINT) AS src,

@@ -48,6 +48,25 @@ def test_vectorize_with_hole_and_island():
     assert (poly.contains_points(P) == member).all()
 
 
+def test_vectorize_seam_raster_loops_are_valid():
+    """A raster on faces 0 and 2 whose border runs along their seam x = z:
+    seam corners there meet as -0.0 from one face and +0.0 from the other,
+    and the cells on both sides share seam edges.  Every traced loop must
+    be a valid S2 loop (no repeated vertex, positive area), and the
+    polygon must equal the raster pointwise."""
+    cells, cap = _cap_cells(45.0, 0.0, 0.1, 6)
+    assert set(cellid.face(cells).tolist()) == {0, 2}
+    loops = raster.vectorize_cells(cells)
+    for v in loops:
+        # compare as numbers, so -0.0 and 0.0 are one vertex
+        assert np.unique(v + 0.0, axis=0).shape[0] == v.shape[0]
+        assert measures.loop_area(v) > 0
+    poly = Polygon([Loop(v) for v in loops])
+    P = _sample_near(np.asarray(cap.center), 20000, 0.3, seed=5)
+    member = np.isin(cellid.parent(cellid.from_xyz(P[:, 0], P[:, 1], P[:, 2]), 6), cells)
+    assert (poly.contains_points(P) == member).all()
+
+
 def test_vectorize_single_cell_is_its_quad():
     cells = cellid.parent(
         cellid.from_latlng_degrees(np.array([5.0]), np.array([5.0])), 8

@@ -409,14 +409,14 @@ def q_edge_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer-derived edges; COGROUPED term tables + pinned-determinant
     refinement (robust=False so the oracle's double arithmetic is
     bit-identical; generic fixture data never enters the triage band).
-    The cogrouped form ships each term table once per coarse cell group
-    instead of materializing the candidate join, and needs no broadcast
-    — measured 17.7 -> 11.5 s at sf0.1 vs the broadcast join form."""
-    from s2geometry_spark.operators.edge_join import edge_crossing_join_cogrouped
+    The join ships each term table once per coarse cell group instead of
+    materializing the candidate join: the materialized broadcast form it
+    replaced took 17.7 s at sf0.1, this one 11.5 s."""
+    from s2geometry_spark.operators.edge_join import edge_crossing_join
 
     ea = _edges_df(spark, sf_dir, "orders", "o_orderkey", _EDGE_A_KEY2, "eid_a", "a")
     eb = _edges_df(spark, sf_dir, "customer", "c_custkey", _EDGE_B_KEY2, "eid_b", "b")
-    return edge_crossing_join_cogrouped(spark, ea, eb, robust=False)
+    return edge_crossing_join(spark, ea, eb, robust=False)
 
 
 def q_edge_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,13 +424,11 @@ def q_edge_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     (s2edge_crossings.cc:520+ stable path): the edge_crossings cogrouped
     join, but emitting the unit intersection point (ix,iy,iz) computed
     map-side inside the cogroup — no second pass over the pair list."""
-    from s2geometry_spark.operators.edge_join import (
-        edge_intersection_join_cogrouped,
-    )
+    from s2geometry_spark.operators.edge_join import edge_intersection_join
 
     ea = _edges_df(spark, sf_dir, "orders", "o_orderkey", _EDGE_A_KEY2, "eid_a", "a")
     eb = _edges_df(spark, sf_dir, "customer", "c_custkey", _EDGE_B_KEY2, "eid_b", "b")
-    return edge_intersection_join_cogrouped(spark, ea, eb, robust=False)
+    return edge_intersection_join(spark, ea, eb, robust=False)
 
 
 def _customer_queries(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
@@ -597,8 +595,9 @@ def q_polyline_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polyline intersects join (S2Polyline::Intersects): per-nation
     customer polylines x per-(key mod 40) orders polylines, each chain a
     localized walk inside its blob; distinct crossing chain pairs via the
-    edge-crossing term join (robust=False so the oracle's pinned sign
-    arithmetic is bit-identical)."""
+    cogrouped edge-crossing term join, which dedups to chain pairs inside
+    each group (robust=False so the oracle's pinned sign arithmetic is
+    bit-identical)."""
     from s2geometry_spark.operators.polylines import polyline_crossing_join
 
     ca = _chain_points_df(
@@ -608,7 +607,7 @@ def q_polyline_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "orders", _CHAIN_B_EXPR, _CHAIN_B_BASE,
         "o_orderkey", "o_orderkey",
     )
-    return polyline_crossing_join(spark, ca, cb, robust=False, broadcast_b=False)
+    return polyline_crossing_join(spark, ca, cb, robust=False)
 
 
 def q_polyline_self_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:

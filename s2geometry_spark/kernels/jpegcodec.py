@@ -299,68 +299,6 @@ def encode_jpeg(pixels: np.ndarray, quality: int = 90) -> bytes:
     return bytes(out)
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self):
-        while self.n <= 24:
-            if self.pos >= len(self.data):
-                self.acc = (self.acc << 8) | 0xFF  # spec: pad with 1s
-                self.n += 8
-                continue
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0xD9
-                if nxt == 0x00:
-                    self.pos += 1  # unstuff
-                else:  # marker (EOI) — treat as end, pad
-                    self.pos = len(self.data)
-                    byte = 0xFF
-            self.acc = (self.acc << 8) | byte
-            self.n += 8
-
-    def bit(self) -> int:
-        if self.n == 0:
-            self._fill()
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-
-def _huff_decoder(bits, values):
-    """(length, code) -> value map for a read-one-bit-at-a-time walk."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = values[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _read_huff(br: _BitReader, table) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.bit()
-        v = table.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("invalid Huffman code in JPEG stream")
-
-
 def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
@@ -369,8 +307,8 @@ def _extend(v: int, s: int) -> int:
 def _huff_lut(bits: bytes, values: bytes):
     """(value, length) lookup over every 16-bit window: a canonical code
     of length L occupies the 2^(16-L) windows it prefixes.  One array
-    index replaces the read-one-bit-at-a-time walk (same codes, same
-    first-match semantics — canonical codes are prefix-free).
+    index decodes a symbol: canonical codes are prefix-free, so every
+    window starts with at most one code.
 
     Memoized on the DHT table's raw bytes: a stream's four tables are
     usually the ones the previous image used, and each costs two
@@ -407,13 +345,14 @@ _LIST_WINDOW_MAX_BITS = 1 << 23
 def _entropy_windows(data: bytes):
     """De-stuffed scan bits as per-bit-position 16-bit windows.
 
-    Replicates _BitReader byte semantics exactly: 0xFF 0x00 unstuffs to
-    0xFF, the first real marker ends the stream, and reads past the end
-    see all-ones padding (the spec's pad bits).  Returns (w, n_bits)
-    where w[p] = the 16 bits starting at bit p — a plain list for small
-    scans (fastest to index from the symbol loop), a uint32 ndarray for
-    scans over _LIST_WINDOW_MAX_BITS (identical indexing, bounded
-    memory) — and n_bits = the number of real (unpadded) scan bits."""
+    Byte rules (T.81 byte stuffing): 0xFF 0x00 unstuffs to 0xFF, the
+    first 0xFF followed by any other byte is a marker and ends the
+    stream, and reads past the end see all-ones padding (the spec's pad
+    bits).  Returns (w, n_bits) where w[p] = the 16 bits starting at bit
+    p — a plain list for small scans (fastest to index from the symbol
+    loop), a uint32 ndarray for scans over _LIST_WINDOW_MAX_BITS
+    (identical indexing, bounded memory) — and n_bits = the number of
+    real (unpadded) scan bits."""
     arr = np.frombuffer(data, np.uint8)
     ff = np.nonzero(arr[:-1] == 0xFF)[0]
     marker_ff = ff[arr[ff + 1] != 0x00]

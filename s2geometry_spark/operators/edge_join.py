@@ -12,15 +12,18 @@ Plan:
   covering cell + covering terms for its ancestors; coverings overlap in
   range iff they share a term.  Emitted as FLAT (eid, term_cell,
   is_covering) rows from one mapInPandas pass — no per-row Python.
-  candidates — ONE equi-join of the two term tables on (term_cell,
-  is_covering); the term rows CARRY their edge coordinates, so the join
-  output feeds the crossing kernel in the same stage (no pair-dedup
-  shuffle of the candidate set, no coordinate re-joins).
-  refine — vectorized interior-crossing kernel per candidate batch
+  candidates — the two term tables are COGROUPED on each term cell's
+  coarse GROUP_LEVEL prefix (_mixed_group), so each side's term rows
+  cross the Arrow boundary once per group; inside a group the exact
+  (term_cell, is_covering) match is a vectorized searchsorted range join
+  (_match_terms).  The term rows CARRY their edge coordinates, so the
+  matches feed the kernel in the same call: no materialized candidate
+  join, no coordinate re-joins.
+  refine — per group, the vectorized interior-crossing kernel
   (predicates.edges_cross_batch: pinned-order triage determinants with
   the antipodal sign-chain check; robust mode drops uncertain rows to
-  the exact scalar path); the post-refinement dedup touches only actual
-  crossing pairs.
+  the exact scalar path) or the intersection-point kernel, then an
+  in-group dedup; the final dedup touches only actual hits.
 """
 
 from __future__ import annotations
@@ -28,7 +31,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernels import cellid, metrics, predicates
 
@@ -43,8 +45,11 @@ LEVEL_MOD = 2
 # edges are subdivided 2^SPLIT_ROUNDS times before covering: each
 # sub-arc's cap is 4x smaller per round, so covering cells are ~2 levels
 # finer per round — at the cost of ~4x more (deduped) covering cells per
-# edge, the candidate join shrinks ~16x per round in dense tables.
+# edge, the candidate set shrinks ~16x per round in dense tables.
 SPLIT_ROUNDS = 2
+# the term tables cogroup on each term cell's GROUP_LEVEL parent
+# (_mixed_group)
+GROUP_LEVEL = 4
 
 
 def _edge_coverings_flat(
@@ -104,14 +109,14 @@ def _edge_coverings_flat(
     return owner, cell
 
 
-def _mixed_group(keys_u64: np.ndarray, group_level: int) -> np.ndarray:
+def _mixed_group(keys_u64: np.ndarray) -> np.ndarray:
     """Cogroup key (biased) for MIXED-LEVEL cell keys: fine keys group
-    under their group-level parent, keys at/above the group level group
-    as themselves — both sides compute the same value for a matching
-    key, so exact-key matches always co-locate."""
+    under their GROUP_LEVEL parent, keys at/above GROUP_LEVEL group as
+    themselves — both sides compute the same value for a matching key,
+    so exact-key matches always co-locate."""
     lv = cellid.level(keys_u64)
     g = np.where(
-        lv <= group_level, keys_u64, cellid.parent(keys_u64, group_level)
+        lv <= GROUP_LEVEL, keys_u64, cellid.parent(keys_u64, GROUP_LEVEL)
     )
     return cellid.to_biased(g.astype(np.uint64))
 
@@ -157,33 +162,17 @@ def _term_table(
     id_col: str,
     prefix: str,
     side: str,
-    split_rounds: int = SPLIT_ROUNDS,
-    group_level: int | None = None,
+    split_rounds: int,
 ) -> DataFrame:
-    """Term rows WITH the edge coordinates: widening the term table lets
-    the candidate join feed the crossing kernel directly — no pair dedup
-    shuffle and no coordinate re-joins on the (much larger) candidate
-    set.  Duplicate candidates cost only vectorized flops and are
-    deduped AFTER refinement, where the row count is the (tiny) crossing
-    set."""
+    """Term rows WITH the edge coordinates and the cogroup key ``g``:
+    the in-group matches feed the kernel directly — no coordinate
+    re-joins on the (much larger) candidate set.  Duplicate candidates
+    cost only vectorized flops and are deduped AFTER refinement, where
+    the row count is the (tiny) hit set."""
     cols = [f"{prefix}{k}{ax}" for k in (0, 1) for ax in "xyz"]
-    g_schema = ", g long" if group_level is not None else ""
 
     def batches(it):
         for pdf in it:
-            if len(pdf) == 0:
-                out = pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "term_cell": pd.Series(dtype="int64"),
-                        "is_covering": pd.Series(dtype="bool"),
-                        **{c: pd.Series(dtype="float64") for c in cols},
-                    }
-                )
-                if group_level is not None:
-                    out["g"] = pd.Series(dtype="int64")
-                yield out
-                continue
             A0 = pdf[cols[:3]].to_numpy(np.float64)
             A1 = pdf[cols[3:]].to_numpy(np.float64)
             owner, cell = _edge_coverings_flat(A0, A1, split_rounds)
@@ -197,18 +186,55 @@ def _term_table(
             for i, cc in enumerate(cols):
                 src = A0 if i < 3 else A1
                 out[cc] = src[o[keep], i % 3]
-            if group_level is not None:
-                out["g"] = _mixed_group(
-                    cellid.from_biased(out["term_cell"].to_numpy(np.int64)),
-                    group_level,
-                )
+            out["g"] = _mixed_group(
+                cellid.from_biased(out["term_cell"].to_numpy(np.int64))
+            )
             yield out
 
     return edges.select(id_col, *cols).mapInPandas(
         batches,
         f"{id_col} long, term_cell long, is_covering boolean, "
         + ", ".join(f"{c} double" for c in cols)
-        + g_schema,
+        + ", g long",
+    )
+
+
+def _term_cogroup(edges_a: DataFrame, edges_b: DataFrame, split_rounds: int):
+    """A's query-side and B's index-side term tables, cogrouped on g."""
+    ta = _term_table(edges_a, "eid_a", "a", "query", split_rounds)
+    tb = _term_table(edges_b, "eid_b", "b", "index", split_rounds)
+    return ta.groupBy("g").cogroup(tb.groupBy("g"))
+
+
+def _match_terms(adf: pd.DataFrame, bdf: pd.DataFrame):
+    """(eid_a, eid_b, A0, A1, B0, B1), one row per exact (term_cell,
+    is_covering) match inside a group: a vectorized searchsorted range
+    join over B's terms sorted on the composite key
+    (cell bits << 1) | is_covering."""
+
+    def key(df):
+        return (
+            df["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
+        ) | df["is_covering"].to_numpy(bool).astype(np.uint64)
+
+    kb = key(bdf)
+    order = np.argsort(kb, kind="stable")
+    kb_s = kb[order]
+    ka = key(adf)
+    lo = np.searchsorted(kb_s, ka, "left")
+    cnt = np.searchsorted(kb_s, ka, "right") - lo
+    total = int(cnt.sum())
+    ii = np.repeat(np.arange(len(ka)), cnt)
+    starts = np.zeros(len(ka), np.int64)
+    np.cumsum(cnt[:-1], out=starts[1:])
+    jj = order[np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]]
+    return (
+        adf["eid_a"].to_numpy(np.int64)[ii],
+        bdf["eid_b"].to_numpy(np.int64)[jj],
+        adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)[ii],
+        adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)[ii],
+        bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[jj],
+        bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[jj],
     )
 
 
@@ -217,68 +243,16 @@ def edge_crossing_join(
     edges_a: DataFrame,
     edges_b: DataFrame,
     robust: bool = True,
-    broadcast_b: bool = False,
     split_rounds: int = SPLIT_ROUNDS,
-) -> DataFrame:
-    """All (eid_a, eid_b) pairs whose edge interiors cross.
-
-    edges_a: (eid_a, a0x..a1z); edges_b: (eid_b, b0x..b1z).
-
-    Plan shape: term tables carry their edge coordinates, so the
-    candidate join (broadcast hash join when ``broadcast_b``, shuffle
-    hash join for a big B side) flows STRAIGHT into the fused crossing
-    kernel in the same stage — the only shuffle on the non-broadcast
-    path is the term join itself, and the post-refinement dedup touches
-    only actual crossing pairs (a candidate pair that crosses is still
-    one output row no matter how many terms matched it).
-    """
-    ta = _term_table(edges_a, "eid_a", "a", "query", split_rounds)
-    tb = _term_table(edges_b, "eid_b", "b", "index", split_rounds)
-    if broadcast_b:
-        tb = F.broadcast(tb)
-    cand = ta.join(tb, ["term_cell", "is_covering"])
-
-    def refine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"eid_a": pd.Series(dtype="int64"), "eid_b": pd.Series(dtype="int64")}
-                )
-                continue
-            A0 = pdf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-            A1 = pdf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-            B0 = pdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)
-            B1 = pdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)
-            hit = predicates.edges_cross_batch(A0, A1, B0, B1, robust=robust)
-            out = pdf.loc[hit, ["eid_a", "eid_b"]]
-            yield out.drop_duplicates()
-
-    return cand.mapInPandas(refine, "eid_a long, eid_b long").dropDuplicates(
-        ["eid_a", "eid_b"]
-    )
-
-
-def edge_crossing_join_cogrouped(
-    spark: SparkSession,
-    edges_a: DataFrame,
-    edges_b: DataFrame,
-    robust: bool = True,
-    split_rounds: int = SPLIT_ROUNDS,
-    group_level: int = 4,
     pair_shift: int = 0,
     crossing_type: str = "interior",
 ) -> DataFrame:
-    """edge_crossing_join without MATERIALIZING the candidate join.
+    """All (eid_a, eid_b) pairs whose edge interiors cross.
 
-    The two term tables are COGROUPED on a coarse cell prefix
-    (_mixed_group) instead of equi-joined: each side's term
-    rows cross the Arrow boundary ONCE per group, the exact
-    (term_cell, is_covering) match runs as a vectorized searchsorted
-    range join in-group, and the crossing kernel + pair dedup run on the
-    matches before anything is shuffled.  For dense inputs this removes
-    the dominant cost of the join form — at sf0.1 chain fixtures the
-    materialized candidate set is 27M rows x 14 columns (~3 GB through
-    Arrow) for 422k true crossings.
+    edges_a: (eid_a, a0x..a1z); edges_b: (eid_b, b0x..b1z).  The
+    crossing kernel and an in-batch pair dedup run on each group's
+    matches before anything is shuffled; the final dedup touches only
+    actual crossing pairs.
 
     ``pair_shift`` right-shifts both edge ids before the in-batch dedup:
     chains_to_edges embeds the chain id in bits 32+, so pair_shift=32
@@ -295,78 +269,33 @@ def edge_crossing_join_cogrouped(
     if crossing_type not in ("interior", "all"):
         raise ValueError(f"crossing_type must be 'interior' or 'all': {crossing_type}")
     want_all = crossing_type == "all"
-    ta = _term_table(edges_a, "eid_a", "a", "query", split_rounds, group_level)
-    tb = _term_table(edges_b, "eid_b", "b", "index", split_rounds, group_level)
     out_schema = "eid_a long, eid_b long" + (", sign int" if want_all else "")
 
     def group_cross(key, adf: pd.DataFrame, bdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {"eid_a": pd.Series(dtype="int64"), "eid_b": pd.Series(dtype="int64")}
-        )
-        if want_all:
-            empty["sign"] = pd.Series(dtype="int32")
-        if len(adf) == 0 or len(bdf) == 0:
-            return empty
-        # composite exact-match key: (cell bits << 1) | is_covering
-        kb = (
-            bdf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | bdf["is_covering"].to_numpy(bool).astype(np.uint64)
-        order = np.argsort(kb, kind="stable")
-        kb_s = kb[order]
-        B0 = bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[order]
-        B1 = bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[order]
-        b_ids = bdf["eid_b"].to_numpy(np.int64)[order]
-        ka = (
-            adf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | adf["is_covering"].to_numpy(bool).astype(np.uint64)
-        lo = np.searchsorted(kb_s, ka, "left")
-        hi = np.searchsorted(kb_s, ka, "right")
-        cnt = hi - lo
-        total = int(cnt.sum())
-        if total == 0:
-            return empty
-        ii = np.repeat(np.arange(len(ka)), cnt)
-        starts = np.zeros(len(ka), np.int64)
-        np.cumsum(cnt[:-1], out=starts[1:])
-        jj = np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]
-        A0 = adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-        A1 = adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-        a_ids = adf["eid_a"].to_numpy(np.int64)
-        A0i, A1i, B0j, B1j = A0[ii], A1[ii], B0[jj], B1[jj]
-        cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
+        ea, eb, A0, A1, B0, B1 = _match_terms(adf, bdf)
+        hit = predicates.edges_cross_batch(A0, A1, B0, B1, robust=robust)
+        out = {}
         if want_all:
             shared = (
-                (A0i == B0j).all(axis=1)
-                | (A0i == B1j).all(axis=1)
-                | (A1i == B0j).all(axis=1)
-                | (A1i == B1j).all(axis=1)
+                (A0 == B0).all(axis=1)
+                | (A0 == B1).all(axis=1)
+                | (A1 == B0).all(axis=1)
+                | (A1 == B1).all(axis=1)
             )
-            hit = shared | cross
-            out = pd.DataFrame(
-                {
-                    "eid_a": a_ids[ii[hit]] >> pair_shift,
-                    "eid_b": b_ids[jj[hit]] >> pair_shift,
-                    # shared vertex wins: CrossingSign returns 0 on any
-                    # exact vertex identity before the interior verdict
-                    "sign": np.where(shared[hit], 0, 1).astype(np.int32),
-                }
-            )
-        else:
-            out = pd.DataFrame(
-                {
-                    "eid_a": a_ids[ii[cross]] >> pair_shift,
-                    "eid_b": b_ids[jj[cross]] >> pair_shift,
-                }
-            )
-        return out.drop_duplicates()
+            hit |= shared
+            # shared vertex wins: CrossingSign returns 0 on any exact
+            # vertex identity before the interior verdict
+            out["sign"] = np.where(shared[hit], 0, 1).astype(np.int32)
+        return pd.DataFrame(
+            {"eid_a": ea[hit] >> pair_shift, "eid_b": eb[hit] >> pair_shift, **out}
+        ).drop_duplicates()
 
     # in "all" mode a pair_shift-collapsed pair can legitimately carry
     # both signs (some edge pairs share a vertex, others cross) — dedup
     # on the full row; at pair_shift=0 sign is unique per edge pair
     dedup_cols = ["eid_a", "eid_b"] + (["sign"] if want_all else [])
     return (
-        ta.groupBy("g")
-        .cogroup(tb.groupBy("g"))
+        _term_cogroup(edges_a, edges_b, split_rounds)
         .applyInPandas(group_cross, out_schema)
         .dropDuplicates(dedup_cols)
     )
@@ -401,82 +330,34 @@ def _intersection_points(A0, A1, B0, B1):
     return ux * sgn, uy * sgn, uz * sgn
 
 
-def edge_intersection_join_cogrouped(
+def edge_intersection_join(
     spark: SparkSession,
     edges_a: DataFrame,
     edges_b: DataFrame,
     robust: bool = False,
     split_rounds: int = SPLIT_ROUNDS,
-    group_level: int = 4,
 ) -> DataFrame:
     """Interior-crossing join that also EMITS the intersection point
     (eid_a, eid_b, ix, iy, iz) — the distributed form of running
     S2::GetIntersection on every S2CrossingEdgeQuery hit.  Same cogrouped
-    term-table shape as edge_crossing_join_cogrouped (coordinates ride
-    the term tables, so the point kernel runs map-side in the cogroup);
-    duplicate candidate hits across term cells collapse in the final
+    term join as edge_crossing_join (coordinates ride the term tables,
+    so the point kernel runs map-side in the cogroup); duplicate
+    candidate hits across term cells collapse in the final
     dropDuplicates because the pinned arithmetic emits bit-identical
     doubles for the same pair."""
-    ta = _term_table(edges_a, "eid_a", "a", "query", split_rounds, group_level)
-    tb = _term_table(edges_b, "eid_b", "b", "index", split_rounds, group_level)
-    out_schema = "eid_a long, eid_b long, ix double, iy double, iz double"
 
     def group_points(key, adf: pd.DataFrame, bdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "eid_a": pd.Series(dtype="int64"),
-                "eid_b": pd.Series(dtype="int64"),
-                "ix": pd.Series(dtype="float64"),
-                "iy": pd.Series(dtype="float64"),
-                "iz": pd.Series(dtype="float64"),
-            }
-        )
-        if len(adf) == 0 or len(bdf) == 0:
-            return empty
-        kb = (
-            bdf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | bdf["is_covering"].to_numpy(bool).astype(np.uint64)
-        order = np.argsort(kb, kind="stable")
-        kb_s = kb[order]
-        B0 = bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[order]
-        B1 = bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[order]
-        b_ids = bdf["eid_b"].to_numpy(np.int64)[order]
-        ka = (
-            adf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | adf["is_covering"].to_numpy(bool).astype(np.uint64)
-        lo = np.searchsorted(kb_s, ka, "left")
-        hi = np.searchsorted(kb_s, ka, "right")
-        cnt = hi - lo
-        total = int(cnt.sum())
-        if total == 0:
-            return empty
-        ii = np.repeat(np.arange(len(ka)), cnt)
-        starts = np.zeros(len(ka), np.int64)
-        np.cumsum(cnt[:-1], out=starts[1:])
-        jj = np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]
-        A0 = adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-        A1 = adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-        a_ids = adf["eid_a"].to_numpy(np.int64)
-        A0i, A1i, B0j, B1j = A0[ii], A1[ii], B0[jj], B1[jj]
-        cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
-        if not cross.any():
-            return empty
-        ix, iy, iz = _intersection_points(
-            A0i[cross], A1i[cross], B0j[cross], B1j[cross]
-        )
+        ea, eb, A0, A1, B0, B1 = _match_terms(adf, bdf)
+        hit = predicates.edges_cross_batch(A0, A1, B0, B1, robust=robust)
+        ix, iy, iz = _intersection_points(A0[hit], A1[hit], B0[hit], B1[hit])
         return pd.DataFrame(
-            {
-                "eid_a": a_ids[ii[cross]],
-                "eid_b": b_ids[jj[cross]],
-                "ix": ix,
-                "iy": iy,
-                "iz": iz,
-            }
+            {"eid_a": ea[hit], "eid_b": eb[hit], "ix": ix, "iy": iy, "iz": iz}
         ).drop_duplicates()
 
     return (
-        ta.groupBy("g")
-        .cogroup(tb.groupBy("g"))
-        .applyInPandas(group_points, out_schema)
+        _term_cogroup(edges_a, edges_b, split_rounds)
+        .applyInPandas(
+            group_points, "eid_a long, eid_b long, ix double, iy double, iz double"
+        )
         .dropDuplicates(["eid_a", "eid_b"])
     )

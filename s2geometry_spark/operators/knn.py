@@ -684,6 +684,11 @@ def within_distance_pairs(
     block-local (density-bounded), never O(n^2); skew follows true point
     density (handle hot tiles with the measured-salt machinery,
     operators/density).
+
+    Pairs come per input ROW: a probe row's block cells are distinct and
+    a home row has one key, so two rows join at most once and no pair
+    dedup runs.  Point ids must therefore be unique (as in
+    contains_join); a repeated id repeats its pairs.
     """
     if level is None:
         level = level_for_radius_chord2(radius_chord2)
@@ -721,7 +726,6 @@ def within_distance_pairs(
         .withColumn("dist_chord2", d2)
         .where(F.col("dist_chord2") <= radius_chord2)
         .select("pid_a", "pid_b", "dist_chord2")
-        .dropDuplicates(["pid_a", "pid_b"])
     )
 
 

@@ -5,7 +5,8 @@
   -> directed edge tables via a per-chain window lag (pure SQL).
 * ``polyline_crossing_join``   — S2Polyline::Intersects as a join: two
   chain sets intersect where any edge pair crosses transversally; built
-  on the edge-crossing term join, output distinct (chain_a, chain_b).
+  on the cogrouped edge-crossing term join, output distinct
+  (chain_a, chain_b).
 * ``clip_to_polygon`` (kernel) + ``polyline_clip_join`` — S2Polyline::
   IntersectWithPolygon: split each chain at polygon-boundary crossings,
   keep the sub-arcs inside, re-chain consecutive kept pieces; one
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from ..kernels import predicates
 from ..kernels.booleanop import edge_intersection
 from ..kernels.regions import Polygon
-from .edge_join import edge_crossing_join_cogrouped
+from .edge_join import edge_crossing_join
 
 
 def chains_to_edges(
@@ -60,21 +61,20 @@ def polyline_crossing_join(
     chains_a: DataFrame,
     chains_b: DataFrame,
     robust: bool = True,
-    broadcast_b: bool = True,
 ) -> DataFrame:
     """Distinct (chain_a, chain_b) pairs whose polylines cross
     (transversal interior crossing — S2Polyline::Intersects' generic
     position case).
 
-    Uses the COGROUPED crossing join (edge_join.edge_crossing_join_
-    cogrouped) with pair_shift=32: each side's term rows ship once per
-    coarse cell group, and the in-group kernel dedups straight to chain
-    pairs — at sf0.1 this replaces a 27M-row materialized candidate join
-    plus a 422k-row edge-pair dedup with ~2.7M cogrouped term rows and a
-    ~5k-row chain-pair dedup."""
+    Uses the cogrouped crossing join (edge_join.edge_crossing_join)
+    with pair_shift=32: each side's term rows ship once per coarse cell
+    group, and the in-group kernel dedups straight to chain pairs.  At
+    sf0.1 that is ~2.7M cogrouped term rows and a ~5k-row chain-pair
+    dedup, where a materialized candidate join took 27M rows plus a
+    422k-row edge-pair dedup."""
     ea = chains_to_edges(chains_a, prefix="a")
     eb = chains_to_edges(chains_b, prefix="b")
-    pairs = edge_crossing_join_cogrouped(
+    pairs = edge_crossing_join(
         spark,
         ea.drop("chain_a"),
         eb.drop("chain_b"),
@@ -82,7 +82,6 @@ def polyline_crossing_join(
         # swept at sf0.1: one extra subdivision round (~3x fewer
         # in-group pairs on long chain edges) beats the default
         split_rounds=3,
-        group_level=4,
         pair_shift=32,
     )
     # the id embeds the chain in bits 32+; pair_shift already applied
@@ -124,9 +123,8 @@ def polyline_self_crossing_join(
             for c in ("x", "y", "z")
         ],
     )
-    pairs = edge_crossing_join_cogrouped(
-        spark, ea, eb, robust=robust, split_rounds=3, group_level=4,
-        crossing_type=crossing_type,
+    pairs = edge_crossing_join(
+        spark, ea, eb, robust=robust, split_rounds=3, crossing_type=crossing_type
     )
     return pairs.where(F.col("eid_a") < F.col("eid_b"))
 

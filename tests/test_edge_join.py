@@ -6,7 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2geometry_spark.kernels import predicates
-from s2geometry_spark.operators.edge_join import edge_crossing_join
+from s2geometry_spark.operators.edge_join import (
+    edge_crossing_join,
+    edge_intersection_join,
+)
 
 
 def random_edges(rng, n, spread=0.3, center=(1.0, 0.0, 0.0)):
@@ -56,7 +59,7 @@ def test_edges_cross_batch_vs_scalar():
     assert want  # dense random edges do cross
 
 
-def test_edge_crossing_join_vs_bruteforce(spark):
+def _mixed_length_edges():
     rng = np.random.default_rng(22)
     # mixed edge lengths across two clusters => mixed covering levels
     A0a, A1a = random_edges(rng, 40, spread=0.3)
@@ -65,35 +68,26 @@ def test_edge_crossing_join_vs_bruteforce(spark):
     B0a, B1a = random_edges(rng, 40, spread=0.25)
     B0b, B1b = random_edges(rng, 20, spread=0.01)
     B0 = np.vstack([B0a, B0b]); B1 = np.vstack([B1a, B1b])
-    da = to_df(spark, "a", list(range(len(A0))), A0, A1)
-    db = to_df(spark, "b", list(range(len(B0))), B0, B1)
-    got = {
-        (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=True).collect()
-    }
-    want = brute_pairs(A0, A1, B0, B1)
-    assert got == want
-    assert want
+    return A0, A1, B0, B1
 
 
-def test_edge_crossing_join_shuffle_path_identical(spark):
-    """broadcast_b=False (the big-B shuffle-join path) must produce the
-    exact same pair set as the broadcast path and brute force."""
+def _dense_edges():
     rng = np.random.default_rng(29)
     A0, A1 = random_edges(rng, 50, spread=0.2)
     B0, B1 = random_edges(rng, 50, spread=0.15)
+    return A0, A1, B0, B1
+
+
+@pytest.mark.parametrize(
+    "make_edges", [_mixed_length_edges, _dense_edges], ids=["22", "29"]
+)
+def test_edge_crossing_join_vs_bruteforce(spark, make_edges):
+    A0, A1, B0, B1 = make_edges()
     da = to_df(spark, "a", list(range(len(A0))), A0, A1)
     db = to_df(spark, "b", list(range(len(B0))), B0, B1)
-    shuffled = {
-        (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=False).collect()
-    }
-    broadcast = {
-        (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=True).collect()
-    }
+    got = {(r.eid_a, r.eid_b) for r in edge_crossing_join(spark, da, db).collect()}
     want = brute_pairs(A0, A1, B0, B1)
-    assert shuffled == broadcast == want
+    assert got == want
     assert want
 
 
@@ -104,6 +98,24 @@ def test_edge_crossing_join_disjoint_regions(spark):
     da = to_df(spark, "a", list(range(20)), A0, A1)
     db = to_df(spark, "b", list(range(20)), B0, B1)
     assert edge_crossing_join(spark, da, db).count() == 0
+
+
+def test_empty_side_gives_no_rows(spark):
+    """An edge table with no rows flows through the term tables and the
+    cogroup to an empty result in every join form."""
+    rng = np.random.default_rng(24)
+    A0, A1 = random_edges(rng, 20)
+    da = to_df(spark, "a", list(range(20)), A0, A1)
+    # a filter the optimizer cannot fold away: the term tables and the
+    # cogroup still run, over a B side with no rows
+    db = to_df(spark, "b", list(range(20)), A0, A1).where(F.col("eid_b") < 0)
+    for crossing_type in ("interior", "all"):
+        assert (
+            edge_crossing_join(spark, da, db, crossing_type=crossing_type).count()
+            == 0
+        )
+    assert edge_intersection_join(spark, da, db).count() == 0
+
 
 def test_antipodal_pairs_do_not_cross():
     """Two arcs whose great circles intersect at ANTIPODAL points each
@@ -129,8 +141,6 @@ def test_crossing_type_all_vs_bruteforce(spark):
     shared-vertex pairs report sign 0, interior crossings sign 1, and
     the sign-1 set equals the interior-mode result.  Brute-force oracle
     = scalar CrossingSign >= 0."""
-    from s2geometry_spark.operators.edge_join import edge_crossing_join_cogrouped
-
     rng = np.random.RandomState(17)
     A0, A1 = random_edges(rng, 30)
     # splice in shared-vertex structure: chain-like edges reusing endpoints
@@ -142,7 +152,7 @@ def test_crossing_type_all_vs_bruteforce(spark):
 
     got = {
         (r.eid_a, r.eid_b): r.sign
-        for r in edge_crossing_join_cogrouped(
+        for r in edge_crossing_join(
             spark, da, db, robust=True, crossing_type="all"
         ).collect()
         if r.eid_a < r.eid_b
@@ -158,7 +168,7 @@ def test_crossing_type_all_vs_bruteforce(spark):
 
     interior = {
         (r.eid_a, r.eid_b)
-        for r in edge_crossing_join_cogrouped(
+        for r in edge_crossing_join(
             spark, da, db, robust=True, crossing_type="interior"
         ).collect()
         if r.eid_a < r.eid_b
@@ -172,16 +182,13 @@ def test_edge_intersection_join_points(spark):
     S2::GetIntersection kernel (booleanop.edge_intersection), is unit
     length, lies on both edges' great circles, and inside both arcs."""
     from s2geometry_spark.kernels.booleanop import edge_intersection
-    from s2geometry_spark.operators.edge_join import (
-        edge_intersection_join_cogrouped,
-    )
 
     rng = np.random.default_rng(7)
     A0, A1 = random_edges(rng, 40)
     B0, B1 = random_edges(rng, 40)
     da = to_df(spark, "a", np.arange(40), A0, A1)
     db = to_df(spark, "b", np.arange(40), B0, B1)
-    rows = edge_intersection_join_cogrouped(spark, da, db, robust=True).collect()
+    rows = edge_intersection_join(spark, da, db, robust=True).collect()
     got = {(r.eid_a, r.eid_b): np.array([r.ix, r.iy, r.iz]) for r in rows}
     assert set(got) == brute_pairs(A0, A1, B0, B1)
     assert len(got) > 0

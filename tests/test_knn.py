@@ -36,10 +36,12 @@ class TestWithinDistancePairs:
         df = spark.createDataFrame(
             rows, "pid long, x double, y double, z double"
         ).withColumn("cell", s2f.cell_from_xyz(F.col("x"), F.col("y"), F.col("z")))
-        got = {
+        pairs = [
             (r.pid_a, r.pid_b)
             for r in within_distance_pairs(df, r2).collect()
-        }
+        ]
+        got = set(pairs)
+        assert len(pairs) == len(got)  # no pair repeats
         D = ((X[:, None, :] - X[None, :, :]) ** 2).sum(axis=2)
         want = {
             (int(keys[i]), int(keys[j]))

@@ -177,9 +177,8 @@ def main() -> None:
                     flags.append(f"{name}: {smell} ({why})")
         markers = [g for g in GOOD if g in plan]
         schemas = sorted(set(re.findall(r"ReadSchema: (struct<[^>]*>)", plan)))
-        # keep the operator-tree header (before the node details) short
+        # the whole operator tree, without the per-node details below it
         tree = plan.split("\n\n")[0]
-        tree = "\n".join(tree.splitlines()[:60])
         out.append(f"## {name}\n\nmarkers: {', '.join(markers) or 'none'}")
         for note in allowed_notes:
             out.append(note)

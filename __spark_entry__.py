@@ -4795,7 +4795,7 @@ def q_composite_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     per unordered (cap|loop) fixture pair and mode in {union,
     intersection, difference}, the S2CellUnion set-op composed on the
     driver, then one points scan counting cell hits per composite
-    (contains_join._cell_hits); n_points per composite, zeros included.
+    (a kernels/leafintervals stab); n_points per composite, zeros included.
     The oracle replays membership as boolean algebra over the MEMBER
     coverings — an independent check of the set-op kernels."""
     from s2geometry_spark.operators.region_algebra import composite_region_join

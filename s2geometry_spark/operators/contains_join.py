@@ -8,12 +8,13 @@ needs no join at all.
 Plan shape: one ``mapInPandas`` over ``(point_id, cell, x, y, z)``.
 
   driver:  canonical coverings (RegionCoverer port, or precomputed)
-           -> one sorted table of covering cells, each with the regions
-              that own it (CSR), plus the distinct covering levels;
-              shipped in the UDF closure with the regions' loops
-  scan:    per Arrow batch, each leaf cell's parent at every covering
-           level -> ``np.searchsorted`` into the table -> candidate
-           (row, region) pairs, de-duplicated in the batch
+           -> one leaf-interval table (kernels/leafintervals): the
+              coverings split into disjoint leaf ranges, each with the
+              regions that own it; shipped in the UDF closure with the
+              regions' loops
+  scan:    per Arrow batch, one ``stab`` of the leaf cells into the
+           table -> distinct candidate (row, region) pairs, whatever the
+           covering levels and however the cells nest
            -> the crossing-parity kernel once per region -> pairs
 
 No explode, no broadcast join, no shuffle, and one Python crossing: the
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import functions as s2f
-from ..kernels import cellid
+from ..kernels import cellid, leafintervals
 from ..kernels.coverer import CovererOptions, RegionCoverer
 
 # S2RegionTermIndexer defaults (s2region_term_indexer.h)
@@ -184,10 +185,10 @@ def cell_union_contains_join(
     the region's covering cell union, as ``(point_id, region_id)``.
 
     Plan: the same single ``mapInPandas`` scan as ``contains_join`` with
-    ``exact=False`` (the cell lookup of ``_cell_hits``), reading only
+    ``exact=False`` (one stab of the leaf-interval table), reading only
     ``(point_id, cell)``.  No explode, no join, no shuffle.
     """
-    table = _cell_table(list(unions.values()))
+    table = leafintervals.of_coverings(list(unions.values()))
     rids = np.array(list(unions), dtype=object)
     schema = StructType(
         [
@@ -198,7 +199,8 @@ def cell_union_contains_join(
 
     def scan(batches):
         for pdf in batches:
-            row, rg = _cell_hits(cellid.from_biased(pdf[cell].to_numpy(np.int64)), table)
+            leaf = cellid.from_biased(pdf[cell].to_numpy(np.int64))
+            row, rg = leafintervals.expand(table, *leafintervals.stab(table, leaf))
             yield pd.DataFrame({point_id: pdf[point_id].to_numpy()[row], "region_id": rids[rg]})
 
     return points.select(point_id, cell).mapInPandas(scan, schema)
@@ -219,42 +221,6 @@ def contains_anti_join(
     every sensitive zone"."""
     pairs = contains_join(spark, points, index, point_id=point_id, **kw)
     return points.select(point_id).join(pairs, point_id, "left_anti")
-
-
-def _cell_table(coverings: list[np.ndarray]):
-    """Sorted covering-cell -> region CSR ``(levels, keys, offs, reg)``:
-    the regions owning covering cell ``keys[j]`` are
-    ``reg[offs[j]:offs[j+1]]`` (positions in ``coverings``), and
-    ``levels`` are the distinct levels of the keys."""
-    covs = [np.asarray(c, np.uint64) for c in coverings]
-    cells = np.concatenate([np.empty(0, np.uint64), *covs])
-    reg = np.repeat(np.arange(len(covs), dtype=np.int64), [len(c) for c in covs])
-    order = np.lexsort((reg, cells))
-    cells, reg = cells[order], reg[order]
-    keys, starts = np.unique(cells, return_index=True)
-    levels = np.unique(cellid.level(keys)).tolist()
-    return levels, keys, np.append(starts, len(cells)), reg
-
-
-def _cell_hits(leaf: np.ndarray, table) -> tuple[np.ndarray, np.ndarray]:
-    """Distinct ``(row, region)`` pairs whose leaf cell lies in one of the
-    region's covering cells: each leaf's parent at every covering level,
-    looked up in ``_cell_table``'s keys by ``np.searchsorted``.  Sorted by
-    row, then region."""
-    levels, keys, offs, reg = table
-    n_reg = int(reg.max()) + 1 if len(reg) else 1
-    pair = [np.empty(0, np.int64)]
-    for lv in levels:
-        par = cellid.parent(leaf, lv)
-        pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
-        hit = np.nonzero(keys[pos] == par)[0]
-        lo = offs[pos[hit]]
-        cnt = offs[pos[hit] + 1] - lo
-        off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-        pair.append(np.repeat(hit, cnt) * n_reg + reg[np.repeat(lo, cnt) + off])
-    # a row meets a region once, however many of its cells hold it
-    pair = np.unique(np.concatenate(pair))
-    return pair // n_reg, pair % n_reg
 
 
 def contains_join(
@@ -279,7 +245,7 @@ def contains_join(
     an id each contribute their own pairs: the same pair can then appear
     more than once (``dropDuplicates`` restores a set).
     """
-    table = _cell_table(list(index.coverings.values()))
+    table = leafintervals.of_coverings(list(index.coverings.values()))
     rids = np.array(list(index.coverings), dtype=object)
     loops = [_loops_of(index.regions[rid]) for rid in rids] if exact else []
     payload = [
@@ -297,7 +263,8 @@ def contains_join(
         from ..kernels import predicates
 
         for pdf in batches:
-            row, rg = _cell_hits(cellid.from_biased(pdf[cell].to_numpy(np.int64)), table)
+            leaf = cellid.from_biased(pdf[cell].to_numpy(np.int64))
+            row, rg = leafintervals.expand(table, *leafintervals.stab(table, leaf))
             if exact:
                 P = pdf[[x, y, z]].to_numpy(np.float64)
                 inside = np.zeros(len(row), dtype=bool)

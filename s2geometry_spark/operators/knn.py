@@ -4,8 +4,9 @@ level.
 Re-expression of S2ClosestPointQuery's best-first cell search
 (s2closest_point_query_base.h:482-769) as dataflow.  The query side is
 small, so it is collected once; each ring level is then ONE mapInPandas
-scan over the indexed rows against a broadcast block table.  A row looks
-up the queries whose 3x3 neighbor block at the level it touches, and
+scan over the indexed rows against a broadcast leaf-interval table of
+the queries' 3x3 neighbor blocks at the level (kernels/leafintervals).
+A row looks up the queries whose block it touches, and
 each partition emits those queries' local top-k in (dist, id) order; the
 driver merges the partial lists.  Inside a batch the scan widens as the
 reference does: a query is scored first against its 3x3 blocks at finer
@@ -16,11 +17,10 @@ the rows of their block at the level itself.
 The loop (``_ring_join``) is shared by two callers that differ only in
 how a row finds its blocks and how it is scored:
 
-* ``knn_join`` (points): the row's cell at the level, with the pinned
-  ((dx²+dy²)+dz²) chord² — bit-identical to the SQL oracles;
-* ``knn_edges.closest_edges_join`` (S2ClosestEdgeQuery): the edge's
-  covering cells, range-tested against the block cells, with the pinned
-  point-to-arc chord².
+* ``knn_join`` (points): a ``stab`` of the row's leaf cell, with the
+  pinned ((dx²+dy²)+dz²) chord² — bit-identical to the SQL oracles;
+* ``knn_edges.closest_edges_join`` (S2ClosestEdgeQuery): an ``overlap``
+  of the edge's covering cells, with the pinned point-to-arc chord².
 
 A query is *certified* at a level when it has k candidates and its k-th
 distance is smaller than the minimum possible distance to any row
@@ -43,7 +43,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from .. import functions as s2f
-from ..kernels import cellid, metrics
+from ..kernels import cellid, leafintervals, metrics
 
 # Hard cap on queries allowed into the brute-force fallback: beyond this
 # the `remaining x points` cross join is a scale cliff, not a remainder.
@@ -112,30 +112,6 @@ def query_bound_chord2(
 _PAIRS_PER_CHUNK = 1 << 20
 
 
-def _block_table(cells: np.ndarray, level: int):
-    """Sorted block-cell -> query-index CSR ``(keys, offs, qi)``: the
-    queries whose 3x3 block at ``level`` (the block _neighbor_block_udf
-    builds) holds block cell ``keys[j]`` are ``qi[offs[j]:offs[j+1]]``.
-    ``cells`` are the queries' uint64 leaf ids."""
-    own = cellid.parent(cells, level)
-    idx, nbrs = cellid.append_all_neighbors(own, level)
-    blk = np.concatenate([own, nbrs])
-    qi = np.concatenate([np.arange(len(cells), dtype=np.int64), idx])
-    order = np.lexsort((qi, blk))
-    blk, qi = blk[order], qi[order]
-    new = np.r_[True, (blk[1:] != blk[:-1]) | (qi[1:] != qi[:-1])]
-    blk, qi = blk[new], qi[new]
-    keys, starts = np.unique(blk, return_index=True)
-    return keys, np.append(starts, len(blk)), qi
-
-
-def _every_point_table(n: int):
-    """Block table at level 0 whose six faces hold every one of ``n``
-    queries: the scan then sees every row as a candidate."""
-    qi = np.tile(np.arange(n, dtype=np.int64), 6)
-    return cellid.from_face(np.arange(6)), np.arange(7, dtype=np.int64) * n, qi
-
-
 # Block levels a scan at level L tries in each batch, finest first, as
 # offsets above L.  A query settles at the first rung where the batch
 # holds k of its rows nearer than anything outside that rung's block, so
@@ -152,20 +128,23 @@ _LADDER = (9, 6, 3, 0)
 
 
 def _ladder(Q: np.ndarray, cells: np.ndarray, level: int):
-    """A scan's rungs, finest first: ``(level, keys, offs, qi, bound)``
-    for level+9, +6, +3 and ``level`` (capped at 30, each once), with the
-    rung's block table (``_block_table``) and each query's
-    ``query_bound_chord2`` at it.  The last rung settles every query
-    still open and carries no bound; level 0 is the one rung that meets
-    every row."""
+    """A scan's rungs, finest first: ``(table, bound)`` for level+9, +6,
+    +3 and ``level`` (capped at 30, each once): the leaf-interval table of
+    the queries' 3x3 blocks at the rung (as _neighbor_block_udf builds
+    them), owned by query index, and each query's ``query_bound_chord2``
+    there.  The last rung settles every query still open and carries no
+    bound; level 0 is the one rung that meets every row."""
+    n = len(Q)
     if level == 0:
-        return [(0, *_every_point_table(len(Q)), None)]
-    levels = sorted({min(30, level + s) for s in _LADDER}, reverse=True)
-    return [
-        (lv, *_block_table(cells, lv),
-         None if lv == level else query_bound_chord2(Q, cells, lv))
-        for lv in levels
-    ]
+        faces = cellid.from_face(np.arange(6))
+        return [(leafintervals.build(np.repeat(faces, n), np.tile(np.arange(n), 6)), None)]
+    rungs = []
+    for lv in sorted({min(30, level + s) for s in _LADDER}, reverse=True):
+        own = cellid.parent(cells, lv)
+        idx, nbrs = cellid.append_all_neighbors(own, lv)
+        table = leafintervals.build(np.r_[own, nbrs], np.r_[np.arange(n), idx])
+        rungs.append((table, None if lv == level else query_bound_chord2(Q, cells, lv)))
+    return rungs
 
 
 def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
@@ -187,20 +166,19 @@ def _topk(q: np.ndarray, p: np.ndarray, d: np.ndarray, k: int):
 _NONE = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64))
 
 
-def _pairs_topk(hit, lo, cnt, qi, ids, Q, X, chord2, k):
+def _pairs_topk(hit, iv, table, ids, Q, X, chord2, k):
     """Top-k ``(q, id, d, rank)`` over the distinct (query, row) pairs
-    where row ``hit[j]`` meets the queries ``qi[lo[j]:lo[j] + cnt[j]]``,
-    expanded and scored at most ``_PAIRS_PER_CHUNK`` pairs at a time."""
+    where row ``hit[j]`` meets the queries owning interval ``iv[j]`` of
+    the block ``table``, expanded and scored at most ``_PAIRS_PER_CHUNK``
+    pairs at a time."""
     out = _NONE
+    cnt = leafintervals.owner_counts(table, iv)
     cum = np.cumsum(cnt)
     s = 0
     while s < len(hit):
         budget = cum[s] - cnt[s] + _PAIRS_PER_CHUNK
         e = max(int(np.searchsorted(cum, budget, "right")), s + 1)
-        c = cnt[s:e]
-        ri = np.repeat(hit[s:e], c)
-        off = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
-        q = qi[np.repeat(lo[s:e], c) + off]
+        ri, q = leafintervals.expand(table, hit[s:e], iv[s:e])
         # a row meets a query once per block cell of the query's that it
         # touches (an edge's covering cell can hold all nine): score each
         # pair once.  The ids arrive in sorted runs, so timsort is cheap.
@@ -218,33 +196,10 @@ def _pairs_topk(hit, lo, cnt, qi, ids, Q, X, chord2, k):
     return out
 
 
-def _open_pairs(hit, pos, offs, qi, open_):
-    """``(hit, lo, cnt, qi)`` for ``_pairs_topk``: the rows ``hit`` that
-    meet block positions ``pos`` of a block table's CSR ``(offs, qi)``,
-    restricted to the ``open_`` queries by masking ``qi``."""
-    if not open_.all():
-        m = open_[qi]
-        offs = np.r_[0, np.cumsum(m)][offs]
-        qi = qi[m]
-    lo = offs[pos]
-    cnt = offs[pos + 1] - lo
-    nz = cnt > 0
-    return hit[nz], lo[nz], cnt[nz], qi
-
-
 def _point_rows(pdf: pd.DataFrame):
     """A points batch's leaf cells and coordinates."""
     leaf = cellid.from_biased(pdf["p_cell"].to_numpy(np.int64))
     return leaf, pdf[["px", "py", "pz"]].to_numpy(np.float64)
-
-
-def _point_lookup(leaf: np.ndarray, keys: np.ndarray, level: int):
-    """``(row, block position)`` of each point whose level-``level``
-    parent is among the block ``keys``."""
-    par = cellid.parent(leaf, level)
-    pos = np.minimum(np.searchsorted(keys, par), len(keys) - 1)
-    hit = np.nonzero(keys[pos] == par)[0]
-    return hit, pos[hit]
 
 
 def _point_chord2(Q: np.ndarray, P: np.ndarray) -> np.ndarray:
@@ -257,19 +212,18 @@ def _point_chord2(Q: np.ndarray, P: np.ndarray) -> np.ndarray:
 
 # The two row kinds of the ring expansion, as ``(rows, lookup, chord2)``:
 # ``rows(pdf)`` derives a batch's lookup data once, with its coordinate
-# matrix; ``lookup(data, keys, level)`` returns the batch's distinct
-# (row, block position) pairs against the sorted block cells ``keys``;
-# ``chord2(Q, X)`` scores query points against those coordinates
-# row-wise.
-POINTS = (_point_rows, _point_lookup, _point_chord2)
+# matrix; ``lookup(table, data)`` returns the batch's distinct
+# (row, interval) pairs in a rung's leaf-interval table; ``chord2(Q, X)``
+# scores query points against those coordinates row-wise.
+POINTS = (_point_rows, leafintervals.stab, _point_chord2)
 
 
 def _scan(rows: DataFrame, kind, Q: np.ndarray, cells: np.ndarray, level: int, k: int):
     """One mapInPandas scan of ``rows`` (id column first) for the queries
     at ``Q`` (leaf ``cells``) and their 3x3 blocks at ``level``.  Each
     batch climbs the ``_ladder`` fine to coarse: the ``kind``'s lookup
-    maps the batch to its (row, block) pairs at a rung, every pair meets
-    the rung's still-open queries listed for the block, scored by the
+    maps the batch to its (row, interval) pairs in a rung's table, every
+    pair meets the interval's still-open owner queries, scored by the
     kind's chord², and a query settles once it has k rows there nearer
     than its bound.  A finer block lies inside the coarse one and every
     row outside it is beyond that bound, so each batch's top-k is the
@@ -287,15 +241,18 @@ def _scan(rows: DataFrame, kind, Q: np.ndarray, cells: np.ndarray, level: int, k
                 continue
             data, X = batch_rows(pdf)
             ids = pdf[rid].to_numpy(np.int64)
-            *fine, (lv, keys, offs, qi, _) = ladder
-            coarse = (*lookup(data, keys, lv), offs, qi)
+            *fine, (coarse, _) = ladder
+            coarse_hits = lookup(coarse, data)
             found = [acc]
             open_ = np.ones(len(Q), bool)
-            for lv, keys, offs, qi, bound in fine:
-                hit, lo, cnt, qi = _open_pairs(*lookup(data, keys, lv), offs, qi, open_)
-                if 2 * cnt.sum() > _open_pairs(*coarse, open_)[2].sum():
+            for table, bound in fine:
+                hit, iv = lookup(table, data)
+                table = leafintervals.restrict(table, open_)
+                n_fine = leafintervals.owner_counts(table, iv).sum()
+                open_coarse = leafintervals.restrict(coarse, open_)
+                if 2 * n_fine > leafintervals.owner_counts(open_coarse, coarse_hits[1]).sum():
                     break  # and so does every coarser rung
-                q, p, d, rank = _pairs_topk(hit, lo, cnt, qi, ids, Q, X, chord2, k)
+                q, p, d, rank = _pairs_topk(hit, iv, table, ids, Q, X, chord2, k)
                 kth = rank == k - 1
                 settled = np.zeros(len(Q), bool)
                 settled[q[kth][d[kth] < bound[q[kth]]]] = True
@@ -303,8 +260,8 @@ def _scan(rows: DataFrame, kind, Q: np.ndarray, cells: np.ndarray, level: int, k
                 found.append((q[keep], p[keep], d[keep]))
                 open_ &= ~settled
             if open_.any():
-                pairs = _open_pairs(*coarse, open_)
-                found.append(_pairs_topk(*pairs, ids, Q, X, chord2, k)[:3])
+                coarse = leafintervals.restrict(coarse, open_)
+                found.append(_pairs_topk(*coarse_hits, coarse, ids, Q, X, chord2, k)[:3])
             acc = _topk(*(np.concatenate(c) for c in zip(*found)), k)[:3]
         yield pd.DataFrame({"q": acc[0], "p": acc[1], "d": acc[2]})
 

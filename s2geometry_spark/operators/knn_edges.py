@@ -10,10 +10,10 @@ bound), with only the row side swapped from points to EDGES:
   * an edge meets a block cell when one of its cap-bound covering cells
     (edge_join._edge_coverings_flat) intersects it.  Cells intersect iff
     one contains the other, i.e. iff their leaf ranges overlap, so each
-    covering cell is looked up by range against the level's sorted,
-    disjoint block cells — one test for a covering cell inside a block
-    cell and for one containing several.  A batch derives its coverings
-    once; each block level of the scan's ladder only runs the lookup;
+    covering cell is an ``overlap`` lookup in the level's leaf-interval
+    table of blocks — one test for a covering cell inside a block cell
+    and for one containing several.  A batch derives its coverings once;
+    each block level of the scan's ladder only runs the lookup;
   * candidates are scored with the pinned point-to-arc kernel
     (measures.point_edge_chord2), bit-exact with the DuckDB oracle;
   * a query is CERTIFIED when its k-th distance beats the admissible
@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..kernels import cellid, measures
+from ..kernels import cellid, leafintervals, measures
 from .edge_join import _edge_coverings_flat
 from .knn import _ring_join
 
@@ -83,28 +83,23 @@ def _edge_rows(pdf: pd.DataFrame):
     return (owner[order], cmin[order], cellid.range_max(cell)[order]), X
 
 
-def _edge_lookup(cover, keys: np.ndarray, level: int):
-    """``(row, block position)``: the distinct (edge, block cell) pairs
-    whose cells overlap in leaf range, one covering cell at a time
-    against the sorted block ``keys``, in ascending (edge, block) order."""
+def _edge_overlap(table, cover):
+    """``(row, interval)``: the distinct (edge, interval) pairs of a block
+    ``table`` whose leaf ranges overlap one of the edge's covering cells,
+    in ascending (edge, interval) order."""
     owner, cmin, cmax = cover
-    lo = np.searchsorted(cellid.range_max(keys), cmin, "left")
-    hi = np.searchsorted(cellid.range_min(keys), cmax, "right")
-    cnt = hi - lo
-    off = np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    pair = np.repeat(owner, cnt) * len(keys) + np.repeat(lo, cnt) + off
-    pair = np.sort(pair, kind="stable")  # timsort: linear on sorted runs
+    row, iv = leafintervals.overlap(table, cmin, cmax)
+    pair = np.sort(owner[row] * len(table[0]) + iv, kind="stable")  # timsort: linear on sorted runs
     new = np.ones(len(pair), bool)
     new[1:] = pair[1:] != pair[:-1]
-    pair = pair[new]
-    return pair // len(keys), pair % len(keys)
+    return np.divmod(pair[new], len(table[0]))
 
 
 def _edge_chord2(Q: np.ndarray, X: np.ndarray) -> np.ndarray:
     return measures.point_edge_chord2(Q, X[:, :3], X[:, 3:])
 
 
-EDGES = (_edge_rows, _edge_lookup, _edge_chord2)
+EDGES = (_edge_rows, _edge_overlap, _edge_chord2)
 
 
 def closest_edges_join(

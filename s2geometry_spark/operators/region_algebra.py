@@ -25,9 +25,9 @@ themselves, not a replay of them.
 Scale shape: the coverings arrive as a driver dict of a few dozen cells
 each, so every (pair, mode) is composed on the driver.  The point
 membership count is then ONE scan of the points' cells
-(contains_join._cell_hits against a sorted table of every composed
-covering, the S2CellIteratorJoin shape) summing hits per composite — no
-explode, no join, no shuffle, nothing cached.
+(a stab of the leaf-interval table of every composed covering,
+kernels/leafintervals, the S2CellIteratorJoin shape) summing hits per
+composite — no explode, no join, no shuffle, nothing cached.
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..kernels import cellid, cellunion
-from .contains_join import _cell_hits, _cell_table
+from ..kernels import cellid, cellunion, leafintervals
 
 MODES = ("union", "intersection", "difference")
 
@@ -68,7 +67,7 @@ def composite_region_join(
         for ra, rb in itertools.combinations(sorted(coverings), 2)
         for mode in modes
     ]
-    table = _cell_table(
+    table = leafintervals.of_coverings(
         [
             _compose(
                 np.asarray(coverings[ra], np.uint64),
@@ -83,7 +82,8 @@ def composite_region_join(
         n = np.zeros(len(keys), np.int64)
         for pdf in batches:
             leaf = cellid.from_biased(pdf[cell].to_numpy(np.int64))
-            n += np.bincount(_cell_hits(leaf, table)[1], minlength=len(keys))
+            rg = leafintervals.expand(table, *leafintervals.stab(table, leaf))[1]
+            n += np.bincount(rg, minlength=len(keys))
         yield pd.DataFrame({"g": np.arange(len(keys)), "n": n})
 
     part = points.select(cell).mapInPandas(scan, "g long, n long").toPandas()

@@ -7,6 +7,7 @@ than min_level) and tile_rollup as one aggregation."""
 import re
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,10 +37,9 @@ def _pip_pairs(pts, keys, regions):
     return out
 
 
-def _covering_pairs(pts, keys, coverings):
+def _covering_pairs(leaf, keys, coverings):
     """Brute-force (key, region id) pairs whose leaf cell lies in a cell
     of the region's covering."""
-    leaf = cellid.from_xyz(pts[:, 0], pts[:, 1], pts[:, 2])
     out = set()
     for rid, cov in coverings.items():
         hit = np.zeros(len(leaf), bool)
@@ -111,26 +111,50 @@ class TestContainsJoinScan:
             "struct<pid:bigint,x:double,y:double,z:double,poly_id:string>"
         )
         got = {(r.pid, r.poly_id) for r in cand.collect()}
-        assert got == _covering_pairs(pts, keys, index.coverings)
+        assert got == _covering_pairs(cellid.from_xyz(*pts.T), keys, index.coverings)
         assert _pip_pairs(pts, keys, POLYS) < got
 
     def test_cell_union_join_matches_cell_containment(self, spark):
-        df, pts, keys = _points_df(spark, 3000)
+        _, pts, keys = _points_df(spark, 3000)
         unions = dict(RegionIndex(POLYS).coverings)
         # unsorted, not normalized (the first points' cells at level 12 and
         # their level-9 ancestors), and sharing cells with another union
-        leaf = cellid.from_xyz(pts[:40, 0], pts[:40, 1], pts[:40, 2])
+        leaf = cellid.from_xyz(*pts.T)
         unions["nested"] = np.concatenate(
-            [cellid.parent(leaf, 12), unions["sf"], cellid.parent(leaf, 9)]
+            [cellid.parent(leaf[:40], 12), unions["sf"], cellid.parent(leaf[:40], 9)]
+        )
+        # the last leaf of face 5, the largest cell id, and its ancestor
+        last = cellid.range_max(cellid.from_face(np.array([5])))
+        unions["last"] = np.concatenate([cellid.parent(last, 20), last])
+        # extra rows: each union cell's first and last leaf, the leaves just
+        # outside them (leaf ids step by 2) and face 5's last leaf
+        cov = np.concatenate(list(unions.values()))
+        two = np.uint64(2)
+        bounds = np.unique(np.concatenate([
+            cellid.range_min(cov), cellid.range_max(cov),
+            cellid.range_min(cov) - two, cellid.range_max(cov) + two,
+        ]))
+        bounds = bounds[cellid.is_valid(bounds)]
+        leaf = np.concatenate([leaf, bounds])
+        keys = np.concatenate([keys, 10**9 + np.arange(len(bounds))])
+        df = spark.createDataFrame(
+            pd.DataFrame({"pid": keys, "cell": cellid.to_biased(leaf)})
         )
         out = cell_union_contains_join(spark, df, unions)
         assert out.schema.simpleString() == "struct<pid:bigint,region_id:string>"
         assert not [n for n in _plan_nodes(out) if "Exchange" in n]
         got = [tuple(r) for r in out.collect()]
         assert len(got) == len(set(got))
-        want = _covering_pairs(pts, keys, unions)
+        want = _covering_pairs(leaf, keys, unions)
         assert set(got) == want
         assert {k for k, r in want if r == "nested"} >= set(keys[:40].tolist())
+        edge_in = {k for k, _ in want if k >= 10**9}
+        assert 0 < len(edge_in) < len(bounds)
+        assert (int(keys[-1]), "last") in want  # face 5's last leaf
+        # an empty table meets no row
+        empty = {"none": np.empty(0, np.uint64)}
+        got = {tuple(r) for r in cell_union_contains_join(spark, df, empty).collect()}
+        assert got == _covering_pairs(leaf, keys, empty) == set()
 
     @pytest.mark.parametrize("level", [2, 3])
     def test_precomputed_covering_coarser_than_min_level(self, spark, level):

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from s2geometry_spark.kernels import cellid, geotag, predicates
+from s2geometry_spark.kernels import cellid, geotag, leafintervals, predicates
 from s2geometry_spark.kernels.regions import Cap, Loop
 from s2geometry_spark.operators.contains_join import (
     RegionIndex,
@@ -315,9 +315,9 @@ def _block_trap(level, n=8, seed=3):
     trap = np.concatenate([inside, outside[:, None, :]], axis=1)
     # the fixture's premise: the four are in the block, the fifth is not
     # and is nearer, and the k-th of the four is beyond the bound
-    keys = knn._block_table(cellid.from_xyz(*c.T), level)[0]
-    par = cellid.parent(cellid.from_xyz(*trap.reshape(-1, 3).T), level)
-    assert (np.isin(par, keys).reshape(n, 5) == [True] * 4 + [False]).all()
+    blocks = knn._ladder(c, cellid.from_xyz(*c.T), level)[-1][0]
+    row, _ = leafintervals.stab(blocks, cellid.from_xyz(*trap.reshape(-1, 3).T))
+    assert (np.isin(np.arange(5 * n), row).reshape(n, 5) == [True] * 4 + [False]).all()
     d = ((trap - c[:, None, :]) ** 2).sum(axis=2)
     assert (d[:, 4] < d[:, :4].max(axis=1)).all()
     bound = knn.query_bound_chord2(c, cellid.from_xyz(*c.T), level)
@@ -326,7 +326,7 @@ def _block_trap(level, n=8, seed=3):
     t -= (t * c[:, None, :]).sum(axis=2, keepdims=True) * c[:, None, :]
     r = rng.uniform(0.01, 0.03, (n, 40, 1))
     halo = _unit(c[:, None, :] + r * _unit(t)).reshape(-1, 3)
-    assert not np.isin(cellid.parent(cellid.from_xyz(*halo.T), level), keys).any()
+    assert len(leafintervals.stab(blocks, cellid.from_xyz(*halo.T))[0]) == 0
     return c, trap, halo
 
 

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from s2geometry_spark.kernels import cellid, measures
+from s2geometry_spark.kernels import cellid, leafintervals, measures
 from s2geometry_spark.operators.knn_edges import (
     closest_edges_join,
     furthest_edges_join,
@@ -235,12 +235,20 @@ def test_long_edges_cover_coarser_than_the_level(spark):
     level: such a cell contains block cells rather than lying in one."""
     from s2geometry_spark.operators.edge_join import _edge_coverings_flat
 
+    from s2geometry_spark.operators import knn
+
     rng = np.random.RandomState(5)
     A = _unit(rng.randn(60, 3))
     B = _unit(A + 0.5 * _unit(rng.randn(60, 3)))
     _, cells = _edge_coverings_flat(A, B)
     assert cellid.level(cells).max() < 6
-    queries = _queries_df(spark, _unit(rng.randn(40, 3)))
+    Q = _unit(rng.randn(40, 3))
+    # a covering cell's leaf range meets several of the level's block
+    # intervals
+    blocks = knn._ladder(Q, cellid.from_xyz(*Q.T), 6)[-1][0]
+    row, _ = leafintervals.overlap(blocks, cellid.range_min(cells), cellid.range_max(cells))
+    assert np.bincount(row).max() > 1
+    queries = _queries_df(spark, Q)
     _assert_matches_brute(
         spark, _edges_df(spark, A, B), queries, 2, start_level=6, num_stages=2
     )
@@ -391,9 +399,12 @@ def test_fine_edges_with_a_nearer_edge_outside_do_not_settle(spark):
     # the outside edges' coverings stay outside the blocks
     _, E, _ = _short_edges(spark, P, 1e-9)
     owner, cells = _edge_coverings_flat(E[:, :3], E[:, 3:])
-    keys = knn._block_table(cellid.from_xyz(*qts.T), 13)[0]
-    lo = np.searchsorted(cellid.range_max(keys), cellid.range_min(cells), "left")
-    hi = np.searchsorted(cellid.range_min(keys), cellid.range_max(cells), "right")
-    assert (hi == lo)[np.isin(owner, np.arange(4, 5 * len(qts), 5))].all()
+    blocks = knn._ladder(qts, cellid.from_xyz(*qts.T), 13)[-1][0]
+    row, _ = leafintervals.overlap(blocks, cellid.range_min(cells), cellid.range_max(cells))
+    assert not np.isin(owner[row], np.arange(4, 5 * len(qts), 5)).any()
+    # each covering cell of the inside edges meets one block interval
+    inner = cells[(owner < 5 * len(qts)) & (owner % 5 != 4)]
+    row, _ = leafintervals.overlap(blocks, cellid.range_min(inner), cellid.range_max(inner))
+    assert np.array_equal(row, np.arange(len(inner)))
     assert 5 * len(qts) <= len(P) // spark.sparkContext.defaultParallelism
     _assert_matches_reference(spark, P, qts, 4, length=1e-9)

@@ -128,7 +128,12 @@ class TestLoopContainment:
 
     def test_contains_matches_crossing_sign_regression(self):
         # s2loop_test.cc:600-650: loop from 4 child-cell centers of the
-        # cell containing (1,1,1) at level 21; a grandchild vertex is inside
+        # cell containing (1,1,1) at level 21; a point next to vertex 0,
+        # toward the grandchild's center, is inside.  The reference uses
+        # the grandchild's vertex 0, which differs from vertex 0 only by
+        # rounding (on some hosts not at all); here it is vertex 0 with z
+        # one ulp up, and its neighbour with z one ulp down is outside:
+        # Contains agrees with the crossing parity on both sides.
         p = np.array([1.0, 1.0, 1.0])
         leaf = cellid.from_xyz(p[0:1], p[1:2], p[2:3])
         cell_id = cellid.parent(leaf, 21)
@@ -142,15 +147,20 @@ class TestLoopContainment:
         grandchild = Cell(
             int(cellid.child(cellid.child(cell_id, np.array([0])), np.array([2]))[0])
         )
-        a0 = grandchild.get_vertex(0)
+        assert grandchild.get_center()[2] > verts[0][2]
+        a0, b0 = verts[0].copy(), verts[0].copy()
+        a0[2] = np.nextafter(a0[2], np.inf)
+        b0[2] = np.nextafter(b0[2], -np.inf)
         assert tuple(a0) != tuple(verts[0])
         o = predicates.ORIGIN
-        signs = [
-            predicates.crossing_sign(a0, o, verts[i], verts[(i + 1) % 4])
-            for i in range(4)
-        ]
-        assert signs == [-1, 1, -1, -1]
+
+        def signs(x):
+            return [predicates.crossing_sign(x, o, verts[i], verts[(i + 1) % 4]) for i in range(4)]
+
+        assert signs(a0) == [-1, 1, -1, -1]
         assert loop.contains_point(a0)
+        assert signs(b0) == [1, 1, -1, -1]
+        assert not loop.contains_point(b0)
 
 
 class TestCapRegions:

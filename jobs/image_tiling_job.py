@@ -4,8 +4,13 @@ checkpoint-resumable spark-submit job.
 
 Launch (cluster):
     zip -r s2geometry_spark.zip s2geometry_spark
-    spark-submit --py-files s2geometry_spark.zip jobs/image_tiling_job.py \
-        --n-images 1000000 --out /data/runs/tiles1 --buckets 64
+    spark-submit --py-files s2geometry_spark.zip \
+        --driver-java-options "-XX:TieredStopAtLevel=1" \
+        jobs/image_tiling_job.py --n-images 1000000 --out /data/runs/tiles1 --buckets 64
+
+The driver JVM is running before the job's code, so the C1-only option
+that get_spark sets for a local session has to come from spark-submit;
+cluster executors keep their own JVM defaults.
 
 Launch (sandbox smoke):
     python jobs/image_tiling_job.py --n-images 2000 --out /tmp/tilerun

@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Options of the driver JVM, which in local[N] is the executor too
+# (get_spark says why C1 only).
+DRIVER_JAVA_OPTIONS = "-Djava.net.preferIPv4Stack=true -XX:TieredStopAtLevel=1"
+
 
 def half_available_mem(meminfo: str) -> str:
     """Half of ``MemAvailable`` in a ``/proc/meminfo`` text, as a JVM
@@ -37,7 +41,15 @@ def get_spark(
     """Local session.  Unset core counts come from ``SPARK_GRAFT_CPUS``,
     else from the cores this process may run on; shuffle partitions
     default to two per core.  The driver heap is ``SPARK_DRIVER_MEM``,
-    else half the memory available when the session starts."""
+    else half the memory available when the session starts.
+
+    The driver JVM runs ``DRIVER_JAVA_OPTIONS``, so it compiles with C1
+    only: the engine's local runs are seconds of short stages, too short
+    for C2's compile time (with C2, the JVM's largest CPU class) to pay
+    back.  The options reach only a JVM this call starts.  Under
+    ``spark-submit`` in client mode the driver JVM is already running and
+    ignores them (pass ``--driver-java-options`` instead), and executors
+    on a cluster keep their own JVM defaults."""
     cpus = cpus or int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     )
@@ -62,6 +74,6 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     return builder.getOrCreate()

@@ -25,7 +25,8 @@ CPU lands in ``driver``).  A worker that was alive at the start of a
 pass and was reaped during it is counted whole in its parent's
 ``cutime``, so ``python`` may run high by the part of its life before
 the pass.  The last line is JSON: the median of each class over the
-timed passes.
+timed passes, and the JVM's ``-XX:`` arguments (``jvm_xx``), which say
+what compiler configuration the split measured.
 """
 
 from __future__ import annotations
@@ -146,6 +147,12 @@ def split(before: dict, polled: dict, after: dict) -> dict[str, float]:
     return {cls: ticks / TICK for cls, ticks in cpu.items()}
 
 
+def jvm_xx(spark) -> list[str]:
+    """The ``-XX:`` input arguments of the session's driver JVM."""
+    runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    return [a for a in runtime.getInputArguments() if a.startswith("-XX:")]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
@@ -198,7 +205,7 @@ def main() -> int:
                   + " ".join(f"{cpu[c]:9.2f}" for c in CLASSES), flush=True)
         medians = {c: round(statistics.median(p[c] for p in timed), 3) for c in CLASSES}
         print(json.dumps({"workload": args.workload, "seed": args.seed, "poll_ms": POLL_S * 1000,
-                          "correct": wrong == 0, "cpu_s": medians}))
+                          "correct": wrong == 0, "cpu_s": medians, "jvm_xx": jvm_xx(spark)}))
         return 0 if wrong == 0 else 1
     finally:
         sampler.stop()

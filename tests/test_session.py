@@ -1,9 +1,9 @@
-"""get_spark's default driver heap: half of MemAvailable, in MB (parsed
-without starting Spark)."""
+"""get_spark's fixed driver JVM options, and its default driver heap:
+half of MemAvailable, in MB (parsed without starting Spark)."""
 
 import pytest
 
-from s2geometry_spark.sources.session import half_available_mem
+from s2geometry_spark.sources.session import DRIVER_JAVA_OPTIONS, half_available_mem
 
 MEMINFO = """MemTotal:       16384000 kB
 MemFree:         1234567 kB
@@ -21,3 +21,16 @@ def test_half_of_mem_available_in_mb():
 def test_missing_mem_available_is_an_error():
     with pytest.raises(ValueError):
         half_available_mem("MemTotal:       16384000 kB\n")
+
+
+def test_driver_java_options_run_c1_only():
+    assert DRIVER_JAVA_OPTIONS.split() == [
+        "-Djava.net.preferIPv4Stack=true",
+        "-XX:TieredStopAtLevel=1",
+    ]
+
+
+def test_driver_jvm_runs_the_fixed_options(spark):
+    runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = set(runtime.getInputArguments())
+    assert {"-XX:TieredStopAtLevel=1", "-Djava.net.preferIPv4Stack=true"} <= args

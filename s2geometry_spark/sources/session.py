@@ -44,9 +44,17 @@ def get_spark(
     else half the memory available when the session starts.
 
     The driver JVM runs ``DRIVER_JAVA_OPTIONS``, so it compiles with C1
-    only: the engine's local runs are seconds of short stages, too short
-    for C2's compile time (with C2, the JVM's largest CPU class) to pay
-    back.  The options reach only a JVM this call starts.  Under
+    only.  The gain depends on a session doing only seconds of warm work
+    per query, in short stages, too little for C2's compile time to pay
+    back: with C2, compiling was the largest CPU class of a benchmark
+    pass, and C1 cuts a pass's CPU by 18-29%.  A long session of varied
+    Spark work pays instead: the 20-minute test suite, one session, runs
+    15-19% longer under C1.  A long run of one job, whose work is mostly
+    in Python workers, still gained on 4 cores: 100,000- and
+    400,000-image ``jobs/image_tiling_job.py`` runs (about 100 and 250 s)
+    took 15-21% and 7-22% less CPU.
+
+    The options reach only a JVM this call starts.  Under
     ``spark-submit`` in client mode the driver JVM is already running and
     ignores them (pass ``--driver-java-options`` instead), and executors
     on a cluster keep their own JVM defaults."""

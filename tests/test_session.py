@@ -2,8 +2,13 @@
 half of MemAvailable, in MB (parsed without starting Spark)."""
 
 import pytest
+from pyspark.sql import SparkSession
 
-from s2geometry_spark.sources.session import DRIVER_JAVA_OPTIONS, half_available_mem
+from s2geometry_spark.sources.session import (
+    DRIVER_JAVA_OPTIONS,
+    get_spark,
+    half_available_mem,
+)
 
 MEMINFO = """MemTotal:       16384000 kB
 MemFree:         1234567 kB
@@ -23,11 +28,13 @@ def test_missing_mem_available_is_an_error():
         half_available_mem("MemTotal:       16384000 kB\n")
 
 
-def test_driver_java_options_run_c1_only():
-    assert DRIVER_JAVA_OPTIONS.split() == [
-        "-Djava.net.preferIPv4Stack=true",
-        "-XX:TieredStopAtLevel=1",
-    ]
+def test_get_spark_passes_the_driver_java_options(monkeypatch):
+    # stop at the builder, before a JVM starts
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "1g")
+    builder = get_spark(cpus=1)
+    assert builder._options["spark.driver.extraJavaOptions"] == DRIVER_JAVA_OPTIONS
+    assert "-XX:TieredStopAtLevel=1" in DRIVER_JAVA_OPTIONS.split()
 
 
 def test_driver_jvm_runs_the_fixed_options(spark):

@@ -15,16 +15,9 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import IntegerType, LongType, StringType
 
-from ..kernels import cellid, coords, geotag
+from ..kernels import cellid, geotag
 
 MAX_LEVEL = 30
 
@@ -48,60 +41,15 @@ def cell_from_triplet(x0: pd.Series, y0: pd.Series, z0: pd.Series) -> pd.Series:
     return pd.Series(cellid.to_biased(cellid.from_xyz(x, y, z)))
 
 
-@pandas_udf(LongType())
-def cell_from_latlng_degrees(lat: pd.Series, lng: pd.Series) -> pd.Series:
-    ids = cellid.from_latlng_degrees(lat.to_numpy(np.float64), lng.to_numpy(np.float64))
-    return pd.Series(cellid.to_biased(ids))
-
-
 @pandas_udf(StringType())
 def cell_token(biased: pd.Series) -> pd.Series:
     ids = cellid.from_biased(biased.to_numpy(np.int64))
     return pd.Series(cellid.to_token(ids), dtype="object")
 
 
-@pandas_udf(LongType())
-def cell_from_token(tok: pd.Series) -> pd.Series:
-    return pd.Series(cellid.to_biased(cellid.from_token(tok.tolist())))
-
-
 @pandas_udf(IntegerType())
 def cell_level(biased: pd.Series) -> pd.Series:
     return pd.Series(cellid.level(cellid.from_biased(biased.to_numpy(np.int64))).astype(np.int32))
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def cell_center_xyz(biased: pd.Series) -> pd.Series:
-    x, y, z = cellid.to_point(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series([list(t) for t in zip(x, y, z)])
-
-
-@pandas_udf(DoubleType())
-def cell_center_lat(biased: pd.Series) -> pd.Series:
-    lat, _ = cellid.to_latlng(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series(np.degrees(lat))
-
-
-@pandas_udf(DoubleType())
-def cell_center_lng(biased: pd.Series) -> pd.Series:
-    _, lng = cellid.to_latlng(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series(np.degrees(lng))
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def latlng_to_xyz_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
-    d2r = np.pi / 180.0
-    x, y, z = coords.latlng_to_xyz(
-        lat_deg.to_numpy(np.float64) * d2r, lng_deg.to_numpy(np.float64) * d2r
-    )
-    return pd.Series([list(t) for t in zip(x, y, z)])
-
-
-@pandas_udf(BooleanType())
-def cell_contains(ancestor_biased: pd.Series, other_biased: pd.Series) -> pd.Series:
-    a = cellid.from_biased(ancestor_biased.to_numpy(np.int64))
-    b = cellid.from_biased(other_biased.to_numpy(np.int64))
-    return pd.Series(cellid.contains(a, b))
 
 
 # ---------- pure-SQL bit algebra on biased int64 ids (JVM codegen) ----------

@@ -23,11 +23,9 @@ _ONE = U64(1)
 _TWO = U64(2)
 WRAP_OFFSET = U64(6 << 61)  # kWrapOffset (s2cell_id.h)
 
+
 # exact powers of two up to 2^63 are representable in float64, so log2 of an
 # isolated low bit recovers countr_zero exactly (numpy 1.x lacks bitwise_count)
-_LOG2 = None
-
-
 def _countr_zero(ids: np.ndarray) -> np.ndarray:
     ids = ids.astype(np.uint64, copy=False)
     lsb_ = ids & (~ids + _ONE)

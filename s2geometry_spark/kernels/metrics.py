@@ -74,14 +74,3 @@ MAX_AREA = Metric(2, 2.635799256963161491)
 AVG_AREA = Metric(2, 4 * math.pi / 6)
 MAX_EDGE_ASPECT = 1.442615274452682920
 MAX_DIAG_ASPECT = math.sqrt(3)
-
-# S2Earth (s2earth.h:269): mean radius in meters
-EARTH_RADIUS_METERS = 6371010.0
-
-
-def meters_to_radians(m: float) -> float:
-    return m / EARTH_RADIUS_METERS
-
-
-def radians_to_meters(r: float) -> float:
-    return r * EARTH_RADIUS_METERS

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import coords
-from .regions import Loop, Polygon
+from .regions import Loop
 
 
 def parse_latlngs(text: str) -> list[tuple[float, float]]:
@@ -36,8 +36,3 @@ def make_points(text: str) -> np.ndarray:
 
 def make_loop(text: str) -> Loop:
     return Loop(make_points(text))
-
-
-def make_polygon(text: str) -> Polygon:
-    """Loops separated by ';'."""
-    return Polygon([make_loop(part) for part in text.split(";") if part.strip()])

@@ -27,10 +27,6 @@ from pyspark.sql import DataFrame
 
 from ..kernels import booleanop
 
-PAIR_SCHEMA = (
-    "pair_id long, op string, "
-    "a_loops array<array<array<double>>>, b_loops array<array<array<double>>>"
-)
 RESULT_SCHEMA = (
     "pair_id long, op string, n_loops int, area double, "
     "result_loops array<array<array<double>>>"

@@ -21,9 +21,7 @@ No explode, no broadcast join, no shuffle, and one Python crossing: the
 plan is a single stage whatever the number of regions, overlapping ones
 included.  ``cell_union_contains_join`` is the same scan without the
 refinement.  ``cap_join`` and ``rect_join`` take the scan's candidates
-(``exact=False``) and refine them with a SQL predicate instead.  Only
-``big_polygon_join``, whose regions are a table rather than a driver
-dict, keeps the term-indexer equi-join.
+(``exact=False``) and refine them with a SQL predicate instead.
 """
 
 from __future__ import annotations

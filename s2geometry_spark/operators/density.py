@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import functions as s2f
-from .tiling import tile_rollup
 
 
 def measure_density(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
@@ -34,12 +33,6 @@ def measure_density(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
     return df.groupBy(s2f.parent_expr(cell, level).alias("cell_lvl")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-
-
-def density_tree(df: DataFrame, levels, cell: str = "cell") -> DataFrame:
-    """Multi-level density tree ``(level, cell_lvl, cnt)``: the
-    multi-level tile rollup (one aggregation over every level)."""
-    return tile_rollup(df, levels, cell)
 
 
 def salt_factors(

@@ -14,8 +14,6 @@ from pyspark.sql import functions as F
 
 from .. import functions as s2f
 
-DEFAULT_TILING_LEVELS = (2, 5, 8, 12)
-
 
 # ---------- portable 64-bit string hash (Spark == DuckDB, bit-exact) ----------
 #
@@ -58,20 +56,6 @@ def with_cell_from_triplet(
     df: DataFrame, x0: str = "x0", y0: str = "y0", z0: str = "z0", out: str = "cell"
 ) -> DataFrame:
     return df.withColumn(out, s2f.cell_from_triplet(F.col(x0), F.col(y0), F.col(z0)))
-
-
-def with_cell_from_latlng(
-    df: DataFrame, lat: str = "lat", lng: str = "lng", out: str = "cell"
-) -> DataFrame:
-    return df.withColumn(out, s2f.cell_from_latlng_degrees(F.col(lat), F.col(lng)))
-
-
-def with_tiling_levels(
-    df: DataFrame, cell: str = "cell", levels=DEFAULT_TILING_LEVELS
-) -> DataFrame:
-    for lvl in levels:
-        df = df.withColumn(f"cell_l{lvl}", s2f.parent_expr(cell, lvl))
-    return df
 
 
 def triplet_exprs(key_col: str) -> list[Column]:

@@ -16,7 +16,10 @@ avoids (each observed to corrupt the measurement):
 * no .cache() of binary-heavy rows — the memory-store write path
   collapses under 32 concurrent writers (28s vs 7s for the same job);
 * the input parquet is written once in a setup phase and read by both
-  levels (page-cache warm), so the comparison is pure compute.
+  levels (page-cache warm), so the comparison is pure compute;
+* the setup runs in its own process too — ``spark.stop()`` leaves the
+  process's py4j gateway JVM running until the process exits, and in
+  the main process that idle JVM would share the host with both levels.
 
     python scripts/scaling_bench.py [--n 60000] [--lo 8] [--hi 32]
 
@@ -32,6 +35,8 @@ import subprocess
 import sys
 import tempfile
 import time
+from concurrent.futures import ProcessPoolExecutor
+from multiprocessing import get_context
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -43,7 +48,7 @@ def setup_input(path: str, n: int, px_scale: int) -> None:
     from s2geometry_spark.sources.images import images_df
     from s2geometry_spark.sources.session import get_spark
 
-    spark = get_spark("scaling-setup", cpus=32)
+    spark = get_spark("scaling-setup")
     images_df(spark, n, num_partitions=128, px_scale=px_scale).write.mode(
         "overwrite"
     ).parquet(path)
@@ -106,7 +111,8 @@ def main() -> None:
         tempfile.gettempdir(), f"scaling_images_n{args.n}_px{args.px_scale}"
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        setup_input(path, args.n, args.px_scale)
+        with ProcessPoolExecutor(1, mp_context=get_context("spawn")) as pool:
+            pool.submit(setup_input, path, args.n, args.px_scale).result()
 
     def spawn(cpus: int) -> dict:
         cmd = [

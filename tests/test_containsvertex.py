@@ -8,7 +8,6 @@ import numpy as np
 
 from s2geometry_spark.kernels.containsvertex import ContainsVertexQuery
 from s2geometry_spark.kernels.textformat import make_point
-from s2geometry_spark.kernels import wedges
 from s2geometry_spark.kernels.predicates import _ortho, ordered_ccw
 
 

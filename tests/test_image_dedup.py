@@ -184,7 +184,7 @@ class TestHammingBall:
             (r.ph_a, r.ph_b, r.hamming)
             for r in hamming_ball_hash_pairs(df, 2).collect()
         }
-        h = np.asarray(hashes, np.uint64)
+        h = np.asarray(hashes, np.int64).view(np.uint64)
         x = h[:, None] ^ h[None, :]
         d = np.zeros_like(x, dtype=np.int64)
         for s in range(0, 64, 8):

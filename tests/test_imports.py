@@ -75,6 +75,39 @@ def test_every_engine_import_resolves():
     assert not bad, "unresolved imports:\n" + "\n".join(bad)
 
 
+# Engine modules that only the tests use, as fixtures: the s2text_format
+# parser and S2Testing::Fractal.
+TEST_FIXTURES = {"s2geometry_spark.kernels.textformat", "s2geometry_spark.kernels.fractal"}
+
+
+def test_every_engine_module_is_reached():
+    """Every engine module is imported, directly or through other engine
+    modules, by an entry point: the driver module, ``bench.py``, ``jobs/``,
+    ``scripts/`` or ``perfbench/``.  A module that only its own tests
+    import is code no query, job or benchmark runs."""
+    modules = {}
+    for path in (ROOT / "s2geometry_spark").rglob("*.py"):
+        pkg = _package(path)
+        modules[pkg if path.stem == "__init__" else f"{pkg}.{path.stem}"] = path
+    todo = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    for d in ("jobs", "scripts", "perfbench"):
+        todo += sorted((ROOT / d).rglob("*.py"))
+    reached = set()
+    while todo:
+        for _, mod, names in _imports(todo.pop()):
+            parts = mod.split(".")
+            # importing a.b.c runs a and a.b too; ``from a import b`` may name module a.b
+            hits = [".".join(parts[:i]) for i in range(1, len(parts) + 1)]
+            hits += [f"{mod}.{n}" for n in names]
+            for m in hits:
+                if m in modules and m not in reached:
+                    reached.add(m)
+                    todo.append(modules[m])
+    assert TEST_FIXTURES <= modules.keys() - reached, "a fixture module is reached or gone"
+    unreached = sorted(modules.keys() - reached - TEST_FIXTURES)
+    assert not unreached, "no entry point imports:\n" + "\n".join(unreached)
+
+
 def test_unchanged_zip_is_not_reread(tmp_path, monkeypatch):
     """PySpark's worker calls ``importlib.invalidate_caches()`` before each
     task; the engine's guard keeps an unchanged zip from being re-read

@@ -21,7 +21,7 @@ def images_geo(spark):
 
 
 def test_density_tree_ancestor_property(images_geo):
-    tree = density.density_tree(images_geo, [2, 5]).collect()
+    tree = tiling.tile_rollup(images_geo, [2, 5]).collect()
     by_level = {}
     for r in tree:
         by_level.setdefault(r.level, {})[r.cell_lvl] = r.cnt
